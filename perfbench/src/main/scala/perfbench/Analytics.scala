@@ -56,26 +56,23 @@ final class Analytics(spark: SparkSession, tracer: Tracer, seed: Long, work: Str
     op("cc") {
       val comp = tracer.span("graphops.cc", "graphops")(
         GraphOps.connectedComponentsConverged(edges, maxIterations = MaxRounds))
-      tracer.span("graphops.cert", "graphops") {
-        val r = GraphOps.connectedComponentsCertificate(edges, comp)
-          .agg(count(lit(1)), sum(when(col("converged"), 0L).otherwise(1L))).head()
-        val nComp = comp.select(col("comp")).distinct().count()
-        check("cc", r.getLong(0), r.getLong(1),
-          if (nComp == g.components) Seq.empty
-          else Seq(s"cc: $nComp components, expected ${g.components}"))
-      }
+      val r = tracer.span("graphops.cert", "graphops")(
+        GraphOps.connectedComponentsCertificate(edges, comp)
+          .agg(count(lit(1)), sum(when(col("converged"), 0L).otherwise(1L))).head())
+      val nComp = tracer.span("bench.check", "bench")(comp.select(col("comp")).distinct().count())
+      check("cc", r.getLong(0), r.getLong(1),
+        if (nComp == g.components) Seq.empty
+        else Seq(s"cc: $nComp components, expected ${g.components}"))
     }
     op("kcore") {
       val core = tracer.span("graphops.kcore", "graphops")(
         GraphOps.kCoreConverged(edges, K, maxIterations = MaxRounds))
-      tracer.span("graphops.cert", "graphops") {
-        val r = GraphOps.kCoreCertificate(edges, core, K).head()
-        val survivors = core.count()
-        val bad = r.getAs[Long]("n_below_k") + r.getAs[Long]("n_deg_mismatch")
-        check("kcore", r.getAs[Long]("n_vertices"), bad,
-          if (survivors == g.coreSize) Seq.empty
-          else Seq(s"kcore: $survivors survivors, expected ${g.coreSize}"))
-      }
+      val r = tracer.span("graphops.cert", "graphops")(GraphOps.kCoreCertificate(edges, core, K).head())
+      val survivors = tracer.span("bench.check", "bench")(core.count())
+      val bad = r.getAs[Long]("n_below_k") + r.getAs[Long]("n_deg_mismatch")
+      check("kcore", r.getAs[Long]("n_vertices"), bad,
+        if (survivors == g.coreSize) Seq.empty
+        else Seq(s"kcore: $survivors survivors, expected ${g.coreSize}"))
     }
     CacheScope.global.release()
     Pass((System.nanoTime() - t0) / 1e9, errors.isEmpty, errors.headOption)
@@ -88,6 +85,9 @@ final class Analytics(spark: SparkSession, tracer: Tracer, seed: Long, work: Str
     ).flatten ++ extra).headOption
 
   def finalCheck(): Boolean = true
+  // the second pass still runs ~10 % faster than the first (JIT), so
+  // every run holds both
+  override def minPasses: Int = 2
 
   def report(windowS: Double): Seq[Main.Metric] = Seq(
     Main.Metric("input.vertices", g.vertices.toDouble, "count"),

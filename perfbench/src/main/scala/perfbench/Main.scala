@@ -76,11 +76,13 @@ object Main {
     val windowStart = System.nanoTime()
     val deadline = windowStart + args.seconds * 1000000000L
     // a traced run needs a traced and an untraced pass at least
-    val minPasses = if (args.trace) 2 else 1
+    val minPasses = math.max(w.minPasses, if (args.trace) 2 else 1)
     while (System.nanoTime() < deadline || passes.size < minPasses) {
       // in a traced run every other pass runs with tracing off, so the
-      // traced − untraced difference is measured inside one process
-      val traceThis = args.trace && passes.size % 2 == 0
+      // traced − untraced difference is measured inside one process;
+      // the seed's parity picks whether the first pass is traced, so
+      // across runs the traced pass is not always the one after warm-up
+      val traceThis = args.trace && (passes.size + args.seed) % 2 == 0
       val p = tracer.phase(s"pass${passes.size}", record = traceThis)(w.pass())
       passes += p.copy(traced = traceThis)
     }
@@ -190,6 +192,10 @@ abstract class Workload {
   def warm(): Pass = pass()
   /** End-of-run output check over the state the loop left. */
   def finalCheck(): Boolean
+  /** Passes a run holds at least. A pass count that depends on how
+    * fast the host was would make a run's median a median of one pass
+    * on a slow host and of two on a fast one. */
+  def minPasses: Int = 1
 
   var opsAttempted, opsFailed, opsCompleted = 0L
   def resetCounters(): Unit = { opsAttempted = 0; opsFailed = 0; opsCompleted = 0 }

@@ -196,7 +196,7 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
     val foldStmts = stmts.filter(s => jobsIn(s).exists(_.site.contains("GraphStore.compact")))
     def perOp(op: String)(f: Span => Double) = med(stmts.filter(_.name == op).map(f))
     def engine(s: Span) = engineMs(s)
-    val ops = Seq("merge_node", "merge_edge", "read", "unwind")
+    val ops = Seq("merge_node", "set", "merge_edge", "read", "unwind")
 
     val traced = passes.filter(_.traced).map(_.seconds)
     val untraced = passes.filterNot(_.traced).map(_.seconds)
@@ -246,10 +246,10 @@ final class Tracer(spark: SparkSession, val enabled: Boolean) {
       Metric("host.canary_s", canary, "s"),
       Metric("trace.overhead_setup_pct", setupOverhead, "%"),
       Metric("trace.overhead_pass_pct", passOverhead, "%"),
-      // ops per pass are fixed, so the throughput overhead is the
-      // pass overhead seen from the other side
+      // ops per pass are fixed, so the throughput lost to tracing is
+      // the pass overhead seen from the other side (positive = slower)
       Metric("trace.overhead_ops_per_s_pct",
-        if (passOverhead <= -100) 0.0 else pct(100 / (100 + passOverhead), 1.0), "%"),
+        if (passOverhead <= -100) 0.0 else (1 - 100 / (100 + passOverhead)) * 100, "%"),
       Metric("trace.overhead_heap_mb", spanHeapMb, "MB"))
   }
 
