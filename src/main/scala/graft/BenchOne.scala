@@ -9,6 +9,14 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val reps = if (args.length > 1) args(1).toInt else 2
+    // resolve the name before any session starts: an unknown one
+    // fails fast with ExplainDump's message and a non-zero exit
+    val fn = SparkEntry.benchQueries.get(name)
+      .orElse(SparkEntry.queries.get(name))
+      .getOrElse {
+        System.err.println(s"[bench-one] no such query: $name")
+        sys.exit(2)
+      }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -67,7 +75,6 @@ object BenchOne {
             }
           }
         })
-    val fn = SparkEntry.benchQueries.getOrElse(name, SparkEntry.queries(name))
     // listener events arrive on the async bus; give stragglers a beat
     // before clearing for the last rep / dumping at the end, so the
     // dump neither misses late completions nor blends reps

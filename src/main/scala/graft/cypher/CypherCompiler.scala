@@ -184,35 +184,44 @@ object CypherCompiler {
         s"expected a literal or $$param, got $other")
     }
 
-    /** Write-path scan pruning (round 14, set by [[CypherWrite]]):
-      * `(labelKeys, prunedVertices)` — when a MATCH pattern names a
-      * label with declared uniqueness keys AND binds every key prop
-      * to a literal/param, its identity is store-computable
-      * (`label:key1:key2`, the same contract the MERGE match probe
-      * relies on), so the scan reads only the id's bucket. The usual
-      * label/prop filters still apply on top, so the result set is
-      * identical; patterns outside the contract scan as before.
-      * Contract fine print: key props must be bound with the same
-      * type discipline the writes used — a mixed-type key binding
-      * (`sid: 7` written, `sid: 7.0` matched) hashes to a different
-      * id and already breaks MERGE identity itself, so it is outside
-      * the store's constraint contract, not a pruning regression. */
-    var writeScanPrune
-        : Option[(Map[String, Seq[String]], DataFrame => DataFrame)] = None
+    /** The store's declared per-label uniqueness keys (set by
+      * [[CypherWrite]]; empty for reads). A node pattern that names a
+      * keyed label AND binds every key prop to a literal/param has a
+      * store-computable identity (`label:key1:key2`, the same contract
+      * the MERGE match probe relies on) — see [[keyId]]. */
+    var labelKeys: Map[String, Seq[String]] = Map.empty
+
+    /** Write-path scan pruning (round 14, bucketed stores only): the
+      * store's bucket-pruned vertex view. A key-identified pattern's
+      * scan reads only its id's bucket; the usual label/prop filters
+      * still apply on top, so the result set is identical; patterns
+      * outside the contract scan as before. Contract fine print: key
+      * props must be bound with the same type discipline the writes
+      * used — a mixed-type key binding (`sid: 7` written, `sid: 7.0`
+      * matched) hashes to a different id and already breaks MERGE
+      * identity itself, so it is outside the store's constraint
+      * contract, not a pruning regression. */
+    var prunedVertices: Option[DataFrame => DataFrame] = None
+
+    /** `label:key1:key2` of a pattern whose label has declared keys
+      * and binds every key to a literal/param; None otherwise. */
+    def keyId(np: NodePat): Option[Column] = for {
+      l <- np.label
+      ks <- labelKeys.get(l)
+      if ks.nonEmpty && ks.forall(np.props.contains)
+      idc <- scala.util.Try(concat_ws(":",
+        (lit(l) +: ks.map(k => constCol(np.props(k)).cast("string")))
+          : _*)).toOption
+    } yield idc
 
     def nodeFrame(np: NodePat): DataFrame = {
       val v = np.name
-      val source = writeScanPrune.flatMap { case (labelKeys, prunedV) =>
-        for {
-          l <- np.label
-          ks <- labelKeys.get(l)
-          if ks.nonEmpty && ks.forall(np.props.contains)
-          idc <- scala.util.Try(concat_ws(":",
-            (lit(l) +: ks.map(k => constCol(np.props(k)).cast("string")))
-              : _*)).toOption
-        } yield prunedV(
-          g.vertices.sparkSession.range(1).select(idc.as("id")))
-      }.getOrElse(g.vertices)
+      val source = (for {
+        prunedV <- prunedVertices
+        idc <- keyId(np)
+      } yield prunedV(
+        g.vertices.sparkSession.range(1).select(idc.as("id"))))
+        .getOrElse(g.vertices)
       val base = np.label.foldLeft(source)((d, l) => d.filter(col("label") === l))
       val filtered = np.props.foldLeft(base) { case (d, (k, e)) =>
         d.filter(propGet(col("props"), vertexPropsIsMap, k) === constCol(e))
@@ -295,7 +304,8 @@ object CypherCompiler {
       val (pf, bound) = compilePart(st, part)
       val partLocal = (st.edgeVars.toSet -- edgesBefore) ++
         (st.pathVars.keySet.toSet -- pathsBefore)
-      attach(st, pf, bound, part.optional, part.where, partLocal)
+      attach(st, pf, bound, part.optional, part.where, partLocal,
+        isKeyPoint(st, part))
     }
   }
 
@@ -338,7 +348,7 @@ object CypherCompiler {
         val partLocal = (st.edgeVars.toSet -- edgesBefore) ++
           (st.pathVars.keySet.toSet -- pathsBefore)
         attach(st, partFrame._1, partFrame._2, part.optional, part.where,
-          partLocal)
+          partLocal, isKeyPoint(st, part))
       }
       seg.where.foreach(e =>
         st.frame = st.frame.map(applyPredicate(st, _, e)))
@@ -1003,9 +1013,20 @@ object CypherCompiler {
     case _ => Set.empty // Lit, Param, ListLit
   }
 
+  /** A MATCH part that is one key-identified node pattern (see
+    * [[St.keyId]]): under the store's uniqueness contract it binds at
+    * most one row. */
+  private def isKeyPoint(st: St, part: MatchPart): Boolean =
+    part.paths match {
+      case Seq(p) if p.edges.isEmpty && p.pathVar.isEmpty &&
+          p.shortest.isEmpty =>
+        p.nodes.size == 1 && st.keyId(p.nodes.head).isDefined
+      case _ => false
+    }
+
   private def attach(st: St, pf: DataFrame, bound: Seq[String],
                      optional: Boolean, where: Option[Expr],
-                     partLocal: Set[String]): Unit = {
+                     partLocal: Set[String], keyPoint: Boolean): Unit = {
     st.frame match {
       case None =>
         require(!optional, "query cannot start with OPTIONAL MATCH")
@@ -1019,7 +1040,13 @@ object CypherCompiler {
           if (optional) throw new IllegalArgumentException(
             "OPTIONAL MATCH must share at least one variable with an " +
             "earlier MATCH")
-          val joined = f.crossJoin(pf)
+          // a key-identified point part binds at most one row: cross
+          // it in as a broadcast (BroadcastNestedLoopJoin). Unhinted,
+          // a checkpointed standing frame has no size estimate and the
+          // cross plans as a CartesianProduct with one task per
+          // partition PAIR — the WeatherDay edge MERGE's
+          // `MATCH (s:Station …) MATCH (wd:WeatherDay …)` prefix
+          val joined = f.crossJoin(if (keyPoint) broadcast(pf) else pf)
           st.frame =
             Some(where.fold(joined)(e => applyPredicate(st, joined, e)))
         } else {

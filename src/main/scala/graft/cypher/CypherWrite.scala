@@ -231,13 +231,20 @@ object CypherWrite {
     // `st`/`frame` are vars: a CALL { … } tail block re-binds them to
     // the block's filtered/extended scope so the shared delta builders
     // below compile its clauses against the right rows
-    var st = CypherCompiler.newState(g, params)
-    // bucket-pruned MATCH-prefix scans: a pattern on a DECLARED-KEY
-    // label that binds every key prop has a store-computable identity
-    // (the MERGE contract — id = label:keys, the same assumption the
-    // MERGE match probe itself makes), so its scan prunes to the id's
-    // bucket instead of the standing table
-    hint.foreach(h => st.writeScanPrune = Some((labelKeys, h.vertices)))
+    // every write compile state carries the store's declared keys: a
+    // MATCH pattern on a DECLARED-KEY label that binds every key prop
+    // has a store-computable identity (the MERGE contract — id =
+    // label:keys, the same assumption the MERGE match probe itself
+    // makes), so a disconnected one crosses in as a broadcast and, on
+    // a bucketed store, its scan prunes to the id's bucket instead of
+    // the standing table
+    def writeState(): CypherCompiler.St = {
+      val s = CypherCompiler.newState(g, params)
+      s.labelKeys = labelKeys
+      s.prunedVertices = hint.map(_.vertices)
+      s
+    }
+    var st = writeState()
     CypherCompiler.bindPrefix(st, g, wq.unwinds,
       liftFrameRefProps(wq.matches))
     var frame = st.frame.getOrElse(spark.range(1).toDF())
@@ -619,14 +626,13 @@ object CypherWrite {
         // (cardinality-neutral, openCypher), and body-bound variables
         // (including write-bound ids, whose exprs reference the
         // body-only element column) go out of scope
-        val stf = CypherCompiler.newState(g, params)
+        val stf = writeState()
         stf.valueCols ++= st.valueCols
         stf.mapVars ++= st.mapVars
         stf.arrayVars ++= st.arrayVars
         stf.pathVars ++= st.pathVars
         stf.nodes ++= st.nodes
         stf.edgeVars ++= st.edgeVars
-        hint.foreach(h => stf.writeScanPrune = Some((labelKeys, h.vertices)))
         stf.frame = Some(frame)
         CypherCompiler.bindPrefix(stf, g, Seq((listE, v)), Nil)
         val (savedSt, savedFrame) = (st, frame)
@@ -708,14 +714,13 @@ object CypherWrite {
     // graph_app_nutrient_content.py:158-161); write-bound variables
     // from the statement's own MERGEs join by recomputed id instead.
     wq.call.foreach { cb =>
-      val stc = CypherCompiler.newState(g, params)
+      val stc = writeState()
       stc.valueCols ++= st.valueCols
       stc.mapVars ++= st.mapVars
       stc.arrayVars ++= st.arrayVars
       stc.pathVars ++= st.pathVars
       stc.nodes ++= st.nodes
       stc.edgeVars ++= st.edgeVars
-      hint.foreach(h => stc.writeScanPrune = Some((labelKeys, h.vertices)))
       var f2 = frame
       writeBound.foreach { case (v, idc) =>
         if (!st.nodes.contains(v)) {
@@ -1115,32 +1120,53 @@ object CypherWrite {
   * serialized (single-writer, like every sink in the engine), reads
   * can run concurrently against the current snapshot.
   *
-  * Each statement stacks one (broadcast) join on the standing frames,
-  * and every 8 statements the stack is folded. Round 13 makes the
-  * fold SIZE-ADAPTIVE. Up to [[GraphStore.FullFoldBaseRows]] the fold
-  * copies the store (the round-12 full localCheckpoint) — measured
-  * cheaper than any bookkeeping while the store fits in memory. Past
-  * it, the fold maintains a delta-sized OVERLAY: `base` (the pinned
-  * initial/saved frames, NEVER re-materialized) plus materialized
-  * overlay rows + base-row masks (pre-intersected with the base at
-  * fold time, so append-mostly workloads carry NO mask stage), and
-  * the standing view is the constant-depth plan
-  * `base [▷ broadcast(mask)] ∪ overlay` — per-fold cost is a base
-  * SCAN (probe, delta-sized output), never a base WRITE. The overlay
-  * folds fully into a new base only when it outgrows
-  * [[GraphStore.OverlayFoldRows]] (or after an untracked transaction
-  * swap). Re-writing a 100 TB store every 8 statements is the one
-  * unviable design; the overlay is what keeps big-store compaction
-  * possible, and the measured in-memory crossover (see
-  * [[GraphStore.FullFoldBaseRows]]) is why small stores keep the
-  * copy.
+  * Each statement stacks one (broadcast) join + union layer on the
+  * standing frames; a FOLD truncates the stack. How often, and how,
+  * depends on the store:
+  *
+  *   - SMALL unbucketed stores (at most [[GraphStore.OverlayFoldRows]]
+  *     standing rows) fold after EVERY write, re-checkpointing only
+  *     the frame family (vertices / edges) the statement touched and
+  *     keeping the row count from the statement's stats. An unfolded
+  *     layer makes every later probe, read and fold re-run its
+  *     broadcast builds, and the layers' union partitions add up
+  *     (a disconnected MATCH prefix became a CartesianProduct over
+  *     them); on a broadcast-sized store one eager checkpoint of the
+  *     touched family costs less than what it saves (SCALE.md,
+  *     per-write fold).
+  *   - Every other store folds every 8 writes. Up to
+  *     [[GraphStore.FullFoldBaseRows]] the fold copies the store (the
+  *     round-12 full localCheckpoint) — measured cheaper than any
+  *     bookkeeping while the store fits in memory. Past it, the fold
+  *     maintains a delta-sized OVERLAY: `base` (the pinned
+  *     initial/saved frames, NEVER re-materialized) plus materialized
+  *     overlay rows + base-row masks (pre-intersected with the base at
+  *     fold time, so append-mostly workloads carry NO mask stage), and
+  *     the standing view is the constant-depth plan
+  *     `base [▷ broadcast(mask)] ∪ overlay` — per-fold cost is a base
+  *     SCAN (probe, delta-sized output), never a base WRITE. The
+  *     overlay folds fully into a new base only when it outgrows
+  *     [[GraphStore.OverlayFoldRows]] (or after an untracked
+  *     transaction swap). Re-writing a 100 TB store every 8 statements
+  *     is the one unviable design; the overlay is what keeps big-store
+  *     compaction possible. Past [[GraphStore.BucketProbeRows]] the
+  *     store is bucketed and folds window segments (see below).
+  *   - `forceOverlay` stores (specs) and the statements after an
+  *     explicit transaction's commit, up to the next full fold, keep
+  *     the 8-write cadence whatever their size.
+  *
+  * [[stats]] snapshots the standing row count, the bucket mode and
+  * the fold count and cost.
   */
 final class GraphStore(initial: PropertyGraph,
                        initialLabelKeys: Map[String, Seq[String]] = Map.empty,
                        forceOverlay: Boolean = false,
                        forceBucketed: Boolean = false,
                        // overridable so specs can drive the overlay-
-                       // OVERFLOW branch (rebucketize) on tiny fixtures
+                       // OVERFLOW branch (rebucketize) on tiny fixtures;
+                       // also the per-write fold's size gate, so a
+                       // negative budget keeps a tiny store on the
+                       // 8-write cadence
                        overlayFoldRows: Long = GraphStore.OverlayFoldRows) {
   @volatile private var g: PropertyGraph = initial
   /** Per-label uniqueness keys — the engine's spelling of the
@@ -1193,6 +1219,13 @@ final class GraphStore(initial: PropertyGraph,
     }
   }
   private var writesSinceCompact = 0
+  /** Standing rows (vertices + edges): set by every count the store
+    * makes anyway and advanced by each statement's stats in between;
+    * -1 = unknown (after an untracked transaction swap, until the
+    * next count). */
+  private var liveRows = -1L
+  private var folds = 0L
+  private var lastFoldMs = 0.0
   /** One-shot: the seed graph's id-convention audit (see
     * [[bucketize]]) — engine-minted rows always conform, so the
     * O(store) scan never repeats on later rebucketizes. */
@@ -1302,12 +1335,25 @@ final class GraphStore(initial: PropertyGraph,
     * shared by [[compact]] and the Bolt server's transaction forks. */
   private[cypher] def compacted(pg: PropertyGraph): PropertyGraph =
     withoutConstraintPropagation {
-      PropertyGraph(
-        pg.vertices.coalesce(targetParts).localCheckpoint(true),
-        pg.edges.coalesce(targetParts).localCheckpoint(true))
+      PropertyGraph(compactedFrame(pg.vertices), compactedFrame(pg.edges))
     }
 
+  private def compactedFrame(df: DataFrame): DataFrame =
+    df.coalesce(targetParts).localCheckpoint(true)
+
   def graph: PropertyGraph = g
+
+  /** A snapshot of the store's shape and fold history. `rows` is the
+    * standing vertex + edge count; when the store has not counted
+    * since an explicit transaction's commit (or was never counted —
+    * `forceOverlay` stores), the snapshot counts it once. */
+  def stats: GraphStore.StoreStats = synchronized {
+    if (liveRows < 0)
+      liveRows = withoutConstraintPropagation(
+        g.vertices.count() + g.edges.count())
+    GraphStore.StoreStats(rows = liveRows, bucketed = bktV.isDefined,
+      folds = folds, lastFoldMs = lastFoldMs)
+  }
 
   // ---- catalog procedures (round 16) ------------------------------
   // The `CALL db.*` introspection surface real Neo4j drivers, the
@@ -1463,15 +1509,21 @@ final class GraphStore(initial: PropertyGraph,
             g = a.graph
             window ::= a.touched
           }
+          if (liveRows >= 0) liveRows += GraphStore.netRows(a.stats)
           writesSinceCompact += 1
           // each statement stacks one broadcast join AND one union on
           // the standing frames; past a handful of layers the
           // ANALYSIS/codegen cost of every subsequent probe grows
           // super-linearly (measured: a 90-statement row-at-a-time
-          // replay crawled at compaction=32). Eight keeps row-at-a-
-          // time wire clients linear; batched UNWIND statements (the
-          // scale path) rarely stack past two or three.
-          if (writesSinceCompact >= 8) compact()
+          // replay crawled at compaction=32). Small unbucketed stores
+          // fold after EVERY write ([[foldsEveryWrite]]): even one
+          // unfolded layer re-runs its broadcast builds in every later
+          // probe, read and fold, and a re-checkpoint of the touched
+          // family is cheap at that size. Every other store folds
+          // every 8 writes — that keeps row-at-a-time wire clients
+          // linear; batched UNWIND statements (the scale path) rarely
+          // stack past two or three.
+          if (foldsEveryWrite || writesSinceCompact >= 8) compact()
           (a.stats, a.rows)
         case Right(_) => throw new IllegalArgumentException(
           "read query passed to execute(); use cypher()")
@@ -1513,6 +1565,7 @@ final class GraphStore(initial: PropertyGraph,
     baseValid = false
     window = Nil
     writesSinceCompact = 0
+    liveRows = -1L
     // the fork's statements were neither overlay- nor segment-tracked:
     // drop the probe index; the next write rebuckets from the swapped
     // graph (one index rebuild per explicit transaction — documented)
@@ -1522,34 +1575,72 @@ final class GraphStore(initial: PropertyGraph,
     baseV = ng.vertices; baseE = ng.edges; baseRows = -1L
   }
 
-  /** Truncate the stacked write plan. SMALL stores (base within
-    * [[GraphStore.OverlayFoldRows]]) keep the round-12 full fold —
-    * copying a broadcast-sized store is cheaper than overlay
-    * bookkeeping. BIG stores delta-fold: the base is scanned (probe,
-    * delta-sized output) but NEVER re-written — at 100 TB a full fold
-    * would re-materialize the store every 8 statements. Full fold
-    * also fires when the overlay outgrows its broadcast budget or
-    * after an untracked tx swap. `forceOverlay` (tests) pins the
-    * delta path regardless of base size. */
+  /** Truncate the stacked write plan. SMALL unbucketed stores
+    * ([[foldsEveryWrite]]) fold per write: only the touched frame
+    * family is re-checkpointed. Otherwise stores with a base within
+    * [[GraphStore.FullFoldBaseRows]] keep the round-12 full fold —
+    * copying an in-memory store is cheaper than overlay bookkeeping.
+    * BIG stores delta-fold: the base is scanned (probe, delta-sized
+    * output) but NEVER re-written — at 100 TB a full fold would
+    * re-materialize the store every 8 statements. Full fold also
+    * fires when the overlay outgrows its broadcast budget or after an
+    * untracked tx swap. `forceOverlay` (tests) pins the delta path
+    * regardless of base size. */
   def compact(): Unit = synchronized {
-    if (bktV.isDefined) { collapseSegs(); writesSinceCompact = 0; return }
-    if (baseRows < 0) baseRows = baseV.count() + baseE.count()
-    if (!baseValid ||
-        (!forceOverlay && baseRows <= GraphStore.FullFoldBaseRows) ||
-        ovRows > overlayFoldRows) fullFold()
-    else deltaFold()
+    val t0 = System.nanoTime()
+    if (bktV.isDefined) collapseSegs()
+    else if (foldsEveryWrite) foldTouched()
+    else {
+      if (baseRows < 0) baseRows = baseV.count() + baseE.count()
+      if (!baseValid ||
+          (!forceOverlay && baseRows <= GraphStore.FullFoldBaseRows) ||
+          ovRows > overlayFoldRows) fullFold()
+      else deltaFold()
+      // a store that GREW past the probe-index bound on the unbucketed
+      // path switches modes here (state is clean right after a fold)
+      if (!forceOverlay && baseRows > GraphStore.BucketProbeRows) bucketize()
+    }
     writesSinceCompact = 0
-    // a store that GREW past the probe-index bound on the unbucketed
-    // path switches modes here (state is clean right after a fold)
-    if (!forceOverlay && baseRows > GraphStore.BucketProbeRows) bucketize()
+    folds += 1
+    lastFoldMs = (System.nanoTime() - t0) / 1e6
   }
 
   private var baseRows = -1L
+
+  /** The per-write fold applies: an unbucketed store, counted at a
+    * clean fold point, within the overlay budget (the instance's
+    * `overlayFoldRows`, [[GraphStore.OverlayFoldRows]] by default).
+    * A base this small (under [[GraphStore.FullFoldBaseRows]]) was
+    * last folded fully or per write, so it carries no overlay state
+    * and an untouched family's standing frame IS its base. */
+  private def foldsEveryWrite: Boolean =
+    bktV.isEmpty && !forceOverlay && baseValid &&
+      baseRows >= 0 && baseRows <= overlayFoldRows
+
+  /** Fold the window (one statement, on the per-write path) by
+    * re-checkpointing only the frame families it touched — a MERGE or
+    * SET that touches no edge keeps the edge base as it is. The row
+    * count comes from the statements' stats, not from count jobs. The
+    * superseded base is NOT unpersisted: concurrent Bolt readers may
+    * hold snapshots over it, and a localCheckpoint block cannot be
+    * recomputed; the ContextCleaner reclaims it once unreferenced. */
+  private def foldTouched(): Unit = withoutConstraintPropagation {
+    val touchesV = window.exists(t =>
+      t.nodeIds.isDefined || t.deletedNodeIds.isDefined)
+    val touchesE = window.exists(t => t.edgeTriples.isDefined ||
+      t.deletedEdgeTriples.isDefined || t.detachedNodeIds.isDefined)
+    if (touchesV) baseV = compactedFrame(g.vertices)
+    if (touchesE) baseE = compactedFrame(g.edges)
+    g = PropertyGraph(baseV, baseE)
+    baseRows = liveRows
+    window = Nil
+  }
 
   private def fullFold(): Unit = {
     g = compacted(g)
     baseV = g.vertices; baseE = g.edges
     baseRows = baseV.count() + baseE.count() // cheap: just checkpointed
+    liveRows = baseRows
     ovV = None; ovE = None
     maskV = None; maskE = None
     ovRows = 0L; window = Nil; baseValid = true
@@ -1681,8 +1772,10 @@ final class GraphStore(initial: PropertyGraph,
     * index build. */
   private def ensureProbeIndex(): Unit =
     if (bktV.isEmpty && !forceOverlay) {
-      if (baseRows < 0 && window.isEmpty && baseValid)
+      if (baseRows < 0 && window.isEmpty && baseValid) {
         baseRows = g.vertices.count() + g.edges.count()
+        liveRows = baseRows
+      }
       if (forceBucketed || baseRows > GraphStore.BucketProbeRows) {
         if (window.nonEmpty || !baseValid) fullFold()
         bucketize()
@@ -1742,6 +1835,7 @@ final class GraphStore(initial: PropertyGraph,
       BucketedFrame.bucketCountFor(nE, par)))
     baseV = bktV.get.df; baseE = bktE.get.df
     baseRows = nV + nE
+    liveRows = baseRows
     ovV = None; ovE = None; maskV = None; maskE = None
     ovRows = 0L; window = Nil; segs = Vector.empty; baseValid = true
     clearLevels()
@@ -2058,6 +2152,16 @@ final class GraphStore(initial: PropertyGraph,
 }
 
 object GraphStore {
+  /** [[GraphStore.stats]]: standing rows (vertices + edges), whether
+    * the bucket-pruned probe index is on, folds so far and the last
+    * fold's wall time. */
+  final case class StoreStats(rows: Long, bucketed: Boolean, folds: Long,
+                              lastFoldMs: Double)
+
+  /** Rows a statement added to the standing graph, net. */
+  private def netRows(s: CypherWrite.Stats): Long =
+    s.nodesCreated - s.nodesDeleted + s.relsCreated - s.relsDeleted
+
   /** Base size (vertex + edge rows) past which the store builds the
     * bucket-pruned probe index (round 14) and switches to segment
     * compaction: below it, full standing probes on an in-memory store
@@ -2078,7 +2182,17 @@ object GraphStore {
     * fold materializes a new base instead of maintaining the overlay:
     * the overlay rides broadcast joins, so it must stay comfortably
     * under the broadcast budget; a quarter-million keyed rows is a
-    * few tens of MB. */
+    * few tens of MB.
+    *
+    * Also the size gate of the per-write fold: an unbucketed store of
+    * at most this many standing rows re-checkpoints its touched frame
+    * family after every write instead of stacking up to 8 layers.
+    * Measured with `StoreSoak 12 4 50000` (144 row-at-a-time
+    * statements over ~100k standing rows, local[4], 4-core host):
+    * 200.4 s at the 8-write cadence and 79.2 s folding every write,
+    * both with the point-pattern MATCH cross unhinted (69.8 s with
+    * the broadcast cross) — not worse at the largest size measured
+    * under the gate, so the gate stays here. */
   val OverlayFoldRows: Long = 1L << 18
 
   /** Statement-delta size up to which the write path collapses its

@@ -15,13 +15,8 @@ class CypherWriteSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def emptyStore(keys: Map[String, Seq[String]] = Map(
-      "Person" -> Seq("pid"), "City" -> Seq("name"))): GraphStore = {
-    val v = Seq.empty[(String, String, Map[String, String])]
-      .toDF("id", "label", "props")
-    val e = Seq.empty[(String, String, String, Map[String, String])]
-      .toDF("src", "dst", "rel", "props")
-    new GraphStore(PropertyGraph(v, e), keys)
-  }
+      "Person" -> Seq("pid"), "City" -> Seq("name"))): GraphStore =
+    new GraphStore(emptyGraph(), keys)
 
   private def propsOf(s: GraphStore, id: String): Map[String, String] = {
     val rows = s.graph.vertices.filter(col("id") === id).collect()
@@ -521,8 +516,12 @@ class CypherWriteSpec extends AnyFunSuite {
     // a MERGE's apply must be broadcast probes over the standing
     // vertex/edge tables: no SortMergeJoin, no ShuffledHashJoin, and
     // no Exchange hashing the full tables (a full-outer formulation
-    // would SMJ-shuffle the 100 TB side on every statement)
-    val s = emptyStore()
+    // would SMJ-shuffle the 100 TB side on every statement). The
+    // store stays off the per-write fold, so the standing frames keep
+    // the apply's plan instead of its checkpoint.
+    val s = new GraphStore(emptyGraph(),
+      Map("Person" -> Seq("pid"), "City" -> Seq("name")),
+      overlayFoldRows = -1L)
     s.execute("MERGE (p:Person {pid: 1}) SET p.a = 'x'")
     s.execute("MERGE (p:Person {pid: 2})")
     s.execute(
@@ -533,6 +532,35 @@ class CypherWriteSpec extends AnyFunSuite {
     assert(vPlan.contains("BroadcastHashJoin"), vPlan)
     assert(!vPlan.contains("SortMergeJoin"), vPlan)
     assert(!ePlan.contains("SortMergeJoin"), ePlan)
+  }
+
+  test("a key-bound point MATCH part crosses in as a broadcast, " +
+       "never a CartesianProduct (plan-pinned)") {
+    // the WeatherDay edge MERGE's prefix: two disconnected MATCH parts,
+    // each one node pattern with every declared key bound to a param.
+    // A few thousand standing rows are enough: Spark estimates a
+    // left-outer join (the MERGE apply) as the PRODUCT of its sides,
+    // the checkpoint keeps that estimate, and no MATCH part looks
+    // small enough to broadcast by size.
+    val filler = (1 to 5000).map(i => (s"Tag:$i", "Tag", Map("k" -> s"$i")))
+      .toDF("id", "label", "props")
+    val s = new GraphStore(PropertyGraph(filler, emptyGraph().edges), Map(
+      "Station" -> Seq("serial_number"),
+      "WeatherDay" -> Seq("station_serial", "date")))
+    val day = Map[String, Any]("serial" -> "S1", "date" -> "2024-03-05")
+    s.execute("MERGE (st:Station {serial_number: $serial})", day)
+    s.execute(
+      "MERGE (wd:WeatherDay {station_serial: $serial, date: $date})", day)
+    val (st, rows) = s.executeReturning(
+      """MATCH (s:Station { serial_number: $serial })
+         MATCH (wd:WeatherDay { station_serial: $serial, date: $date })
+         MERGE (s)-[:HAS_WEATHER_DAY]->(wd)
+         RETURN wd.date AS d""", day)
+    assert(st.relsCreated == 1L)
+    val plan = rows.get.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(!plan.contains("CartesianProduct"), plan)
+    assert(rows.get.collect().map(_.getString(0)).toSeq == Seq("2024-03-05"))
   }
 
   test("the reference's VERBATIM WeatherDay statements execute") {
@@ -774,66 +802,95 @@ class CypherWriteSpec extends AnyFunSuite {
     } finally srv.close()
   }
 
+  // the create/update/delete/DETACH/re-create sequence the fold
+  // equivalence proofs replay — including deletion masks, DETACH
+  // endpoint masks, and re-creation AFTER deletion (mask vs overlay
+  // order)
+  private val foldSeq: Seq[(String, Map[String, Any])] = Seq(
+    ("MERGE (p:Person {pid: 1}) SET p.a = 'x'", Map.empty),
+    ("MERGE (p:Person {pid: 2}) SET p.a = 'y'", Map.empty),
+    ("MERGE (c:City {name: 'oslo'})", Map.empty),
+    ("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) MERGE (p)-[:LIVES_IN]->(c)",
+      Map.empty),
+    ("MATCH (p:Person {pid: 2}) MATCH (c:City {name: 'oslo'}) MERGE (p)-[r:LIVES_IN]->(c) SET r.since = '2020'",
+      Map.empty),
+    ("MATCH (p:Person {pid: 1}) SET p.a = 'z', p.b = '1'", Map.empty),
+    ("MATCH (p:Person {pid: 1}) DETACH DELETE p", Map.empty),
+    // re-create a DELETED id: the overlay row must win over the mask
+    ("MERGE (p:Person {pid: 1}) SET p.a = 'reborn'", Map.empty),
+    ("MATCH (p:Person {pid: 2})-[r:LIVES_IN]->(c) DELETE r", Map.empty),
+    ("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) MERGE (p)-[:LIVES_IN]->(c)",
+      Map.empty),
+    ("MERGE (c:City {name: 'rome'}) SET c.cc = 'it'", Map.empty))
+  private val foldKeys = Map("Person" -> Seq("pid"), "City" -> Seq("name"))
+
+  private type GraphSig = (Set[(String, String, Map[String, String])],
+    Set[(String, String, String)])
+  private def sigOf(g: PropertyGraph): GraphSig = (
+    g.vertices.collect().map(r => (r.getString(0), r.getString(1),
+      Option(r.getMap[String, String](2)).map(_.toMap)
+        .getOrElse(Map.empty[String, String]))).toSet,
+    g.edges.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet)
+
+  private def emptyGraph(): PropertyGraph = PropertyGraph(
+    Seq.empty[(String, String, Map[String, String])]
+      .toDF("id", "label", "props"),
+    Seq.empty[(String, String, String, Map[String, String])]
+      .toDF("src", "dst", "rel", "props"))
+
+  /** The never-folded reference: [[foldSeq]] chained through
+    * `CypherWrite.apply` over a bare graph — no store, no fold. */
+  private def stackedApply(): GraphSig = sigOf(foldSeq.foldLeft(emptyGraph()) {
+    case (g, (q, ps)) =>
+      CypherParser.parseAny(q) match {
+        case Left(w) => CypherWrite(g, w, ps, foldKeys).graph
+        case Right(_) => fail(s"not a write: $q")
+      }
+  })
+
+  /** [[foldSeq]] through a store, plus an explicit compact() every
+    * `foldEvery` statements (0 = only the store's own folds).
+    * `foldRows = -1` keeps even a tiny store off the per-write fold,
+    * on the 8-write cadence. */
+  private def runStore(foldEvery: Int, overlay: Boolean = false,
+                       bucketed: Boolean = false,
+                       foldRows: Long = GraphStore.OverlayFoldRows)
+      : (GraphSig, GraphStore) = {
+    val s = new GraphStore(emptyGraph(), foldKeys,
+      forceOverlay = overlay, forceBucketed = bucketed,
+      overlayFoldRows = foldRows)
+    foldSeq.zipWithIndex.foreach { case ((q, ps), i) =>
+      s.execute(q, ps)
+      if (foldEvery > 0 && (i + 1) % foldEvery == 0) s.compact()
+    }
+    (sigOf(s.graph), s)
+  }
+
   test("overlay fold ≡ stacked apply across create/update/delete/detach") {
     // round-13 compaction: the store folds a delta-sized OVERLAY onto
     // a pinned base instead of re-materializing the standing graph.
     // Equivalence proof: the same statement sequence lands the same
     // graph whether folds happen after every statement, never, or on
-    // the default cadence — including deletion masks, DETACH endpoint
-    // masks, and re-creation AFTER deletion (mask vs overlay order).
-    val stmts: Seq[(String, Map[String, Any])] = Seq(
-      ("MERGE (p:Person {pid: 1}) SET p.a = 'x'", Map.empty),
-      ("MERGE (p:Person {pid: 2}) SET p.a = 'y'", Map.empty),
-      ("MERGE (c:City {name: 'oslo'})", Map.empty),
-      ("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) MERGE (p)-[:LIVES_IN]->(c)",
-        Map.empty),
-      ("MATCH (p:Person {pid: 2}) MATCH (c:City {name: 'oslo'}) MERGE (p)-[r:LIVES_IN]->(c) SET r.since = '2020'",
-        Map.empty),
-      ("MATCH (p:Person {pid: 1}) SET p.a = 'z', p.b = '1'", Map.empty),
-      ("MATCH (p:Person {pid: 1}) DETACH DELETE p", Map.empty),
-      // re-create a DELETED id: the overlay row must win over the mask
-      ("MERGE (p:Person {pid: 1}) SET p.a = 'reborn'", Map.empty),
-      ("MATCH (p:Person {pid: 2})-[r:LIVES_IN]->(c) DELETE r", Map.empty),
-      ("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) MERGE (p)-[:LIVES_IN]->(c)",
-        Map.empty),
-      ("MERGE (c:City {name: 'rome'}) SET c.cc = 'it'", Map.empty))
-    def runStore(foldEvery: Int, overlay: Boolean = false,
-                 bucketed: Boolean = false)
-        : (Set[(String, String, Map[String, String])],
-           Set[(String, String, String)]) = {
-      val v = Seq.empty[(String, String, Map[String, String])]
-        .toDF("id", "label", "props")
-      val e = Seq.empty[(String, String, String, Map[String, String])]
-        .toDF("src", "dst", "rel", "props")
-      val s = new GraphStore(PropertyGraph(v, e),
-        Map("Person" -> Seq("pid"), "City" -> Seq("name")),
-        forceOverlay = overlay, forceBucketed = bucketed)
-      stmts.zipWithIndex.foreach { case ((q, ps), i) =>
-        s.execute(q, ps)
-        if (foldEvery > 0 && (i + 1) % foldEvery == 0) s.compact()
-      }
-      val vs = s.graph.vertices.collect().map(r => (r.getString(0),
-        r.getString(1), Option(r.getMap[String, String](2))
-          .map(_.toMap).getOrElse(Map.empty))).toSet
-      val es = s.graph.edges.collect()
-        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      (vs, es)
-    }
+    // the default cadence.
     // the adaptive switch sends tiny bases down the full-fold path —
     // overlay = true pins the DELTA path, so both are proven
-    val everyStmt = runStore(1, overlay = true)
-    val never = runStore(0)       // pure stacked apply
-    val defaults = runStore(4, overlay = true)
-    val fullPath = runStore(1)    // small-base full-fold path
+    val everyStmt = runStore(1, overlay = true)._1
+    val never = stackedApply() // pure stacked apply, no store
+    val defaults = runStore(4, overlay = true)._1
+    // small-base full-fold path (off the per-write fold)
+    val fullPath = runStore(1, foldRows = -1L)._1
+    val cadence8 = runStore(0, foldRows = -1L)._1 // one fold, at 8
     assert(everyStmt == never, s"overlay fold-every-statement diverges:\n$everyStmt\nvs\n$never")
     assert(defaults == never, s"overlay fold-every-4 diverges")
     assert(fullPath == never, s"full fold-every-statement diverges")
+    assert(cadence8 == never, s"8-write cadence diverges")
     // round 14: the bucket-pruned probe path (segment compaction) —
     // same sequence includes MATCH-prefix scans on declared-key
     // labels (pruned), DETACH, re-creation after deletion, edge
     // deletes — all through the pruned probes + segment window
-    val bucketedNever = runStore(0, bucketed = true)
-    val bucketedFolded = runStore(2, bucketed = true)
+    val bucketedNever = runStore(0, bucketed = true)._1
+    val bucketedFolded = runStore(2, bucketed = true)._1
     assert(bucketedNever == never, s"bucketed store diverges:\n$bucketedNever\nvs\n$never")
     assert(bucketedFolded == never, s"bucketed fold-every-2 diverges")
     // expected end state, spelled out
@@ -843,6 +900,34 @@ class CypherWriteSpec extends AnyFunSuite {
       ("City:oslo", "City", Map("name" -> "oslo")),
       ("City:rome", "City", Map("name" -> "rome", "cc" -> "it"))))
     assert(never._2 == Set(("Person:1", "City:oslo", "LIVES_IN")))
+  }
+
+  test("per-write fold ≡ stacked apply: a small store folds every write") {
+    // a store within OverlayFoldRows folds after EVERY write,
+    // re-checkpointing only the touched frame family
+    val (perWrite, s) = runStore(0)
+    val stacked = stackedApply()
+    assert(perWrite == stacked, s"per-write fold diverges:\n$perWrite\nvs\n$stacked")
+    assert(s.stats.folds == foldSeq.size.toLong)
+    // every standing frame is a checkpoint: no stacked layer left
+    val plans = Seq(s.graph.vertices, s.graph.edges)
+      .map(_.queryExecution.optimizedPlan.toString)
+    plans.foreach(p => assert(!p.contains("Join") && !p.contains("Union"), p))
+  }
+
+  test("store stats: rows follow every statement's write stats") {
+    val s = new GraphStore(emptyGraph(), foldKeys)
+    foldSeq.zipWithIndex.foreach { case ((q, ps), i) =>
+      s.execute(q, ps)
+      val st = s.stats
+      val counted = s.graph.vertices.count() + s.graph.edges.count()
+      assert(st.rows == counted, s"after `$q`: stats.rows ${st.rows}, counted $counted")
+      assert(!st.bucketed && st.folds == i + 1L && st.lastFoldMs >= 0.0)
+    }
+    assert(s.stats.rows == 5L) // 4 vertices + 1 edge
+    // the bucketed store keeps the same count through pruned probes
+    val b = runStore(0, bucketed = true)._2
+    assert(b.stats.bucketed && b.stats.rows == 5L)
   }
 
   test("bucket pruning: repartition(n, id) partition index IS " +
