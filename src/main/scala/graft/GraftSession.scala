@@ -65,6 +65,22 @@ object GraftSession {
     }
   }
 
+  /** Entries of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).
+    * The cache is LRU and keyed by generated source, and a session
+    * cycles through more distinct stage shapes than 100: measured on
+    * the perfbench workloads with an unbounded cache (4-core host,
+    * local[4]), one graph_analytics run compiles about 256 distinct
+    * classes and one cypher_wire run 332. Each pass visits its shapes
+    * in a cycle, so at 100 entries it evicts each class before reuse
+    * and a warm pass recompiles nearly every stage (SCALE.md,
+    * "Observed convergence rounds"). The cache splits its entries
+    * over 4 LRU segments, so the constant leaves room above the larger
+    * working set. A static conf: it must be set before the session
+    * starts, so [[tune]] cannot apply it.
+    */
+  val CodegenCacheEntries = 512
+
   def builder(master: String = s"local[${Runtime.getRuntime.availableProcessors()}]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
@@ -83,6 +99,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         minCoalescedDefault)
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

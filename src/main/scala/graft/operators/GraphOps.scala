@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -28,23 +28,21 @@ object GraphOps {
   def pageRank(edges: DataFrame, iterations: Int,
                reset: Double = 0.15, damp: Double = 0.85,
                scope: CacheScope = CacheScope.global): DataFrame = {
-    // vertices is re-joined every iteration — persist it or each
-    // iteration re-runs the distinct over the edge set
-    // vertices comes out of distinct() hash-partitioned by id; edges
-    // are explicitly repartitioned by src. Cached plans keep their
-    // output partitioning (canChangeCachedPlanOutputPartitioning is
-    // false by default), so every iteration's rank⋈edge join and
-    // vertex left-join are exchange-free — the only shuffle per
-    // iteration is the contribution aggregate, i.e. the actual
-    // message-passing step. 3 shuffles/iter → 1.
-    // the input lineage is referenced 4× below (vertices union twice,
+    // vertices is re-joined every iteration — checkpoint it or each
+    // iteration re-runs the distinct over the edge set.
+    // The input lineage is referenced 4× below (vertices union twice,
     // outDeg, withInv), and every iteration's logical plan would embed
     // it again — localCheckpoint materializes it ONCE and replaces the
     // lineage with a LogicalRDD, so iteration plans stay constant-size
     // (a persist alone caches execution but Catalyst still re-analyzes
     // the full tree, which doubles per iteration: comp_t is referenced
-    // twice by comp_{t+1}). LogicalRDD preserves output partitioning,
-    // so the co-partitioning below survives the truncation.
+    // twice by comp_{t+1}).
+    // The checkpoints do NOT carry their hash partitioning: under AQE
+    // the checkpointed plan is an AdaptiveSparkPlanExec, which reports
+    // UnknownPartitioning(0), so the LogicalRDD of `repartition(src)`
+    // records no partitioning and every iteration's rank⋈edge join
+    // plans an exchange or a broadcast. The `repartition(src)` only
+    // spreads the edges evenly.
     val e = scope.checkpoint(edges)
     val vertices = scope.checkpoint(e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct())
@@ -92,9 +90,8 @@ object GraphOps {
     * w ≡ 1). Input: edges (src, dst, w: integer weights, so the
     * normalized fraction w / Σw is one deterministic double both
     * engines compute identically). Same iteration discipline as
-    * [[pageRank]]: co-partitioned checkpointed edges, zero-contribution
-    * union instead of a per-iteration vertex join, decimal-quantized
-    * sums — one shuffle per iteration.
+    * [[pageRank]]: checkpointed edges, zero-contribution union instead
+    * of a per-iteration vertex join, decimal-quantized sums.
     *
     * Weights must be POSITIVE: a non-positive edge weight would give
     * a src with sum(w) ≤ 0 whose fractions are NaN/negative and
@@ -106,7 +103,7 @@ object GraphOps {
                        scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.checkpoint(edges.select(col("src"), col("dst"),
       col("w").cast("long").as("w")))
-    val badW = e.filter(col("w") <= 0 || col("w").isNull).limit(1).count()
+    val badW = e.filter(col("w") <= 0 || col("w").isNull).count()
     require(badW == 0,
       "pageRankWeighted: edge weights must be positive non-null " +
         "(found a w <= 0 or NULL edge); filter or reweight upstream")
@@ -139,17 +136,16 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame, iterations: Int,
                           scope: CacheScope = CacheScope.global): DataFrame = {
-    // same co-partitioning discipline as pageRank: undirected edges
-    // partitioned by src once, comp stays partitioned by id, so the
-    // propagation join is exchange-free and only the min-aggregate
-    // shuffles per iteration
     // input lineage referenced twice by the symmetric union, and
     // comp_t twice by iteration t+1 (propagation source and join
     // target) — without truncation both the EXECUTION (recompute per
     // reference) and the LOGICAL PLAN (tree doubles per iteration,
     // re-analyzed even when execution is cached) blow up 2^iterations.
     // localCheckpoint cuts both: one materialization, constant-size
-    // iteration plans, output partitioning preserved.
+    // iteration plans. As in pageRank, the checkpointed undirected
+    // edges record no partitioning under AQE, so the propagation join
+    // plans an exchange or a broadcast per iteration besides the
+    // min-aggregate's shuffle.
     val e = scope.checkpoint(edges)
     // self-loops make the recurrence min over neighbors ∪ self, so
     // comp_t is referenced exactly ONCE per iteration (the propagation
@@ -182,10 +178,10 @@ object GraphOps {
     * the vote: mode-of-neighbors finds dense communities inside a
     * component, min-of-neighbors finds the component itself.
     *
-    * Plan shape per round: ONE exchange-free join (labels against the
-    * src-partitioned undirected edge list, same discipline as
-    * pageRank) and TWO map-side-combined hash aggregates — the
-    * (vertex, label) vote count, then the per-vertex argmax. The
+    * Plan shape per round: ONE join (labels against the checkpointed
+    * undirected edge list, same discipline as pageRank) and TWO
+    * map-side-combined hash aggregates — the (vertex, label) vote
+    * count, then the per-vertex argmax. The
     * argmax is `max_by` over (count, −label) — an aggregate, never a
     * rank-1 window, so a hub's votes combine map-side instead of
     * sorting on one reducer. Labels are referenced once per round, so
@@ -217,11 +213,10 @@ object GraphOps {
     * plan discipline as [[connectedComponents]]: zero-weight
     * self-loops make the recurrence `min over in-edges ∪ self`, so
     * the frontier frame is referenced once per iteration, the plan
-    * grows linearly, and the only shuffle per iteration is the
-    * min-aggregate (the join is exchange-free against the
-    * src-partitioned hop relation). `iterations` must be >= the
-    * radius of interest; unreached vertices surface as null, not a
-    * sentinel, so truncation is visible to the caller.
+    * grows linearly, and each iteration is one join against the
+    * checkpointed hop relation plus the min-aggregate. `iterations`
+    * must be >= the radius of interest; unreached vertices surface as
+    * null, not a sentinel, so truncation is visible to the caller.
     */
   def shortestPaths(edges: DataFrame, sources: DataFrame, iterations: Int,
                     scope: CacheScope = CacheScope.global): DataFrame =
@@ -346,24 +341,40 @@ object GraphOps {
     vertices.join(dist, Seq("id"), "left").select(col("id"), col("dist"))
   }
 
+  /** One round of a convergence loop: checkpoint the round's state
+    * `next` and count, in that same job, the rows where `signal`
+    * holds (an [[Observation]] on the checkpointed plan). A separate
+    * `limit(1).count()` probe would cost one more job per round, and
+    * its generated code never hits the codegen cache: Spark names
+    * every limit plan's row counter from a global sequence, so each
+    * probe compiles fresh classes. Returns the checkpointed state and
+    * the count.
+    */
+  private def observedRound(next: DataFrame, signal: Column,
+                            scope: CacheScope): (DataFrame, Long) = {
+    val obs = Observation()
+    val state = scope.checkpoint(next.observe(obs, sum(signal.cast("long")).as("n")))
+    // the sum over an empty state is null: nothing signalled
+    (state, Option(obs.get("n")).fold(0L)(_.asInstanceOf[Long]))
+  }
+
   /** Convergence-safe connected components: same min-label propagation
     * as [[connectedComponents]], iterated until NO label changed in a
-    * round (checked with a limit-1 emptiness probe, not a full count)
-    * or `maxIterations` as a runaway bound. A fixed-depth run
-    * silently splits any component whose diameter exceeds the depth —
+    * round (counted by the round's checkpoint job, see
+    * [[observedRound]]) or `maxIterations` as a runaway bound. A
+    * fixed-depth run silently splits any component whose diameter exceeds the depth —
     * at corpus scale a dup chain longer than the depth under-dedups —
     * so this is the production path; the fixed-depth form stays for
     * oracle replay (a data-dependent iteration count cannot be
     * mirrored in static SQL).
     *
-    * Each round's labels are checkpointed: the convergence probe is an
-    * action per round, and without materialization round t+1 would
-    * recompute rounds 1..t.
+    * Each round's labels are checkpointed: without materialization
+    * round t+1 would recompute rounds 1..t.
     */
   def connectedComponentsConverged(edges: DataFrame, maxIterations: Int = 50,
                                    scope: CacheScope = CacheScope.global): DataFrame = {
     // convergence-loop floor scope (r17) — see [[kCore]]: per-window
-    // probe + checkpoint actions run at Spark's 1m floor (32-core A/B:
+    // checkpoint actions run at Spark's 1m floor (32-core A/B:
     // g_connected_components 2.57 s at 256k vs 2.18 s at 1m, g_mis
     // 6.65 vs 5.40).
     graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
@@ -377,10 +388,10 @@ object GraphOps {
     var comp = scope.checkpoint(vertices.select(col("id"), col("id").as("comp")))
     var changed = 1L
     var iter = 0
-    // Windowed probe (same cadence as pageRankConverged): labels only
+    // Windowed check (same cadence as pageRankConverged): labels only
     // DECREASE, so "no vertex changed across the whole window" is
     // EXACTLY "no step in the window changed anything" — the window
-    // probe against the window-start state is exact, and 3 min-
+    // check against the window-start state is exact, and 3 min-
     // propagation steps pipeline as one lazy job between checkpoints.
     val probeEvery = 3
     while (changed > 0L && iter < maxIterations) {
@@ -392,10 +403,11 @@ object GraphOps {
           .groupBy(col("dst").as("id"))
           .agg(min(col("comp")).as("comp"))
       }
-      val next = scope.checkpoint(
-        cur.join(prev.select(col("id"), col("comp").as("prev")), "id"))
       // labels only decrease, so "any row strictly smaller" == "changed"
-      changed = next.filter(col("comp") < col("prev")).limit(1).count()
+      val (next, n) = observedRound(
+        cur.join(prev.select(col("id"), col("comp").as("prev")), "id"),
+        col("comp") < col("prev"), scope)
+      changed = n
       comp = next.select(col("id"), col("comp"))
       iter += steps
     }
@@ -411,10 +423,11 @@ object GraphOps {
     * same exact 1e-9-quantized decimal sums as [[pageRank]] so the
     * oracle replays the iteration chain bit-for-bit.
     *
-    * Plan shape: the per-vertex reset vector is checkpointed
-    * hash-partitioned by id, and each iteration's aggregate output is
-    * partitioned the same way, so the reset re-join is exchange-free —
-    * still ONE shuffle per iteration (the message aggregate).
+    * Plan shape: the per-vertex reset vector is checkpointed once and
+    * re-joined to each iteration's aggregate output. The checkpoint
+    * records no partitioning under AQE (see [[pageRank]]), so that
+    * re-join, like the contribution join, plans an exchange or a
+    * broadcast per iteration.
     * `sources` is an (id) frame; ids absent from the graph contribute
     * nothing.
     */
@@ -458,21 +471,21 @@ object GraphOps {
 
   /** Convergence-safe PageRank: same recurrence (and the same exact
     * 1e-9-quantized decimal sums) as [[pageRank]], iterated until no
-    * vertex's rank moved more than `tol` in a round — checked with a
-    * limit-1 emptiness probe like [[connectedComponentsConverged]] —
-    * or `maxIterations` as the runaway bound. A fixed iteration count
+    * vertex's rank moved more than `tol` in a round — counted by the
+    * round's checkpoint job like [[connectedComponentsConverged]] — or
+    * `maxIterations` as the runaway bound. A fixed iteration count
     * under-converges hub-heavy graphs whose mixing time exceeds the
     * depth; this is the production path, while the fixed-depth form
     * stays for oracle replay (a data-dependent iteration count cannot
     * be mirrored in static SQL).
     *
-    * Each round's ranks are checkpointed: the probe is an action per
-    * round, and rank_t is referenced twice (contribution join + delta
-    * probe) — the price is one blocking materialization per round,
-    * the same trade the CC/k-core converged forms make. Termination
-    * is guaranteed even for tiny `tol`: the damped recurrence
-    * contracts deltas by `damp` per round and ranks live on the 1e-9
-    * quantization grid, so the sequence reaches an exact fixpoint.
+    * Each round's ranks are checkpointed: rank_t is referenced twice
+    * (contribution join + delta check) — the price is one blocking
+    * materialization per round, the same trade the CC/k-core converged
+    * forms make. Termination is guaranteed even for tiny `tol`: the
+    * damped recurrence contracts deltas by `damp` per round and ranks
+    * live on the 1e-9 quantization grid, so the sequence reaches an
+    * exact fixpoint.
     */
   def pageRankConverged(edges: DataFrame, tol: Double = 1e-7,
                         maxIterations: Int = 50,
@@ -491,23 +504,22 @@ object GraphOps {
     var ranks = scope.checkpoint(vertices.select(col("id"), lit(1.0).as("rank")))
     var moved = 1L
     var iter = 0
-    // Probe cadence: convergence is checked every `probeEvery`
+    // Check cadence: convergence is checked every `probeEvery`
     // iterations, so a window of 3 recurrence steps runs as ONE job
     // of pipelined shuffle stages (each rank_t is referenced once —
     // linear lazy chain, the fixed-iteration pageRank discipline)
     // instead of 3 blocking checkpoint jobs. A tol-fixpoint stays a
     // fixpoint under extra iterations (the recurrence is a
     // contraction), so overshooting by ≤2 steps changes nothing the
-    // certificate or oracle can see; prev is folded into the
-    // window-end checkpoint so the probe is a limit-1 scan of
-    // materialized partitions.
+    // certificate or oracle can see; prev is joined into the
+    // window-end checkpoint, whose job also counts the moved vertices.
     val probeEvery = 3
     while (moved > 0L && iter < maxIterations) {
       val steps = math.min(probeEvery, maxIterations - iter)
       // the stopping criterion stays the SINGLE-step delta (what the
       // certificate's residual bound assumes): compare the window's
       // last step against the state just before it — beforeLast is
-      // referenced twice (inside cur's plan and by the probe join),
+      // referenced twice (inside cur's plan and by the delta join),
       // which at window size 3 keeps plans bounded
       var beforeLast = ranks
       var cur = ranks
@@ -522,10 +534,10 @@ object GraphOps {
             (round(sum(col("contrib").cast("decimal(27,15)")) * 1000000000L)
               .cast("long").cast("double") / 1.0e9)).as("rank"))
       }
-      val next = scope.checkpoint(
-        cur.join(beforeLast.select(col("id"), col("rank").as("prev")), "id"))
-      moved = next.filter(abs(col("rank") - col("prev")) > tol)
-        .limit(1).count()
+      val (next, n) = observedRound(
+        cur.join(beforeLast.select(col("id"), col("rank").as("prev")), "id"),
+        abs(col("rank") - col("prev")) > tol, scope)
+      moved = n
       ranks = next.select(col("id"), col("rank"))
       iter += steps
     }
@@ -725,14 +737,20 @@ object GraphOps {
   /** Convergence-safe k-core: same peeling recurrence as [[kCore]],
     * iterated until a round removes nothing — and since peeling is
     * monotone, that fixed point IS the k-core — with `maxIterations`
-    * as a runaway bound. The probe is the same limit-1 emptiness check
-    * as [[connectedComponentsConverged]]: "does any surviving vertex
-    * still have degree < k" touches at most one row, not a full count.
-    * A fixed-depth peel that stops early returns a SUPERSET of the
-    * k-core (vertices of degree < k still present — under-filtering,
-    * the mirror of fixed-depth CC's under-dedup), so this is the
-    * production path; [[kCore]] stays for oracle replay (a
+    * as a runaway bound. A fixed-depth peel that stops early returns a
+    * SUPERSET of the k-core (vertices of degree < k still present —
+    * under-filtering, the mirror of fixed-depth CC's under-dedup), so
+    * this is the production path; [[kCore]] stays for oracle replay (a
     * data-dependent round count cannot be mirrored in static SQL).
+    *
+    * Frontier form (Pregelix's active-vertex plan): the state is
+    * (id, deg, alive) over a checkpointed symmetric adjacency, and in
+    * each round only the vertices peeled that round (alive, deg < k)
+    * send −1 to their neighbours — one degree aggregate per round,
+    * over the frontier's edges only. The round's checkpoint job also
+    * counts the next round's frontier ([[observedRound]]), so an empty
+    * frontier ends the loop without a probe job. After the same number
+    * of rounds the survivors and their degrees equal [[kCore]]'s.
     *
     * Returns surviving (id, degree); on a runaway-bound exit the
     * non-convergence is visible as degree < k rows in the output.
@@ -740,35 +758,43 @@ object GraphOps {
   def kCoreConverged(edges: DataFrame, k: Int, maxIterations: Int = 50,
                      scope: CacheScope = CacheScope.global): DataFrame = {
     require(k >= 1 && maxIterations >= 1)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("id")).union(e.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-    // convergence-loop floor scope (r17) — see [[kCore]]: the probe +
-    // re-checkpoint actions per round run at Spark's 1m floor (32-core
-    // A/B via g_kcore_cert: 4.26 s at 256k vs 3.02 s at 1m).
+    // convergence-loop floor scope (r17) — see [[kCore]]: the per-round
+    // checkpoint actions run at Spark's 1m floor (32-core A/B via
+    // g_kcore_cert: 4.26 s at 256k vs 3.02 s at 1m).
     graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-      var e = scope.checkpoint(edges.filter(col("src") =!= col("dst"))
+      val canon = edges.filter(col("src") =!= col("dst"))
         .select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
-        .distinct())
-      var changed = 1L
+        .distinct()
+      // symmetric adjacency: one row per directed neighbour pair
+      val adj = scope.checkpoint(
+        canon.select(col("a").as("v"), col("b").as("n"))
+          .union(canon.select(col("b").as("v"), col("a").as("n"))))
+      val frontier = col("alive") && col("deg") < k
+      var (state, peeling) = observedRound(
+        adj.groupBy(col("v").as("id")).agg(count(lit(1)).as("deg"))
+          .withColumn("alive", lit(true)), frontier, scope)
       var iter = 0
-      while (changed > 0L && iter < maxIterations) {
-        // deg derives from the round's CHECKPOINTED edge set, so the
-        // probe and the keep-filter each cost one scan + aggregate over
-        // materialized rows — no recursive recompute of earlier rounds
-        val deg = degrees(e)
-        changed = deg.filter(col("d") < k).limit(1).count()
-        if (changed > 0L) {
-          val keep = deg.filter(col("d") >= k).select(col("id"))
-          e = scope.checkpoint(e
-            .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-            .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-            .select(col("a"), col("b")))
-        }
+      while (peeling > 0L && iter < maxIterations) {
+        val dec = adj.join(state.filter(frontier).select(col("id").as("n")), "n")
+          .groupBy(col("v").as("id")).agg(count(lit(1)).as("dec"))
+        // both columns read the round's input deg: a vertex is peeled
+        // on the degree it entered the round with
+        val (next, n) = observedRound(
+          state.join(dec, Seq("id"), "left")
+            .select(col("id"),
+              (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"),
+              (col("alive") && col("deg") >= k).as("alive")),
+          frontier, scope)
+        state = next
+        peeling = n
         iter += 1
       }
-      degrees(e).withColumnRenamed("d", "degree")
+      // a survivor whose neighbours all peeled in the last round has
+      // no edge left; like [[kCore]], list the surviving edge set's
+      // vertices (only reachable on a runaway-bound exit, as k >= 1)
+      state.filter(col("alive") && col("deg") > 0)
+        .select(col("id"), col("deg").as("degree"))
     }
   }
 
@@ -846,10 +872,10 @@ object GraphOps {
            scope: CacheScope = CacheScope.global): DataFrame = {
     // the two message directions join on different edge keys (src for
     // the auth pass, dst for the hub pass), so keep TWO checkpointed
-    // copies, each pre-partitioned on its join key — the pageRank
-    // discipline. The score side arrives hash-partitioned by id from
-    // its groupBy, so every per-iteration join is exchange-free and
-    // the only shuffle per half-iteration is the message aggregate.
+    // copies, each spread on its join key. Neither checkpoint records
+    // that partitioning under AQE (see [[pageRank]]), so each
+    // half-iteration's join plans an exchange or a broadcast besides
+    // the message aggregate.
     // eByDst and vertices derive FROM the materialized eBySrc (not a
     // third checkpointed copy of the distinct edge set): one fewer
     // materialization up front, and the distinct still runs once.
@@ -1031,7 +1057,7 @@ object GraphOps {
       .join(a.select(col("id"), col("community").as("c_dst")),
         e("dst") === col("id"), "left").drop("id")
     val unassigned = withC.filter(col("c_src").isNull || col("c_dst").isNull)
-      .limit(1).count()
+      .count()
     require(unassigned == 0,
       "modularity: every edge endpoint must appear in the assignment")
     val m = withC.agg(count(lit(1)).cast("decimal(38,0)").as("m"))

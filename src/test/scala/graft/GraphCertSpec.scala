@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.GraphOps
@@ -19,6 +21,15 @@ class GraphCertSpec extends AnyFunSuite {
   // is genuinely unconverged at low depth
   private def cycleEdges = Seq(
     (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 1L), (1L, 4L)
+  ).toDF("src", "dst")
+
+  // K4 (a real 3-core) plus a CASCADE appendage: 5 touches {4,6,7}
+  // (degree 3, survives round 1) but 6 and 7 (degree 2 each) peel
+  // off in round 1, stranding 5 at degree 1 — so a 1-round peel
+  // leaves a degree<3 vertex and only round 2 removes it
+  private def cascadeEdges = (
+    Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)) ++
+      Seq((4L, 5L), (5L, 6L), (5L, 7L), (6L, 7L))
   ).toDF("src", "dst")
 
   test("pageRankCertificate: converged passes, 1-iteration run fails") {
@@ -55,14 +66,27 @@ class GraphCertSpec extends AnyFunSuite {
     assert(rootless.values.forall(v => !v), "rootless labels must fail")
   }
 
+  test("converged loops reuse their generated code: a second run compiles nothing") {
+    // every class a converged loop generates must be keyed by the
+    // plan's shape alone, or each round of every call compiles anew
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val path = (1L to 7L).map(i => (i, i + 1)).toDF("src", "dst")
+    val runs = Seq[(String, () => DataFrame)](
+      "pageRankConverged" -> (() => GraphOps.pageRankConverged(cycleEdges, tol = 1e-9)),
+      "connectedComponentsConverged" -> (() => GraphOps.connectedComponentsConverged(path)),
+      "kCoreConverged" -> (() => GraphOps.kCoreConverged(cascadeEdges, k = 3)))
+    val recompiled = runs.map { case (name, run) =>
+      val first = run().collect().toSet
+      val before = compiles
+      val second = run().collect().toSet
+      assert(second == first, s"$name: the second run's output differs")
+      name -> (compiles - before)
+    }.filter(_._2 != 0L)
+    assert(recompiled.isEmpty, s"classes compiled by the second run: $recompiled")
+  }
+
   test("kCoreCertificate: converged passes, under-peeled fails") {
-    // K4 (a real 3-core) plus a CASCADE appendage: 5 touches {4,6,7}
-    // (degree 3, survives round 1) but 6 and 7 (degree 2 each) peel
-    // off in round 1, stranding 5 at degree 1 — so a 1-round peel
-    // leaves a degree<3 vertex and only round 2 removes it
-    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
-    val tail = Seq((4L, 5L), (5L, 6L), (5L, 7L), (6L, 7L))
-    val e = (k4 ++ tail).toDF("src", "dst")
+    val e = cascadeEdges
 
     val good = GraphOps.kCoreCertificate(e, GraphOps.kCoreConverged(e, k = 3), 3)
       .collect().head

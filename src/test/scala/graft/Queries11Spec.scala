@@ -98,6 +98,45 @@ class Queries11Spec extends AnyFunSuite {
     assert(bounded.exists(_._2 < 2), "bound exit must reveal non-convergence")
     // k above the max degree peels everything
     assert(GraphOps.kCoreConverged(edges, k = 5).count() == 0)
+
+    def core(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toMap
+    // seeded random core with pendant chains hanging off it and one
+    // detached chain: the chains peel one vertex per round
+    val rnd = new scala.util.Random(7)
+    val coreEdges = for {
+      a <- 1L to 16L; b <- (a + 1) to 16L if rnd.nextDouble() < 0.3
+    } yield (a, b)
+    var next = 100L
+    val chains = (1 to 4).flatMap { _ =>
+      val len = 2 + rnd.nextInt(5)
+      val ids = (1L + rnd.nextInt(16)) +: (next until next + len)
+      next += len
+      ids.zip(ids.tail)
+    } ++ (next until next + 4).zip(next + 1 until next + 5)
+    val rand = (coreEdges ++ chains).toDF("src", "dst")
+    // every round before the fixpoint peels >= 1 vertex, so the vertex
+    // count bounds the round count
+    val n = (coreEdges ++ chains).flatMap(e => Seq(e._1, e._2)).distinct.size
+    for (k <- Seq(2, 3)) {
+      val c = core(GraphOps.kCoreConverged(rand, k))
+      assert(c == core(GraphOps.kCore(rand, k, iterations = n)), s"k=$k")
+      assert(c.nonEmpty && c.values.forall(_ >= k), s"k=$k")
+    }
+    // the bound exit stops after the same rounds as a fixed peel
+    for (m <- Seq(1, 3)) assert(
+      core(GraphOps.kCoreConverged(rand, k = 2, maxIterations = m)) ==
+        core(GraphOps.kCore(rand, k = 2, iterations = m)), s"maxIterations=$m")
+
+    // GraphCertSpec's cascade: 6 and 7 peel in round 1 and strand 5
+    // (degree 3 entering the round) at degree 1 — a vertex survives a
+    // round on its entering degree and peels in the next
+    val cascade = (k4 ++ Seq((4L, 5L), (5L, 6L), (5L, 7L), (6L, 7L))).toDF("src", "dst")
+    val k4Core = Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L)
+    assert(core(GraphOps.kCoreConverged(cascade, k = 3)) == k4Core)
+    assert(core(GraphOps.kCore(cascade, k = 3, iterations = 5)) == k4Core)
+    val one = core(GraphOps.kCoreConverged(cascade, k = 3, maxIterations = 1))
+    assert(one == core(GraphOps.kCore(cascade, k = 3, iterations = 1)))
+    assert(one.get(5L).contains(1L), "the stranded vertex survives round 1")
   }
 
   test("pageRankConverged reaches the fixpoint a shallow fixed run misses") {
