@@ -8,18 +8,125 @@ import org.apache.spark.sql.functions._
   *
   * The reference materializes a property graph of key-joined node
   * tables (§1.2/§1.3); here the graph IS the pair (vertices DF,
-  * edges DF), and the algorithms are iterative DataFrame programs —
-  * every iteration is a join + aggregate on the edge relation, which
-  * Spark shuffles by dst once per iteration (same plan GraphX's
-  * Pregel generates, but in DataFrames so Catalyst/AQE optimize it
-  * and the DuckDB oracle can replay it).
+  * edges DF), and the algorithms are iterative DataFrame programs.
+  * The message-passing ones (PageRank, HITS, components, SSSP) run
+  * every round as one [[superstep]]: vertex state ⋈ edges → messages →
+  * group-by on the receiving vertex — the plan Pregelix and GraphX's
+  * Pregel generate, but in DataFrames so Catalyst/AQE optimize it and
+  * the DuckDB oracle can replay it. Each superstep shuffles its
+  * messages by receiver, and its state ⋈ edge join plans an exchange
+  * or a broadcast as well (checkpointed edges record no partitioning
+  * under AQE, see [[pageRank]]). The converged forms share one
+  * convergence loop, [[converge]].
   *
-  * Determinism: per-iteration sums go through a decimal cast, so the
-  * ranks are bit-identical regardless of partitioning — an engine
-  * running on 1000 executors produces the same bytes as DuckDB
-  * single-threaded.
+  * Determinism: per-iteration sums go through a decimal cast
+  * ([[qsum]]), so the ranks are bit-identical regardless of
+  * partitioning — an engine running on 1000 executors produces the
+  * same bytes as DuckDB single-threaded.
   */
 object GraphOps {
+
+  /** Decimal-exact sum on the 1e-9 grid. The decimal sum is
+    * partition-order-free; the decimal→double hop goes through an exact
+    * integer (×1e9, round, BIGINT) because a direct decimal→double cast
+    * is correctly rounded in the JVM but 1-ulp off in engines that
+    * convert via (int128→double)/10^scale — that ulp compounds across
+    * iterations on hub vertices.
+    */
+  private def qsum(c: Column): Column =
+    round(sum(c.cast("decimal(27,15)")) * 1000000000L)
+      .cast("long").cast("double") / 1.0e9
+
+  /** The vertex set (id) of an edge frame (src, dst). */
+  private def vertexIds(e: DataFrame): DataFrame =
+    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
+
+  /** Both directions of every edge, as (src, dst). */
+  private def symmetric(e: DataFrame): DataFrame =
+    e.select(col("src"), col("dst"))
+      .union(e.select(col("dst").as("src"), col("src").as("dst")))
+
+  /** The undirected simple edge set as (a, b) with a < b: self-loops
+    * dropped, every vertex pair once.
+    */
+  private def canonical(edges: DataFrame): DataFrame =
+    edges.filter(col("src") =!= col("dst"))
+      .select(least(col("src"), col("dst")).as("a"),
+        greatest(col("src"), col("dst")).as("b"))
+      .distinct()
+
+  /** One message-passing superstep: every edge whose `src` has a row in
+    * `state` (keyed by `id`) sends `message` to its `dst`, and the
+    * messages are combined per receiving vertex by the aggregate
+    * `combine`. Zero-padding rows `pad` (id, m), if given, join the
+    * messages before the group-by, and their value column m names the
+    * message. Output: (id, combine). The group-by is the round's
+    * shuffle; the state is referenced once, so a chain of supersteps
+    * grows its plan linearly and runs as one job of pipelined shuffle
+    * stages.
+    */
+  private def superstep(edges: DataFrame, state: DataFrame, message: Column,
+                        combine: Column => Column, pad: Option[DataFrame] = None): DataFrame = {
+    val joined = edges.join(state, edges("src") === state("id"))
+    pad.fold(joined.groupBy(col("dst").as("id")).agg(combine(message))) { p =>
+      val m = p.columns.last
+      joined.select(col("dst").as("id"), message.as(m)).unionByName(p)
+        .groupBy(col("id")).agg(combine(col(m)))
+    }
+  }
+
+  /** PageRank's message edges (src, dst, frac): frac = w / Σ_out w over
+    * the integer weights `w`, or 1 / outdeg at unit weight — one IEEE
+    * division per edge that every engine computes identically.
+    */
+  private def fracEdges(e: DataFrame, weighted: Boolean = false): DataFrame = {
+    val (out, frac) =
+      if (weighted) (sum(col("w")), col("w").cast("double") / col("out").cast("double"))
+      else (count(lit(1)), lit(1.0) / col("out"))
+    e.join(e.groupBy(col("src")).agg(out.as("out")), "src")
+      .select(col("src"), col("dst"), frac.as("frac"))
+  }
+
+  /** The checkpointed PageRank inputs over checkpointed edges `e`: the
+    * vertex set, the [[fracEdges]] spread on src, and one zero
+    * contribution per vertex. The zero rows replace a per-iteration
+    * `vertices LEFT JOIN summed` that re-attached vertices without
+    * inflow: summing an extra 0 is a no-op for receivers and yields
+    * reset + damp·0 for the rest — identical values, one fewer join
+    * per iteration.
+    */
+  private def rankEdges(e: DataFrame, scope: CacheScope, weighted: Boolean = false)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val vertices = scope.checkpoint(vertexIds(e))
+    val frac = scope.checkpoint(fracEdges(e, weighted).repartition(col("src")))
+    (vertices, frac, scope.checkpoint(vertices.select(col("id"), lit(0.0).as("contrib"))))
+  }
+
+  /** One PageRank step over [[rankEdges]]: rank(v) = reset + damp ·
+    * qsum_{u→v} rank(u)·frac(u, v).
+    */
+  private def rankStep(frac: DataFrame, ranks: DataFrame, zeros: DataFrame,
+                       reset: Double, damp: Double): DataFrame =
+    superstep(frac, ranks, col("rank") * col("frac"),
+      m => (lit(reset) + lit(damp) * qsum(m)).as("rank"), Some(zeros))
+
+  /** Connected components' inputs over checkpointed edges `e`: the
+    * checkpointed vertex set and undirected edges spread on src. The
+    * undirected edges carry one self-loop per vertex, which makes the
+    * recurrence min over neighbours ∪ self: comp_t is referenced once
+    * per round (the superstep's join) instead of twice (join source +
+    * "keep own label" join target), and the values are identical.
+    */
+  private def ccEdges(e: DataFrame, scope: CacheScope): (DataFrame, DataFrame) = {
+    val vertices = scope.checkpoint(vertexIds(e))
+    (vertices, scope.checkpoint(symmetric(e)
+      .union(vertices.select(col("id").as("src"), col("id").as("dst")))
+      .repartition(col("src"))))
+  }
+
+  /** One min-label step: comp(v) = min over v's neighbours ∪ v. */
+  private def ccStep(undirected: DataFrame, comp: DataFrame): DataFrame =
+    superstep(undirected, comp, col("comp"), min(_).as("comp"))
 
   /** Deterministic PageRank: rank_{t+1}(v) = reset + damp * Σ_{u→v}
     * rank_t(u) / outdeg(u), fixed iteration count, dangling mass
@@ -28,60 +135,26 @@ object GraphOps {
   def pageRank(edges: DataFrame, iterations: Int,
                reset: Double = 0.15, damp: Double = 0.85,
                scope: CacheScope = CacheScope.global): DataFrame = {
-    // vertices is re-joined every iteration — checkpoint it or each
-    // iteration re-runs the distinct over the edge set.
-    // The input lineage is referenced 4× below (vertices union twice,
-    // outDeg, withInv), and every iteration's logical plan would embed
-    // it again — localCheckpoint materializes it ONCE and replaces the
-    // lineage with a LogicalRDD, so iteration plans stay constant-size
-    // (a persist alone caches execution but Catalyst still re-analyzes
-    // the full tree, which doubles per iteration: comp_t is referenced
-    // twice by comp_{t+1}).
+    // The input lineage is referenced 4× by the setup (vertices union
+    // twice, out-degree, fractions), and every iteration's logical plan
+    // would embed it again — localCheckpoint materializes it ONCE and
+    // replaces the lineage with a LogicalRDD, so iteration plans stay
+    // constant-size (a persist alone caches execution but Catalyst
+    // still re-analyzes the full tree).
     // The checkpoints do NOT carry their hash partitioning: under AQE
     // the checkpointed plan is an AdaptiveSparkPlanExec, which reports
     // UnknownPartitioning(0), so the LogicalRDD of `repartition(src)`
     // records no partitioning and every iteration's rank⋈edge join
     // plans an exchange or a broadcast. The `repartition(src)` only
     // spreads the edges evenly.
-    val e = scope.checkpoint(edges)
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    // 1/outdeg as IEEE double (engine-independent), fixed per vertex
-    val withInv = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("inv_outdeg"))
-    val edgesCached = scope.checkpoint(withInv.repartition(col("src")))
-    // zero-contribution rows for every vertex replace the per-iteration
-    // `vertices LEFT JOIN summed` that re-attached rank-less vertices:
-    // summing an extra 0 is a no-op for receivers and yields
-    // reset + damp*0 for vertices with no inflow — identical values,
-    // one fewer join per iteration (the aggregate's shuffle IS the
-    // message-passing step and is the only one left).
-    val zeroContribs = scope.checkpoint(
-      vertices.select(col("id"), lit(0.0).as("contrib")))
-    var ranks = vertices.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = edgesCached.join(ranks, edgesCached("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          (col("rank") * col("inv_outdeg")).as("contrib"))
-        .unionByName(zeroContribs)
-      // decimal sum is partition-order-free; the decimal→double hop
-      // goes through an exact integer (×1e9, round, BIGINT) because a
-      // direct decimal→double cast is correctly rounded in the JVM but
-      // 1-ulp off in engines that convert via (int128→double)/10^scale
-      // — that ulp compounds across iterations on hub vertices
-      // rank_t is referenced exactly ONCE per iteration (the contribs
-      // join), so the plan grows LINEARLY — no lineage truncation
-      // needed. Leaving the chain lazy turns the loop into one job of
-      // pipelined shuffle stages instead of `iterations` blocking
-      // materialization jobs (each checkpoint was a full pass +
-      // block-manager write + scheduler round trip).
-      ranks = contribs.groupBy(col("id"))
-        .agg((lit(reset) + lit(damp) *
-          (round(sum(col("contrib").cast("decimal(27,15)")) * 1000000000L)
-            .cast("long").cast("double") / 1.0e9)).as("rank"))
+    val (vertices, frac, zeros) = rankEdges(scope.checkpoint(edges), scope)
+    // rank_t is referenced exactly ONCE per iteration, so the plan
+    // grows LINEARLY — no lineage truncation needed, and the loop runs
+    // as one job of pipelined shuffle stages instead of `iterations`
+    // blocking materialization jobs.
+    (1 to iterations).foldLeft(vertices.select(col("id"), lit(1.0).as("rank"))) {
+      (ranks, _) => rankStep(frac, ranks, zeros, reset, damp)
     }
-    ranks
   }
 
   /** Edge-weighted PageRank: rank_{t+1}(v) = reset + damp ·
@@ -107,26 +180,10 @@ object GraphOps {
     require(badW == 0,
       "pageRankWeighted: edge weights must be positive non-null " +
         "(found a w <= 0 or NULL edge); filter or reweight upstream")
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val wSum = e.groupBy(col("src")).agg(sum(col("w")).as("wsum"))
-    val withFrac = e.join(wSum, "src")
-      .select(col("src"), col("dst"),
-        (col("w").cast("double") / col("wsum").cast("double")).as("frac"))
-    val edgesCached = scope.checkpoint(withFrac.repartition(col("src")))
-    val zeroContribs = scope.checkpoint(
-      vertices.select(col("id"), lit(0.0).as("contrib")))
-    var ranks = vertices.select(col("id"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = edgesCached.join(ranks, edgesCached("src") === ranks("id"))
-        .select(col("dst").as("id"), (col("rank") * col("frac")).as("contrib"))
-        .unionByName(zeroContribs)
-      ranks = contribs.groupBy(col("id"))
-        .agg((lit(reset) + lit(damp) *
-          (round(sum(col("contrib").cast("decimal(27,15)")) * 1000000000L)
-            .cast("long").cast("double") / 1.0e9)).as("rank"))
+    val (vertices, frac, zeros) = rankEdges(e, scope, weighted = true)
+    (1 to iterations).foldLeft(vertices.select(col("id"), lit(1.0).as("rank"))) {
+      (ranks, _) => rankStep(frac, ranks, zeros, reset, damp)
     }
-    ranks
   }
 
   /** Connected components by iterative min-label propagation over the
@@ -136,38 +193,20 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame, iterations: Int,
                           scope: CacheScope = CacheScope.global): DataFrame = {
-    // input lineage referenced twice by the symmetric union, and
-    // comp_t twice by iteration t+1 (propagation source and join
-    // target) — without truncation both the EXECUTION (recompute per
-    // reference) and the LOGICAL PLAN (tree doubles per iteration,
-    // re-analyzed even when execution is cached) blow up 2^iterations.
-    // localCheckpoint cuts both: one materialization, constant-size
-    // iteration plans. As in pageRank, the checkpointed undirected
-    // edges record no partitioning under AQE, so the propagation join
-    // plans an exchange or a broadcast per iteration besides the
-    // min-aggregate's shuffle.
-    val e = scope.checkpoint(edges)
-    // self-loops make the recurrence min over neighbors ∪ self, so
-    // comp_t is referenced exactly ONCE per iteration (the propagation
-    // join) instead of twice (join source + "keep own label" join
-    // target). That turns the logical plan from doubling per iteration
-    // into linear growth — no per-iteration lineage truncation, and
-    // the whole loop executes as ONE job of pipelined shuffle stages
-    // (same trick as pageRank; values are identical:
-    // min(comp(v), min_nbr comp) == min over nbrs∪self).
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val undirected = scope.checkpoint(e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .union(vertices.select(col("id").as("src"), col("id").as("dst")))
-      .repartition(col("src")))
-    var comp = vertices.select(col("id"), col("id").as("comp"))
-    for (_ <- 1 to iterations) {
-      comp = undirected.join(comp, undirected("src") === comp("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("comp")).as("comp"))
+    // The input lineage is referenced twice by the symmetric union;
+    // localCheckpoint materializes it once and keeps iteration plans
+    // constant-size. With the self-loops of [[ccEdges]] comp_t is
+    // referenced once per iteration, so the plan grows linearly — no
+    // per-iteration lineage truncation, and the whole loop executes as
+    // ONE job of pipelined shuffle stages (same trick as pageRank). As
+    // in pageRank, the checkpointed undirected edges record no
+    // partitioning under AQE, so the propagation join plans an
+    // exchange or a broadcast per iteration besides the min-aggregate's
+    // shuffle.
+    val (vertices, undirected) = ccEdges(scope.checkpoint(edges), scope)
+    (1 to iterations).foldLeft(vertices.select(col("id"), col("id").as("comp"))) {
+      (comp, _) => ccStep(undirected, comp)
     }
-    comp
   }
 
   /** Synchronous label propagation (community detection), `iterations`
@@ -181,7 +220,8 @@ object GraphOps {
     * Plan shape per round: ONE join (labels against the checkpointed
     * undirected edge list, same discipline as pageRank) and TWO
     * map-side-combined hash aggregates — the (vertex, label) vote
-    * count, then the per-vertex argmax. The
+    * count, then the per-vertex argmax. The two aggregates are keyed
+    * differently, so the round is not one [[superstep]]. The
     * argmax is `max_by` over (count, −label) — an aggregate, never a
     * rank-1 window, so a hub's votes combine map-side instead of
     * sorting on one reducer. Labels are referenced once per round, so
@@ -192,12 +232,8 @@ object GraphOps {
   def labelPropagation(edges: DataFrame, iterations: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.checkpoint(edges)
-    val vertices = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val undirected = scope.checkpoint(e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src")))
-    var lbl = vertices.select(col("id"), col("id").as("lbl"))
+    val undirected = scope.checkpoint(symmetric(e).repartition(col("src")))
+    var lbl = vertexIds(e).select(col("id"), col("id").as("lbl"))
     for (_ <- 1 to iterations) {
       val votes = undirected.join(lbl, undirected("src") === lbl("id"))
         .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -223,6 +259,33 @@ object GraphOps {
     weightedSssp(edges.select(col("src"), col("dst"), lit(1L).as("w")),
       sources, iterations, scope)
 
+  /** The level loop of the bounded path expanders ([[kHopPaths]],
+    * [[kCheapestPaths]]): hop h is ONE equi-join of the frontier (paths
+    * of h−1 hops, keyed by their end vertex) against the src-spread
+    * edges, dropping every extension that revisits a vertex. Weighted
+    * paths also carry `cost`, the sum of the edges' long `w`. Each level
+    * is checkpointed, so the plan stays linear in `maxHops`. Output:
+    * every level's paths tagged with `hops`.
+    */
+  private def expandPaths(edges: DataFrame, sources: DataFrame, maxHops: Int,
+                          weighted: Boolean, scope: CacheScope): DataFrame = {
+    def ifWeighted(c: => Column): Seq[Column] = if (weighted) Seq(c) else Nil
+    val e = scope.checkpoint(
+      edges.select(Seq(col("src"), col("dst")) ++ ifWeighted(col("w").cast("long").as("w")): _*)
+        .repartition(col("src")))
+    var frontier = sources.select(Seq(col("id").as("start"), col("id").as("end"),
+      array(col("id")).as("path")) ++ ifWeighted(lit(0L).as("cost")): _*)
+    (1 to maxHops).map { h =>
+      frontier = scope.checkpoint(
+        frontier.join(e, frontier("end") === e("src"))
+          .filter(!array_contains(col("path"), col("dst")))
+          .select(Seq(col("start"), col("dst").as("end"),
+            concat(col("path"), array(col("dst"))).as("path")) ++
+            ifWeighted((col("cost") + col("w")).as("cost")): _*))
+      frontier.withColumn("hops", lit(h))
+    }.reduce(_ unionByName _)
+  }
+
   /** K-CHEAPEST simple paths within a hop bound: enumerate every
     * simple directed path of 1..maxHops over weighted edges
     * (src, dst, w: long), then keep the `k` cheapest per
@@ -242,25 +305,10 @@ object GraphOps {
                      maxHops: Int, k: Int,
                      scope: CacheScope = CacheScope.global): DataFrame = {
     require(maxHops >= 1 && k >= 1, "maxHops and k must be >= 1")
-    val e = scope.checkpoint(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w"))
-        .repartition(col("src")))
-    var frontier = sources.select(col("id").as("start"),
-      col("id").as("end"), array(col("id")).as("path"),
-      lit(0L).as("cost"))
-    val levels = (1 to maxHops).map { h =>
-      frontier = scope.checkpoint(
-        frontier.join(e, frontier("end") === e("src"))
-          .filter(!array_contains(col("path"), col("dst")))
-          .select(col("start"), col("dst").as("end"),
-            concat(col("path"), array(col("dst"))).as("path"),
-            (col("cost") + col("w")).as("cost")))
-      frontier.withColumn("hops", lit(h))
-    }
-    val all = levels.reduce(_ unionByName _)
     val w = Window.partitionBy(col("start"), col("end"))
       .orderBy(col("cost").asc, col("path").asc)
-    all.withColumn("rank", row_number().over(w))
+    expandPaths(edges, sources, maxHops, weighted = true, scope)
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("start"), col("end"), col("hops"), col("cost"),
         col("path"), col("rank"))
@@ -290,19 +338,7 @@ object GraphOps {
   def kHopPaths(edges: DataFrame, sources: DataFrame, maxHops: Int,
                 scope: CacheScope = CacheScope.global): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    val e = scope.checkpoint(
-      edges.select(col("src"), col("dst")).repartition(col("src")))
-    var frontier = sources.select(col("id").as("start"),
-      col("id").as("end"), array(col("id")).as("path"))
-    val levels = (1 to maxHops).map { h =>
-      frontier = scope.checkpoint(
-        frontier.join(e, frontier("end") === e("src"))
-          .filter(!array_contains(col("path"), col("dst")))
-          .select(col("start"), col("dst").as("end"),
-            concat(col("path"), array(col("dst"))).as("path")))
-      frontier.withColumn("hops", lit(h))
-    }
-    levels.reduce(_ unionByName _)
+    expandPaths(edges, sources, maxHops, weighted = false, scope)
       .select(col("start"), col("end"), col("hops"), col("path"))
   }
 
@@ -332,11 +368,9 @@ object GraphOps {
       .repartition(col("src")))
     // distinct() guards against duplicate source ids feeding duplicate
     // seed rows into the first min-aggregate.
-    var dist = sources.select(col("id")).distinct().withColumn("dist", lit(0L))
-    for (_ <- 1 to iterations) {
-      dist = hop.join(dist, hop("src") === dist("id"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("dist") + col("w")).as("dist"))
+    val seeds = sources.select(col("id")).distinct().withColumn("dist", lit(0L))
+    val dist = (1 to iterations).foldLeft(seeds) { (d, _) =>
+      superstep(hop, d, col("dist") + col("w"), min(_).as("dist"))
     }
     vertices.join(dist, Seq("id"), "left").select(col("id"), col("dist"))
   }
@@ -358,6 +392,32 @@ object GraphOps {
     (state, Option(obs.get("n")).fold(0L)(_.asInstanceOf[Long]))
   }
 
+  /** The convergence loop of the converged forms. From the
+    * checkpointed state `start` (`pending` rows signalled), it runs
+    * windows of up to `window` steps until a window ends with no row
+    * where `signal` holds, or until `maxIterations` steps have run (the
+    * runaway bound). `round(state, steps)` builds one window of `steps`
+    * steps as one lazy plan — the window pipelines as one job of
+    * shuffle stages — and returns the window's new state joined with
+    * whatever `signal` compares it against. Each window ends in one
+    * [[observedRound]], whose checkpoint job also counts the signal;
+    * the new state keeps `start`'s columns.
+    */
+  private def converge(start: DataFrame, window: Int, maxIterations: Int,
+                       signal: Column, scope: CacheScope, pending: Long = 1L)
+                      (round: (DataFrame, Int) => DataFrame): DataFrame = {
+    val cols = start.columns.toSeq.map(col)
+    var (state, n, iter) = (start, pending, 0)
+    while (n > 0L && iter < maxIterations) {
+      val steps = math.min(window, maxIterations - iter)
+      val (next, signalled) = observedRound(round(state, steps), signal, scope)
+      state = next.select(cols: _*)
+      n = signalled
+      iter += steps
+    }
+    state
+  }
+
   /** Convergence-safe connected components: same min-label propagation
     * as [[connectedComponents]], iterated until NO label changed in a
     * round (counted by the round's checkpoint job, see
@@ -368,7 +428,7 @@ object GraphOps {
     * oracle replay (a data-dependent iteration count cannot be
     * mirrored in static SQL).
     *
-    * Each round's labels are checkpointed: without materialization
+    * Each window's labels are checkpointed: without materialization
     * round t+1 would recompute rounds 1..t.
     */
   def connectedComponentsConverged(edges: DataFrame, maxIterations: Int = 50,
@@ -378,40 +438,17 @@ object GraphOps {
     // g_connected_components 2.57 s at 256k vs 2.18 s at 1m, g_mis
     // 6.65 vs 5.40).
     graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-    val e = scope.checkpoint(edges)
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val undirected = scope.checkpoint(e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .union(vertices.select(col("id").as("src"), col("id").as("dst")))
-      .repartition(col("src")))
-    var comp = scope.checkpoint(vertices.select(col("id"), col("id").as("comp")))
-    var changed = 1L
-    var iter = 0
-    // Windowed check (same cadence as pageRankConverged): labels only
-    // DECREASE, so "no vertex changed across the whole window" is
-    // EXACTLY "no step in the window changed anything" — the window
-    // check against the window-start state is exact, and 3 min-
-    // propagation steps pipeline as one lazy job between checkpoints.
-    val probeEvery = 3
-    while (changed > 0L && iter < maxIterations) {
-      val steps = math.min(probeEvery, maxIterations - iter)
-      val prev = comp
-      var cur = comp
-      for (_ <- 1 to steps) {
-        cur = undirected.join(cur, undirected("src") === cur("id"))
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("comp")).as("comp"))
+      val (vertices, undirected) = ccEdges(scope.checkpoint(edges), scope)
+      // Windows of 3 steps (the pageRankConverged cadence): labels only
+      // DECREASE, so "no vertex changed across the whole window" is
+      // EXACTLY "no step in the window changed anything" — the check
+      // against the window-start state is exact, and "any label
+      // strictly smaller" is "changed".
+      converge(scope.checkpoint(vertices.select(col("id"), col("id").as("comp"))),
+        window = 3, maxIterations, col("comp") < col("prev"), scope) { (comp, steps) =>
+        (1 to steps).foldLeft(comp)((cur, _) => ccStep(undirected, cur))
+          .join(comp.select(col("id"), col("comp").as("prev")), "id")
       }
-      // labels only decrease, so "any row strictly smaller" == "changed"
-      val (next, n) = observedRound(
-        cur.join(prev.select(col("id"), col("comp").as("prev")), "id"),
-        col("comp") < col("prev"), scope)
-      changed = n
-      comp = next.select(col("id"), col("comp"))
-      iter += steps
-    }
-    comp
     }
   }
 
@@ -435,9 +472,7 @@ object GraphOps {
                            iterations: Int,
                            reset: Double = 0.15, damp: Double = 0.85,
                            scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.checkpoint(edges)
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
+    val (vertices, frac, zeros) = rankEdges(scope.checkpoint(edges), scope)
     val srcSet = sources.select(col("id")).distinct()
       .withColumn("__s", lit(1))
     val resetVec = scope.checkpoint(
@@ -446,27 +481,14 @@ object GraphOps {
           when(col("__s").isNotNull, lit(reset)).otherwise(lit(0.0))
             .as("reset_w"))
         .repartition(col("id")))
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val withInv = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("inv_outdeg"))
-    val edgesCached = scope.checkpoint(withInv.repartition(col("src")))
-    val zeroContribs = scope.checkpoint(
-      vertices.select(col("id"), lit(0.0).as("contrib")))
-    var ranks = resetVec.select(col("id"),
+    val start = resetVec.select(col("id"),
       when(col("reset_w") > 0.0, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contribs = edgesCached.join(ranks, edgesCached("src") === ranks("id"))
-        .select(col("dst").as("id"),
-          (col("rank") * col("inv_outdeg")).as("contrib"))
-        .unionByName(zeroContribs)
-      ranks = contribs.groupBy(col("id"))
-        .agg((lit(damp) *
-          (round(sum(col("contrib").cast("decimal(27,15)")) * 1000000000L)
-            .cast("long").cast("double") / 1.0e9)).as("inflow"))
+    (1 to iterations).foldLeft(start) { (ranks, _) =>
+      superstep(frac, ranks, col("rank") * col("frac"),
+        m => (lit(damp) * qsum(m)).as("inflow"), Some(zeros))
         .join(resetVec, "id")
         .select(col("id"), (col("reset_w") + col("inflow")).as("rank"))
     }
-    ranks
   }
 
   /** Convergence-safe PageRank: same recurrence (and the same exact
@@ -479,69 +501,39 @@ object GraphOps {
     * stays for oracle replay (a data-dependent iteration count cannot
     * be mirrored in static SQL).
     *
-    * Each round's ranks are checkpointed: rank_t is referenced twice
-    * (contribution join + delta check) — the price is one blocking
-    * materialization per round, the same trade the CC/k-core converged
-    * forms make. Termination is guaranteed even for tiny `tol`: the
-    * damped recurrence contracts deltas by `damp` per round and ranks
-    * live on the 1e-9 quantization grid, so the sequence reaches an
-    * exact fixpoint.
+    * Each window's ranks are checkpointed: the state is referenced
+    * twice (contribution join + delta check) — the price is one
+    * blocking materialization per window, the same trade the CC/k-core
+    * converged forms make. Termination is guaranteed even for tiny
+    * `tol`: the damped recurrence contracts deltas by `damp` per round
+    * and ranks live on the 1e-9 quantization grid, so the sequence
+    * reaches an exact fixpoint.
     */
   def pageRankConverged(edges: DataFrame, tol: Double = 1e-7,
                         maxIterations: Int = 50,
                         reset: Double = 0.15, damp: Double = 0.85,
                         scope: CacheScope = CacheScope.global): DataFrame = {
     require(tol > 0.0 && maxIterations >= 1)
-    val e = scope.checkpoint(edges)
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct())
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val withInv = e.join(outDeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("inv_outdeg"))
-    val edgesCached = scope.checkpoint(withInv.repartition(col("src")))
-    val zeroContribs = scope.checkpoint(
-      vertices.select(col("id"), lit(0.0).as("contrib")))
-    var ranks = scope.checkpoint(vertices.select(col("id"), lit(1.0).as("rank")))
-    var moved = 1L
-    var iter = 0
-    // Check cadence: convergence is checked every `probeEvery`
-    // iterations, so a window of 3 recurrence steps runs as ONE job
-    // of pipelined shuffle stages (each rank_t is referenced once —
-    // linear lazy chain, the fixed-iteration pageRank discipline)
-    // instead of 3 blocking checkpoint jobs. A tol-fixpoint stays a
-    // fixpoint under extra iterations (the recurrence is a
-    // contraction), so overshooting by ≤2 steps changes nothing the
-    // certificate or oracle can see; prev is joined into the
-    // window-end checkpoint, whose job also counts the moved vertices.
-    val probeEvery = 3
-    while (moved > 0L && iter < maxIterations) {
-      val steps = math.min(probeEvery, maxIterations - iter)
-      // the stopping criterion stays the SINGLE-step delta (what the
-      // certificate's residual bound assumes): compare the window's
-      // last step against the state just before it — beforeLast is
-      // referenced twice (inside cur's plan and by the delta join),
-      // which at window size 3 keeps plans bounded
-      var beforeLast = ranks
-      var cur = ranks
-      for (_ <- 1 to steps) {
-        beforeLast = cur
-        val contribs = edgesCached.join(cur, edgesCached("src") === cur("id"))
-          .select(col("dst").as("id"),
-            (col("rank") * col("inv_outdeg")).as("contrib"))
-          .unionByName(zeroContribs)
-        cur = contribs.groupBy(col("id"))
-          .agg((lit(reset) + lit(damp) *
-            (round(sum(col("contrib").cast("decimal(27,15)")) * 1000000000L)
-              .cast("long").cast("double") / 1.0e9)).as("rank"))
-      }
-      val (next, n) = observedRound(
-        cur.join(beforeLast.select(col("id"), col("rank").as("prev")), "id"),
-        abs(col("rank") - col("prev")) > tol, scope)
-      moved = n
-      ranks = next.select(col("id"), col("rank"))
-      iter += steps
+    val (vertices, frac, zeros) = rankEdges(scope.checkpoint(edges), scope)
+    // Windows of 3 recurrence steps run as ONE job of pipelined
+    // shuffle stages instead of 3 blocking checkpoint jobs. A
+    // tol-fixpoint stays a fixpoint under extra iterations (the
+    // recurrence is a contraction), so overshooting by ≤2 steps changes
+    // nothing the certificate or oracle can see.
+    converge(scope.checkpoint(vertices.select(col("id"), lit(1.0).as("rank"))),
+      window = 3, maxIterations, abs(col("rank") - col("prev")) > tol, scope) {
+      (ranks, steps) =>
+        // the stopping criterion stays the SINGLE-step delta (what the
+        // certificate's residual bound assumes): compare the window's
+        // last step against the state just before it — beforeLast is
+        // referenced twice (inside the step's plan and by the delta
+        // join), which at window size 3 keeps plans bounded
+        val beforeLast = (1 until steps).foldLeft(ranks) {
+          (cur, _) => rankStep(frac, cur, zeros, reset, damp)
+        }
+        rankStep(frac, beforeLast, zeros, reset, damp)
+          .join(beforeLast.select(col("id"), col("rank").as("prev")), "id")
     }
-    ranks
   }
 
   // ---------------------------------------------------------------
@@ -549,8 +541,8 @@ object GraphOps {
   // data-dependent number of rounds, which no static SQL can unroll —
   // so their CORRECTNESS entries check the FIXPOINT PROPERTY instead
   // of the trajectory. Each certificate recomputes one application of
-  // the recurrence from the OUTPUT itself (same quantization as the
-  // engine) and emits rows whose correct values are knowable to the
+  // the recurrence from the OUTPUT itself (the engine's own step) and
+  // emits rows whose correct values are knowable to the
   // oracle without replaying: the vertex list (graph-derived) and
   // all-true / all-zero violation columns. An under-converged run
   // cannot reproduce them — the residual check fails on exactly the
@@ -559,8 +551,8 @@ object GraphOps {
 
   /** Per-vertex PageRank fixpoint certificate over `ranks` (the (id,
     * rank) output of [[pageRankConverged]]): recompute expected(v) =
-    * reset + damp·Σ rank(u)/outdeg(u) with the engine's exact decimal
-    * quantization and flag |rank − expected| within the contraction
+    * reset + damp·Σ rank(u)/outdeg(u) with the engine's own step
+    * ([[rankStep]]) and flag |rank − expected| within the contraction
     * bound. At a tol-fixpoint the residual of vertex v is at most
     * damp·(in_mass(v)·tol + q) where in_mass(v) = Σ_{u→v} 1/outdeg(u)
     * (each in-neighbor moved ≤ tol in the final round) and q = 1e-9 is
@@ -572,23 +564,12 @@ object GraphOps {
                           reset: Double = 0.15, damp: Double = 0.85,
                           scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")))
-    val vertices = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id"))).distinct()
-    val outDeg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val withInv = scope.persist(e.join(outDeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("outdeg")).as("inv_outdeg")))
-    val contribs = withInv
-      .join(ranks.select(col("id").as("src"), col("rank")), "src")
-      .select(col("dst").as("id"),
-        (col("rank") * col("inv_outdeg")).as("contrib"))
-      .unionByName(vertices.select(col("id"), lit(0.0).as("contrib")))
-    val expected = contribs.groupBy(col("id"))
-      .agg((lit(reset) + lit(damp) *
-        (round(sum(col("contrib").cast("decimal(27,15)")) * 1000000000L)
-          .cast("long").cast("double") / 1.0e9)).as("expected"))
-    val inMass = withInv.groupBy(col("dst").as("id"))
-      .agg(sum(col("inv_outdeg")).as("in_mass"))
-    ranks.join(expected, "id")
+    val frac = scope.persist(fracEdges(e))
+    val expected = rankStep(frac, ranks.select(col("id"), col("rank")),
+      vertexIds(e).select(col("id"), lit(0.0).as("contrib")), reset, damp)
+    val inMass = frac.groupBy(col("dst").as("id"))
+      .agg(sum(col("frac")).as("in_mass"))
+    ranks.join(expected.select(col("id"), col("rank").as("expected")), "id")
       .join(inMass, Seq("id"), "left")
       .select(col("id"),
         (abs(col("rank") - col("expected")) <=
@@ -610,11 +591,9 @@ object GraphOps {
   def connectedComponentsCertificate(edges: DataFrame, comp: DataFrame,
                                      scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")))
-    val und = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     val labels = scope.persist(comp.select(col("id"), col("comp")))
-    val nbrMin = und
-      .join(labels.select(col("id").as("src"), col("comp").as("c")), "src")
-      .groupBy(col("dst").as("id")).agg(min(col("c")).as("nbr_min"))
+    val nbrMin = superstep(symmetric(e), labels.select(col("id"), col("comp").as("c")),
+      col("c"), min(_).as("nbr_min"))
     val roots = labels.filter(col("id") === col("comp"))
       .select(col("comp"), lit(true).as("root_ok"))
     labels.join(nbrMin, Seq("id"), "left")
@@ -638,10 +617,7 @@ object GraphOps {
     */
   def kCoreCertificate(edges: DataFrame, core: DataFrame, k: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct())
+    val e = scope.persist(canonical(edges))
     val surv = scope.persist(core.select(col("id"), col("degree")))
     val induced = e
       .join(surv.select(col("id").as("a")), Seq("a"), "left_semi")
@@ -697,11 +673,12 @@ object GraphOps {
     * graphs (boilerplate-product clusters, spam rings) where
     * [[triangleCount]] is the density METRIC and this is the density
     * EXTRACTOR. Fixed `iterations` so the oracle can replay the
-    * unrolled peel; callers needing guaranteed convergence run a spec
-    * probe (one more round must change nothing — peeling is monotone,
-    * so a fixed point is THE k-core). Each round is one degree
+    * unrolled peel; callers needing guaranteed convergence use
+    * [[kCoreConverged]] (peeling is monotone, so a round that removes
+    * nothing marks THE k-core). Each round is one degree
     * aggregate + two semi-join filters, checkpointed so round t+1
-    * does not recompute rounds 1..t.
+    * does not recompute rounds 1..t. A peel, not message passing, so
+    * the round is not a [[superstep]].
     *
     * Input treated as undirected; self-loops dropped, edges
     * canonicalized + distinct. Returns surviving (id, degree).
@@ -719,10 +696,7 @@ object GraphOps {
     // runs at Spark's 1m default; the terminal degree aggregate (lazy,
     // runs at the caller's action) keeps the session floor.
     graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-      var e = scope.checkpoint(edges.filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct())
+      var e = scope.checkpoint(canonical(edges))
       for (_ <- 1 to iterations) {
         val keep = degrees(e).filter(col("d") >= k).select(col("id"))
         e = scope.checkpoint(e
@@ -732,6 +706,15 @@ object GraphOps {
       }
       degrees(e).withColumnRenamed("d", "degree")
     }
+  }
+
+  /** The symmetric adjacency (v, n) of the canonical undirected edge
+    * set: one row per directed neighbour pair.
+    */
+  private def adjacency(edges: DataFrame): DataFrame = {
+    val canon = canonical(edges)
+    canon.select(col("a").as("v"), col("b").as("n"))
+      .union(canon.select(col("b").as("v"), col("a").as("n")))
   }
 
   /** Convergence-safe k-core: same peeling recurrence as [[kCore]],
@@ -747,10 +730,11 @@ object GraphOps {
     * (id, deg, alive) over a checkpointed symmetric adjacency, and in
     * each round only the vertices peeled that round (alive, deg < k)
     * send −1 to their neighbours — one degree aggregate per round,
-    * over the frontier's edges only. The round's checkpoint job also
-    * counts the next round's frontier ([[observedRound]]), so an empty
-    * frontier ends the loop without a probe job. After the same number
-    * of rounds the survivors and their degrees equal [[kCore]]'s.
+    * over the frontier's edges only. The rounds run through
+    * [[converge]] one step per window: each round's checkpoint job
+    * also counts the next round's frontier, so an empty frontier ends
+    * the loop without a probe job. After the same number of rounds
+    * the survivors and their degrees equal [[kCore]]'s.
     *
     * Returns surviving (id, degree); on a runaway-bound exit the
     * non-convergence is visible as degree < k rows in the output.
@@ -762,38 +746,26 @@ object GraphOps {
     // checkpoint actions run at Spark's 1m floor (32-core A/B via
     // g_kcore_cert: 4.26 s at 256k vs 3.02 s at 1m).
     graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-      val canon = edges.filter(col("src") =!= col("dst"))
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .distinct()
-      // symmetric adjacency: one row per directed neighbour pair
-      val adj = scope.checkpoint(
-        canon.select(col("a").as("v"), col("b").as("n"))
-          .union(canon.select(col("b").as("v"), col("a").as("n"))))
+      val adj = scope.checkpoint(adjacency(edges))
       val frontier = col("alive") && col("deg") < k
-      var (state, peeling) = observedRound(
+      val (start, peeling) = observedRound(
         adj.groupBy(col("v").as("id")).agg(count(lit(1)).as("deg"))
           .withColumn("alive", lit(true)), frontier, scope)
-      var iter = 0
-      while (peeling > 0L && iter < maxIterations) {
-        val dec = adj.join(state.filter(frontier).select(col("id").as("n")), "n")
-          .groupBy(col("v").as("id")).agg(count(lit(1)).as("dec"))
-        // both columns read the round's input deg: a vertex is peeled
-        // on the degree it entered the round with
-        val (next, n) = observedRound(
+      val core = converge(start, window = 1, maxIterations, frontier, scope, peeling) {
+        (state, _) =>
+          val dec = adj.join(state.filter(frontier).select(col("id").as("n")), "n")
+            .groupBy(col("v").as("id")).agg(count(lit(1)).as("dec"))
+          // both columns read the round's input deg: a vertex is peeled
+          // on the degree it entered the round with
           state.join(dec, Seq("id"), "left")
             .select(col("id"),
               (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"),
-              (col("alive") && col("deg") >= k).as("alive")),
-          frontier, scope)
-        state = next
-        peeling = n
-        iter += 1
+              (col("alive") && col("deg") >= k).as("alive"))
       }
       // a survivor whose neighbours all peeled in the last round has
       // no edge left; like [[kCore]], list the surviving edge set's
       // vertices (only reachable on a runaway-bound exit, as k >= 1)
-      state.filter(col("alive") && col("deg") > 0)
+      core.filter(col("alive") && col("deg") > 0)
         .select(col("id"), col("deg").as("degree"))
     }
   }
@@ -817,10 +789,7 @@ object GraphOps {
     */
   def triangleCount(edges: DataFrame,
                     scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct())
+    val e = scope.persist(canonical(edges))
     val deg = scope.persist(
       e.select(col("a").as("id")).union(e.select(col("b").as("id")))
         .groupBy(col("id")).agg(count(lit(1)).as("d")))
@@ -872,48 +841,39 @@ object GraphOps {
            scope: CacheScope = CacheScope.global): DataFrame = {
     // the two message directions join on different edge keys (src for
     // the auth pass, dst for the hub pass), so keep TWO checkpointed
-    // copies, each spread on its join key. Neither checkpoint records
-    // that partitioning under AQE (see [[pageRank]]), so each
+    // copies, each spread on its join key; the hub pass sends along the
+    // dst-spread copy reversed. Neither checkpoint records that
+    // partitioning under AQE (see [[pageRank]]), so each
     // half-iteration's join plans an exchange or a broadcast besides
     // the message aggregate.
-    // eByDst and vertices derive FROM the materialized eBySrc (not a
-    // third checkpointed copy of the distinct edge set): one fewer
-    // materialization up front, and the distinct still runs once.
+    // The dst-spread copy and vertices derive FROM the materialized
+    // eBySrc (not a third checkpointed copy of the distinct edge set):
+    // one fewer materialization up front, and the distinct still runs
+    // once.
     val eBySrc = scope.checkpoint(edges.select(col("src"), col("dst"))
       .distinct().repartition(col("src")))
-    val eByDst = scope.checkpoint(eBySrc.repartition(col("dst")))
-    val vertices = scope.checkpoint(eBySrc.select(col("src").as("id"))
-      .union(eBySrc.select(col("dst").as("id"))).distinct())
-    // decimal sum → exact integer grid → double (the pageRank hop)
-    def qsum(c: Column): Column =
-      round(sum(c.cast("decimal(27,15)")) * 1000000000L)
-        .cast("long").cast("double") / 1.0e9
+    val reversed = scope.checkpoint(eBySrc.repartition(col("dst")))
+      .select(col("dst").as("src"), col("src").as("dst"))
+    val vertices = scope.checkpoint(vertexIds(eBySrc))
     // IEEE division of two grid doubles, re-quantized to the grid
     def qdiv(n: Column, d: Column): Column =
       (round(n / d * 1000000000L).cast("long").cast("double") / 1.0e9)
     val zeroV = scope.checkpoint(vertices.select(col("id"), lit(0.0).as("v")))
+    // one half-iteration: the message superstep, then L1 normalization.
+    // The raw sums are referenced twice (normalize + L1 total), so they
+    // are checkpointed — plans stay constant-size per iteration (the
+    // connectedComponents discipline) instead of doubling
+    def half(e: DataFrame, score: DataFrame): DataFrame = {
+      val raw = scope.checkpoint(
+        superstep(e, score, col("v"), qsum(_).as("v"), Some(zeroV)))
+      raw.crossJoin(broadcast(raw.agg(qsum(col("v")).as("tot"))))
+        .select(col("id"), qdiv(col("v"), col("tot")).as("v"))
+    }
     var hub = vertices.select(col("id"), lit(1.0).as("v"))
     var auth = zeroV
     for (_ <- 1 to iterations) {
-      // raw sums are referenced twice each (normalize + L1 total), so
-      // checkpoint them — plans stay constant-size per iteration (the
-      // connectedComponents discipline), instead of doubling
-      val authRaw = scope.checkpoint(
-        eBySrc.join(hub, eBySrc("src") === hub("id"))
-        .select(col("dst").as("id"), col("v"))
-        .unionByName(zeroV)
-        .groupBy(col("id")).agg(qsum(col("v")).as("v")))
-      val authTot = authRaw.agg(qsum(col("v")).as("tot"))
-      auth = authRaw.crossJoin(broadcast(authTot))
-        .select(col("id"), qdiv(col("v"), col("tot")).as("v"))
-      val hubRaw = scope.checkpoint(
-        eByDst.join(auth, eByDst("dst") === auth("id"))
-        .select(col("src").as("id"), col("v"))
-        .unionByName(zeroV)
-        .groupBy(col("id")).agg(qsum(col("v")).as("v")))
-      val hubTot = hubRaw.agg(qsum(col("v")).as("tot"))
-      hub = hubRaw.crossJoin(broadcast(hubTot))
-        .select(col("id"), qdiv(col("v"), col("tot")).as("v"))
+      auth = half(eBySrc, hub)
+      hub = half(reversed, auth)
     }
     hub.select(col("id"), col("v").as("hub"))
       .join(auth.select(col("id"), col("v").as("auth")), Seq("id"), "full")
@@ -1120,14 +1080,7 @@ object GraphOps {
     // winner/active/adj checkpoints run at Spark's 1m floor (32-core
     // A/B: g_mis 6.65 s at 256k vs 5.40 s at 1m).
     graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-    val canon = edges.filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    // symmetric adjacency: one row per directed neighbor pair
-    var adj = scope.checkpoint(
-      canon.select(col("a").as("v"), col("b").as("n"))
-        .union(canon.select(col("b").as("v"), col("a").as("n"))))
+    var adj = scope.checkpoint(adjacency(edges))
     var active = scope.checkpoint(
       adj.select(col("v")).distinct()
         .withColumn("h", Sampling.detHash2(col("v"))))

@@ -245,8 +245,8 @@ object Multimodal {
     // canonical RIFF/WAVE container, written directly: the 44-byte
     // PCM header is a fixed public layout, and hand-rolling it is
     // ~2.5x cheaper than driving javax.sound's writer per clip
-    // (AudioFloorBench measured 262 us/clip through AudioSystem.write
-    // vs ~35 us direct) — legitimate because the ENCODE half is
+    // (measured 262 us/clip through AudioSystem.write vs ~35 us direct,
+    // BASELINE.md "Round-12 addenda") — legitimate because the ENCODE half is
     // fixture-building; the DECODE half stays the real JDK codec,
     // which parses this container exactly as it parsed the
     // AudioSystem-written one (Queries14Spec pins the round-trip).

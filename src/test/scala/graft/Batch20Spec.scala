@@ -58,6 +58,30 @@ class Batch20Spec extends AnyFunSuite {
     val out = GraphOps.weightedSssp(e, Seq(1L).toDF("id"), iterations = 1)
       .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
     assert(out(2L).contains(1L) && out(3L).isEmpty && out(4L).isEmpty)
+
+    // seeded weighted graph against a Spark-free depth-bounded
+    // Bellman-Ford: dist_0 = sources, and every round relaxes every edge
+    // once from the previous round's distances, keeping the old distance
+    // (the zero-weight self-loop)
+    val rnd = new scala.util.Random(5)
+    val rand = (for {
+      a <- 1L to 30L; b <- 1L to 30L if a != b && rnd.nextDouble() < 0.06
+    } yield (a, b, 1L + rnd.nextInt(9))) ++
+      (40L to 47L).map(i => (i, i + 1, 1L)) // a chain deeper than the depth
+    val sources = Seq(1L, 2L, 40L, 999L) // 999: no incident edge
+    val depth = 4
+    val expected = (1 to depth).foldLeft(sources.map(_ -> 0L).toMap) { (d, _) =>
+      rand.foldLeft(d) { case (acc, (u, v, w)) =>
+        d.get(u).fold(acc)(du => acc.updated(v, acc.get(v).fold(du + w)(math.min(_, du + w))))
+      }
+    }
+    val got = GraphOps.weightedSssp(wedges(rand: _*), sources.toDF("id"), iterations = depth)
+      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    val vertices = (rand.flatMap(e => Seq(e._1, e._2)) ++ sources).toSet
+    assert(got == vertices.map(v => v -> expected.get(v)).toMap)
+    assert(got(999L).contains(0L), "an isolated source keeps dist 0")
+    assert(got(48L).isEmpty && got.values.count(_.isEmpty) > 1,
+      "vertices beyond the depth stay null")
   }
 
   test("weighted sssp with unit weights equals hop-count shortest paths") {

@@ -139,6 +139,41 @@ class Queries11Spec extends AnyFunSuite {
     assert(one.get(5L).contains(1L), "the stranded vertex survives round 1")
   }
 
+  test("connectedComponentsConverged equals the fixed form past the round count and at every bound") {
+    def comps(df: org.apache.spark.sql.DataFrame) = df.as[(Long, Long)].collect().toMap
+    // seeded random core (a path plus random chords, so connected) with
+    // pendant chains of 5-9 hops hanging off it (the smallest label
+    // sits in the core, so it walks the whole chain)
+    // and one detached 6-hop chain labelled from its far end
+    val rnd = new scala.util.Random(11)
+    val coreEdges = (1L until 12L).map(i => (i, i + 1)) ++ (for {
+      a <- 1L to 12L; b <- (a + 2) to 12L if rnd.nextDouble() < 0.3
+    } yield (a, b))
+    var next = 100L
+    val chains = (1 to 3).flatMap { _ =>
+      val len = 5 + rnd.nextInt(5)
+      val ids = (1L + rnd.nextInt(12)) +: (next until next + len)
+      next += len
+      ids.zip(ids.tail)
+    } ++ (next + 6 until next by -1).zip(next + 5 to next by -1)
+    val all = coreEdges ++ chains
+    val edges = all.toDF("src", "dst")
+    // labels settle within the longest shortest path, so the vertex
+    // count is past the round count
+    val n = all.flatMap(e => Seq(e._1, e._2)).distinct.size
+    val conv = comps(GraphOps.connectedComponentsConverged(edges))
+    assert(conv == comps(GraphOps.connectedComponents(edges, iterations = n)))
+    assert(conv.size == n && conv.values.toSet.size == 2, "core + detached chain")
+    // each bound exit stops after the same steps as the fixed form,
+    // including the partial last window (4 = one window of 3 + 1)
+    for (m <- Seq(1, 2, 4)) {
+      val fixed = comps(GraphOps.connectedComponents(edges, iterations = m))
+      assert(fixed != conv, s"depth $m unexpectedly converged")
+      assert(comps(GraphOps.connectedComponentsConverged(edges, maxIterations = m)) == fixed,
+        s"maxIterations=$m")
+    }
+  }
+
   test("pageRankConverged reaches the fixpoint a shallow fixed run misses") {
     // depth-8 chain: deltas flush out of a DAG in depth rounds, so the
     // probe reaches the EXACT quantized fixpoint around round 9 —

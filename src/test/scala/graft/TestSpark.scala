@@ -3,28 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (ScalaTest runs suites in
-  * one JVM; SparkSession.getOrCreate dedupes).
+  * one JVM; SparkSession.getOrCreate dedupes). Built by the engine's
+  * own session factory, so the plan-shape suites assert the plans
+  * production actually runs, under the same conf — the codegen cache
+  * size ([[GraftSession.CodegenCacheEntries]]) included.
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the test-data generator writes timestamp[us] with
-      // isAdjustedToUTC=false; without this, Spark 4 infers
-      // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
-      // Reading as TIMESTAMP under the UTC session zone yields the
-      // same values DuckDB sees for the same bytes.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      // match the harness mains (Bench/Verify/GraftSession) so the
-      // plan-shape suites assert the plans production actually runs
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
