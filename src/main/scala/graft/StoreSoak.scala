@@ -62,6 +62,12 @@ object StoreSoak {
 
     import org.apache.spark.sql.functions._
 
+    // an integer env knob; a bad value fails with the variable NAMED
+    def envKnob(name: String, default: Long): Long =
+      sys.env.get(name).map(s => scala.util.Try(s.trim.toLong).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be an integer, got '$s'"))).getOrElse(default)
+
     // optional standing-graph seed: a ring of `seedRows` Seed vertices
     // + edges in the store's structured layout, materialized eagerly
     // (localCheckpoint) before any window opens — the soak then
@@ -93,12 +99,14 @@ object StoreSoak {
       val e = Seq.empty[(String, String, String, Map[String, String])]
         .toDF("src", "dst", "rel", "props")
       val initial = seed.getOrElse(PropertyGraph(v, e))
-      // GRAFT_SOAK_OVERLAY_ROWS shrinks the overlay budget so the
-      // OVERFLOW path (round 15: LSM level promotion, then a full
-      // fold when MaxLevels stack) fires on soak-sized replays — the
-      // seeded leveled-fold measurement (SCALE.md round-15)
-      val ovBudget = sys.env.get("GRAFT_SOAK_OVERLAY_ROWS")
-        .map(_.toLong).getOrElse(GraphStore.OverlayFoldRows)
+      // GRAFT_SOAK_OVERLAY_ROWS sets the BUCKETED overlay's overflow
+      // budget, so on a bucketed store the OVERFLOW path (round 15:
+      // LSM level promotion, then a full fold when MaxLevels stack)
+      // fires on soak-sized replays — the seeded leveled-fold
+      // measurement (SCALE.md round-15). An unbucketed store folds
+      // per write whatever its value.
+      val ovBudget =
+        envKnob("GRAFT_SOAK_OVERLAY_ROWS", GraphStore.OverlayFoldRows)
       new GraphStore(initial,
         Map("Station" -> Seq("sid"), "WeatherDay" -> Seq("sid", "date")),
         overlayFoldRows = ovBudget)
@@ -117,7 +125,7 @@ object StoreSoak {
     // session/codegen warmup
     store.execute("MERGE (s:Station {sid: -1})")
     val marks = Seq(rows.length / 4, rows.length / 2, rows.length)
-    val gcEvery = sys.env.getOrElse("SPARK_GRAFT_SOAK_GC", "64").toInt
+    val gcEvery = envKnob("SPARK_GRAFT_SOAK_GC", 64L)
     val t0 = System.nanoTime()
     var tWin = t0
     val times = scala.collection.mutable.LinkedHashMap.empty[Int, Double]

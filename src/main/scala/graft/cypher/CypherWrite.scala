@@ -1121,52 +1121,38 @@ object CypherWrite {
   * can run concurrently against the current snapshot.
   *
   * Each statement stacks one (broadcast) join + union layer on the
-  * standing frames; a FOLD truncates the stack. How often, and how,
-  * depends on the store:
+  * standing frames; a FOLD truncates the stack. The store runs in one
+  * of two regimes, and [[GraphStore.BucketProbeRows]] standing rows is
+  * the only size gate between them:
   *
-  *   - SMALL unbucketed stores (at most [[GraphStore.OverlayFoldRows]]
-  *     standing rows) fold after EVERY write, re-checkpointing only
-  *     the frame family (vertices / edges) the statement touched and
-  *     keeping the row count from the statement's stats. An unfolded
-  *     layer makes every later probe, read and fold re-run its
-  *     broadcast builds, and the layers' union partitions add up
+  *   - An UNBUCKETED store folds after EVERY write, re-checkpointing
+  *     only the frame family (vertices / edges) the statement touched
+  *     and keeping the row count from the statement's stats. An
+  *     unfolded layer makes every later probe, read and fold re-run
+  *     its broadcast builds, and the layers' union partitions add up
   *     (a disconnected MATCH prefix became a CartesianProduct over
-  *     them); on a broadcast-sized store one eager checkpoint of the
-  *     touched family costs less than what it saves (SCALE.md,
-  *     per-write fold).
-  *   - Every other store folds every 8 writes. Up to
-  *     [[GraphStore.FullFoldBaseRows]] the fold copies the store (the
-  *     round-12 full localCheckpoint) — measured cheaper than any
-  *     bookkeeping while the store fits in memory. Past it, the fold
-  *     maintains a delta-sized OVERLAY: `base` (the pinned
-  *     initial/saved frames, NEVER re-materialized) plus materialized
-  *     overlay rows + base-row masks (pre-intersected with the base at
-  *     fold time, so append-mostly workloads carry NO mask stage), and
-  *     the standing view is the constant-depth plan
-  *     `base [▷ broadcast(mask)] ∪ overlay` — per-fold cost is a base
-  *     SCAN (probe, delta-sized output), never a base WRITE. The
-  *     overlay folds fully into a new base only when it outgrows
-  *     [[GraphStore.OverlayFoldRows]] (or after an untracked
-  *     transaction swap). Re-writing a 100 TB store every 8 statements
-  *     is the one unviable design; the overlay is what keeps big-store
-  *     compaction possible. Past [[GraphStore.BucketProbeRows]] the
-  *     store is bucketed and folds window segments (see below).
-  *   - `forceOverlay` stores (specs) and the statements after an
-  *     explicit transaction's commit, up to the next full fold, keep
-  *     the 8-write cadence whatever their size.
+  *     them); one eager checkpoint of the touched family costs less
+  *     than what it saves at every size up to the gate (SCALE.md,
+  *     per-write fold and two store regimes). The first write after an
+  *     explicit transaction's commit folds the whole store once
+  *     instead: the fork's statements were not tracked.
+  *   - Past the gate (or `forceBucketed`) the store is BUCKETED: the
+  *     base is clustered by key hash, each write appends a delta-sized
+  *     window segment, and every 8 writes the segments collapse into a
+  *     broadcast-sized overlay (see below) — the base is scanned only
+  *     bucket-wise and re-written only when the overlay outgrows
+  *     `overlayFoldRows` rows and [[GraphStore.MaxLevels]] LSM levels
+  *     have stacked.
   *
   * [[stats]] snapshots the standing row count, the bucket mode and
   * the fold count and cost.
   */
 final class GraphStore(initial: PropertyGraph,
                        initialLabelKeys: Map[String, Seq[String]] = Map.empty,
-                       forceOverlay: Boolean = false,
                        forceBucketed: Boolean = false,
-                       // overridable so specs can drive the overlay-
-                       // OVERFLOW branch (rebucketize) on tiny fixtures;
-                       // also the per-write fold's size gate, so a
-                       // negative budget keeps a tiny store on the
-                       // 8-write cadence
+                       // the bucketed overlay's overflow budget;
+                       // overridable so specs and soaks can drive the
+                       // overflow branch (LSM promotion) on tiny stores
                        overlayFoldRows: Long = GraphStore.OverlayFoldRows) {
   @volatile private var g: PropertyGraph = initial
   /** Per-label uniqueness keys — the engine's spelling of the
@@ -1218,11 +1204,13 @@ final class GraphStore(initial: PropertyGraph,
         true
     }
   }
+  /** Writes since the last fold: the bucketed regime collapses its
+    * window segments every 8 writes. */
   private var writesSinceCompact = 0
   /** Standing rows (vertices + edges): set by every count the store
     * makes anyway and advanced by each statement's stats in between;
     * -1 = unknown (after an untracked transaction swap, until the
-    * next count). */
+    * next count). Also the bucket gate's input ([[ensureProbeIndex]]). */
   private var liveRows = -1L
   private var folds = 0L
   private var lastFoldMs = 0.0
@@ -1231,11 +1219,15 @@ final class GraphStore(initial: PropertyGraph,
     * O(store) scan never repeats on later rebucketizes. */
   private var idConventionChecked = false
 
-  // ---- overlay-compaction state (round 13; all guarded by `this`) --
+  // ---- fold state (all guarded by `this`) --------------------------
+  /** The last folded frames: unbucketed, the family a write did not
+    * touch keeps its base as its standing frame; bucketed, the
+    * clustered base under the overlay, levels and segments. */
   private var baseV: DataFrame = initial.vertices
   private var baseE: DataFrame = initial.edges
-  /** Materialized post-apply rows for every vertex/edge touched since
-    * the base was pinned (created or updated). */
+  /** Bucketed overlay: materialized post-apply rows for every
+    * vertex/edge touched since the base was pinned (created or
+    * updated). */
   private var ovV: Option[DataFrame] = None
   private var ovE: Option[DataFrame] = None
   /** Cumulative masks of base rows superseded or deleted — PRE-
@@ -1248,10 +1240,11 @@ final class GraphStore(initial: PropertyGraph,
   private var maskV: Option[DataFrame] = None
   private var maskE: Option[DataFrame] = None
   private var ovRows = 0L
-  /** Touched sets of the statements since the last fold. */
+  /** Touched sets of the unbucketed writes since the last fold. */
   private var window = List.empty[CypherWrite.Touched]
-  /** False after an untracked graph swap ([[commitTx]]): the overlay
-    * no longer describes `g` vs `base`, so the next fold is FULL. */
+  /** False after an untracked graph swap ([[commitTx]]): the base no
+    * longer describes `g`'s untouched family, so the next fold is
+    * FULL. */
   private var baseValid = true
 
   // ---- bucket-pruned probe index (round 14) ------------------------
@@ -1345,8 +1338,8 @@ final class GraphStore(initial: PropertyGraph,
 
   /** A snapshot of the store's shape and fold history. `rows` is the
     * standing vertex + edge count; when the store has not counted
-    * since an explicit transaction's commit (or was never counted —
-    * `forceOverlay` stores), the snapshot counts it once. */
+    * since an explicit transaction's commit, the snapshot counts it
+    * once. */
   def stats: GraphStore.StoreStats = synchronized {
     if (liveRows < 0)
       liveRows = withoutConstraintPropagation(
@@ -1512,18 +1505,12 @@ final class GraphStore(initial: PropertyGraph,
           if (liveRows >= 0) liveRows += GraphStore.netRows(a.stats)
           writesSinceCompact += 1
           // each statement stacks one broadcast join AND one union on
-          // the standing frames; past a handful of layers the
-          // ANALYSIS/codegen cost of every subsequent probe grows
-          // super-linearly (measured: a 90-statement row-at-a-time
-          // replay crawled at compaction=32). Small unbucketed stores
-          // fold after EVERY write ([[foldsEveryWrite]]): even one
-          // unfolded layer re-runs its broadcast builds in every later
-          // probe, read and fold, and a re-checkpoint of the touched
-          // family is cheap at that size. Every other store folds
-          // every 8 writes — that keeps row-at-a-time wire clients
-          // linear; batched UNWIND statements (the scale path) rarely
-          // stack past two or three.
-          if (foldsEveryWrite || writesSinceCompact >= 8) compact()
+          // the standing frames: even one unfolded layer re-runs its
+          // broadcast builds in every later probe, read and fold, so an
+          // unbucketed store folds after EVERY write. A bucketed
+          // store's segments are delta-sized at bounded plan depth;
+          // they collapse every 8 writes.
+          if (bktV.isEmpty || writesSinceCompact >= 8) compact()
           (a.stats, a.rows)
         case Right(_) => throw new IllegalArgumentException(
           "read query passed to execute(); use cypher()")
@@ -1558,8 +1545,8 @@ final class GraphStore(initial: PropertyGraph,
     * is single-writer (the reference drives one session pool); a
     * concurrent auto-commit writer between BEGIN and COMMIT is NOT
     * merged — the commit is last-write-wins, exactly the contract of
-    * swapping in a fork. The fork's statements were not overlay-
-    * tracked, so the next fold is a full one. */
+    * swapping in a fork. The fork's statements were not tracked, so
+    * the next write's fold is a full one. */
   def commitTx(ng: PropertyGraph): Unit = synchronized {
     g = ng
     baseValid = false
@@ -1572,58 +1559,32 @@ final class GraphStore(initial: PropertyGraph,
     bktV = None; bktE = None; segs = Vector.empty
     ovV = None; ovE = None; maskV = None; maskE = None; ovRows = 0L
     clearLevels()
-    baseV = ng.vertices; baseE = ng.edges; baseRows = -1L
+    baseV = ng.vertices; baseE = ng.edges
   }
 
-  /** Truncate the stacked write plan. SMALL unbucketed stores
-    * ([[foldsEveryWrite]]) fold per write: only the touched frame
-    * family is re-checkpointed. Otherwise stores with a base within
-    * [[GraphStore.FullFoldBaseRows]] keep the round-12 full fold —
-    * copying an in-memory store is cheaper than overlay bookkeeping.
-    * BIG stores delta-fold: the base is scanned (probe, delta-sized
-    * output) but NEVER re-written — at 100 TB a full fold would
-    * re-materialize the store every 8 statements. Full fold also
-    * fires when the overlay outgrows its broadcast budget or after an
-    * untracked tx swap. `forceOverlay` (tests) pins the delta path
-    * regardless of base size. */
+  /** Fold: truncate the stacked write plan. An unbucketed store
+    * re-checkpoints the family its last write touched
+    * ([[foldTouched]]), or the whole store after an untracked
+    * transaction swap ([[fullFold]]); a bucketed store collapses its
+    * window segments into the overlay ([[collapseSegs]]). Every fold
+    * runs here, so its cost lands in [[stats]]. */
   def compact(): Unit = synchronized {
     val t0 = System.nanoTime()
     if (bktV.isDefined) collapseSegs()
-    else if (foldsEveryWrite) foldTouched()
-    else {
-      if (baseRows < 0) baseRows = baseV.count() + baseE.count()
-      if (!baseValid ||
-          (!forceOverlay && baseRows <= GraphStore.FullFoldBaseRows) ||
-          ovRows > overlayFoldRows) fullFold()
-      else deltaFold()
-      // a store that GREW past the probe-index bound on the unbucketed
-      // path switches modes here (state is clean right after a fold)
-      if (!forceOverlay && baseRows > GraphStore.BucketProbeRows) bucketize()
-    }
+    else if (baseValid) foldTouched()
+    else fullFold()
     writesSinceCompact = 0
     folds += 1
     lastFoldMs = (System.nanoTime() - t0) / 1e6
   }
 
-  private var baseRows = -1L
-
-  /** The per-write fold applies: an unbucketed store, counted at a
-    * clean fold point, within the overlay budget (the instance's
-    * `overlayFoldRows`, [[GraphStore.OverlayFoldRows]] by default).
-    * A base this small (under [[GraphStore.FullFoldBaseRows]]) was
-    * last folded fully or per write, so it carries no overlay state
-    * and an untouched family's standing frame IS its base. */
-  private def foldsEveryWrite: Boolean =
-    bktV.isEmpty && !forceOverlay && baseValid &&
-      baseRows >= 0 && baseRows <= overlayFoldRows
-
-  /** Fold the window (one statement, on the per-write path) by
-    * re-checkpointing only the frame families it touched — a MERGE or
-    * SET that touches no edge keeps the edge base as it is. The row
-    * count comes from the statements' stats, not from count jobs. The
-    * superseded base is NOT unpersisted: concurrent Bolt readers may
-    * hold snapshots over it, and a localCheckpoint block cannot be
-    * recomputed; the ContextCleaner reclaims it once unreferenced. */
+  /** Fold the window (the last write) by re-checkpointing only the
+    * frame families it touched — a MERGE or SET that touches no edge
+    * keeps the edge base as it is. The row count comes from the
+    * statements' stats, not from count jobs. The superseded base is
+    * NOT unpersisted: concurrent Bolt readers may hold snapshots over
+    * it, and a localCheckpoint block cannot be recomputed; the
+    * ContextCleaner reclaims it once unreferenced. */
   private def foldTouched(): Unit = withoutConstraintPropagation {
     val touchesV = window.exists(t =>
       t.nodeIds.isDefined || t.deletedNodeIds.isDefined)
@@ -1632,151 +1593,31 @@ final class GraphStore(initial: PropertyGraph,
     if (touchesV) baseV = compactedFrame(g.vertices)
     if (touchesE) baseE = compactedFrame(g.edges)
     g = PropertyGraph(baseV, baseE)
-    baseRows = liveRows
     window = Nil
   }
 
   private def fullFold(): Unit = {
     g = compacted(g)
     baseV = g.vertices; baseE = g.edges
-    baseRows = baseV.count() + baseE.count() // cheap: just checkpointed
-    liveRows = baseRows
-    ovV = None; ovE = None
-    maskV = None; maskE = None
-    ovRows = 0L; window = Nil; baseValid = true
+    liveRows = baseV.count() + baseE.count() // cheap: just checkpointed
+    window = Nil; baseValid = true
   }
 
   private val eKeys = Seq("src", "dst", "rel")
 
-  /** Fold the window's statements into the overlay and rebuild the
-    * standing view at constant plan depth. Work is proportional to
-    * the overlay + one PROBE pass over the stacked view per frame
-    * family — the base is scanned, never re-written. */
-  private def deltaFold(): Unit = if (window.nonEmpty)
-    withoutConstraintPropagation {
-      val dbg = sys.env.contains("GRAFT_FOLD_DEBUG")
-      val t0 = System.nanoTime()
-      def mark(what: String): Unit = if (dbg)
-        System.err.println(f"[fold] $what at ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      val spark = g.vertices.sparkSession
-      import org.apache.spark.sql.functions.{broadcast, col}
-      def ckpt(df: DataFrame): DataFrame =
-        df.coalesce(spark.sparkContext.defaultParallelism)
-          .localCheckpoint(true)
-      def unionAll(fs: Seq[DataFrame]): Option[DataFrame] =
-        fs.reduceOption(_ unionByName _)
-      val tV = unionAll(window.flatMap(_.nodeIds)).map(_.distinct())
-      val tE = unionAll(window.flatMap(_.edgeTriples)).map(_.distinct())
-      val dV = unionAll(window.flatMap(_.deletedNodeIds)).map(_.distinct())
-      val dE = unionAll(window.flatMap(_.deletedEdgeTriples))
-        .map(_.distinct())
-      val dt = unionAll(window.flatMap(_.detachedNodeIds)).map(_.distinct())
-
-      // vertices: post-apply rows for the window's touched ids (the
-      // stacked view is the truth — a touched-then-deleted id simply
-      // yields no row), replacing any older overlay copies
-      val newOvV = tV.map(ids =>
-        g.vertices.join(broadcast(ids), Seq("id"), "left_semi"))
-      val keptOvV = Seq(tV, dV).flatten.foldLeft(ovV)((cur, ids) =>
-        cur.map(_.join(broadcast(ids), Seq("id"), "left_anti")))
-      ovV = ((keptOvV, newOvV) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b))
-        case (a, b) => a.orElse(b)
-      }).map(ckpt)
-
-      // edges: same shape; DETACH also removes overlay edges by
-      // endpoint (base copies die via the triple mask below)
-      val newOvE = tE.map(tr =>
-        g.edges.join(broadcast(tr), eKeys, "left_semi"))
-      var keptOvE = Seq(tE, dE).flatten.foldLeft(ovE)((cur, tr) =>
-        cur.map(_.join(broadcast(tr), eKeys, "left_anti")))
-      dt.foreach { ids =>
-        keptOvE = keptOvE.map(
-          _.join(broadcast(ids.withColumnRenamed("id", "src")),
-              Seq("src"), "left_anti")
-            .join(broadcast(ids.withColumnRenamed("id", "dst")),
-              Seq("dst"), "left_anti"))
-      }
-      mark("ovV ckpt")
-      ovE = ((keptOvE, newOvE) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b))
-        case (a, b) => a.orElse(b)
-      }).map(ckpt)
-
-      mark("ovE ckpt")
-      // masks: which BASE rows the window superseded (touched) or
-      // deleted — resolved against the base NOW (one base scan per
-      // family per fold) so the per-probe view pays a mask stage only
-      // when base rows actually died. DETACH resolves to the base
-      // edge triples it kills, by endpoint.
-      def orUnion(a: Option[DataFrame],
-                  b: Option[DataFrame]): Option[DataFrame] = (a, b) match {
-        case (Some(x), Some(y)) => Some(x.unionByName(y))
-        case (x, y) => x.orElse(y)
-      }
-      val nonEmpty: Option[DataFrame] => Option[DataFrame] =
-        _.filter(df => df.limit(1).count() > 0)
-      val candV = orUnion(tV, dV).map(_.distinct())
-      val newMaskV = candV.map(ids => baseV.select(col("id"))
-        .join(broadcast(ids), Seq("id"), "left_semi"))
-      maskV = nonEmpty(orUnion(maskV, newMaskV).map(m => ckpt(m.distinct())))
-      mark("maskV")
-      val candE = orUnion(tE, dE).map(_.distinct())
-      val newMaskE0 = candE.map(tr => baseE.select(eKeys.map(col): _*)
-        .join(broadcast(tr), eKeys, "left_semi"))
-      val detachMaskE = dt.map { ids =>
-        val be = baseE.select(eKeys.map(col): _*)
-        be.join(broadcast(ids.withColumnRenamed("id", "src")),
-            Seq("src"), "left_semi")
-          .unionByName(be.join(
-            broadcast(ids.withColumnRenamed("id", "dst")),
-            Seq("dst"), "left_semi"))
-      }
-      maskE = nonEmpty(orUnion(maskE, orUnion(newMaskE0, detachMaskE))
-        .map(m => ckpt(m.distinct())))
-
-      mark("maskE")
-      ovRows = ovV.map(_.count()).getOrElse(0L) +
-        ovE.map(_.count()).getOrElse(0L)
-      mark("counts")
-      window = Nil
-      g = rebuildView()
-      mark("done")
-    }
-
-  /** The standing view at constant plan depth:
-    * `base [▷ broadcast(mask)] ∪ overlay` per frame family — the
-    * mask stage exists only when base rows actually died
-    * (pre-intersected at fold time), so the append-mostly reference
-    * workload probes a plain base ∪ overlay. */
-  private def rebuildView(): PropertyGraph = {
-    import org.apache.spark.sql.functions.{broadcast, col}
-    val v0 = maskV.fold(baseV)(m =>
-      baseV.join(broadcast(m), Seq("id"), "left_anti"))
-    val v = ovV.fold(v0)(o => v0.unionByName(o))
-    val e0 = maskE.fold(baseE)(m =>
-      baseE.join(broadcast(m), eKeys, "left_anti"))
-    val e = ovE.fold(e0)(o => e0.unionByName(o))
-    // stable positional layout (using-column anti joins front-load
-    // their keys — same normalization as the apply's)
-    PropertyGraph(v.select(baseV.columns.map(col).toSeq: _*),
-      e.select(baseE.columns.map(col).toSeq: _*))
-  }
-
   // ---- bucketed mode (round 14) ------------------------------------
 
-  /** Enter bucketed mode when the base outgrows
+  /** Enter bucketed mode when the standing graph outgrows
     * [[GraphStore.BucketProbeRows]] (or `forceBucketed`, for specs
-    * and A/B soaks). Called at the top of every write while the
-    * index is absent; the only non-trivial work is the one-time
-    * index build. */
+    * and A/B soaks) — the one place the regime is decided. Called at
+    * the top of every write while the index is absent: an unbucketed
+    * store that grew past the gate at its last write switches at its
+    * next. The only non-trivial work is the one-time index build. */
   private def ensureProbeIndex(): Unit =
-    if (bktV.isEmpty && !forceOverlay) {
-      if (baseRows < 0 && window.isEmpty && baseValid) {
-        baseRows = g.vertices.count() + g.edges.count()
-        liveRows = baseRows
-      }
-      if (forceBucketed || baseRows > GraphStore.BucketProbeRows) {
+    if (bktV.isEmpty) {
+      if (liveRows < 0 && baseValid)
+        liveRows = g.vertices.count() + g.edges.count()
+      if (forceBucketed || liveRows > GraphStore.BucketProbeRows) {
         if (window.nonEmpty || !baseValid) fullFold()
         bucketize()
       }
@@ -1834,8 +1675,7 @@ final class GraphStore(initial: PropertyGraph,
     bktE = Some(BucketedFrame.build(g.edges, Seq("src"),
       BucketedFrame.bucketCountFor(nE, par)))
     baseV = bktV.get.df; baseE = bktE.get.df
-    baseRows = nV + nE
-    liveRows = baseRows
+    liveRows = nV + nE
     ovV = None; ovE = None; maskV = None; maskE = None
     ovRows = 0L; window = Nil; segs = Vector.empty; baseValid = true
     clearLevels()
@@ -2141,7 +1981,6 @@ final class GraphStore(initial: PropertyGraph,
     // 100 TB the durable key-partitioned layout itself is the index —
     // the in-memory rebuild is the local-mode stand-in)
     baseV = v; baseE = e
-    baseRows = -1L // durable layout: recount lazily at the next fold
     ovV = None; ovE = None
     maskV = None; maskE = None
     bktV = None; bktE = None; segs = Vector.empty
@@ -2168,31 +2007,16 @@ object GraphStore {
     * cost less than the index build + per-probe bucket bookkeeping;
     * above it, every row-at-a-time statement would otherwise pay 2-3
     * O(store) probe scans (SCALE.md round-13 mechanism 4 — measured
-    * ~0.45 s/scan at 3.3 M map-typed rows). Env-overridable for A/B
-    * soak runs. */
-  val BucketProbeRows: Long = sys.env.get("GRAFT_BUCKET_PROBE_ROWS")
-    .map(s => scala.util.Try(s.trim.toLong).getOrElse(
-      // fail with the env var NAMED — a bare .toLong here surfaces as
-      // an opaque ExceptionInInitializerError at object init
-      throw new IllegalArgumentException(
-        s"GRAFT_BUCKET_PROBE_ROWS must be a long, got '$s'")))
-    .getOrElse(1L << 20)
+    * ~0.45 s/scan at 3.3 M map-typed rows). The only size gate
+    * between the store's two regimes. */
+  val BucketProbeRows: Long = 1L << 20
 
-  /** Overlay size (vertex + edge rows) past which [[GraphStore]]'s
-    * fold materializes a new base instead of maintaining the overlay:
-    * the overlay rides broadcast joins, so it must stay comfortably
-    * under the broadcast budget; a quarter-million keyed rows is a
-    * few tens of MB.
-    *
-    * Also the size gate of the per-write fold: an unbucketed store of
-    * at most this many standing rows re-checkpoints its touched frame
-    * family after every write instead of stacking up to 8 layers.
-    * Measured with `StoreSoak 12 4 50000` (144 row-at-a-time
-    * statements over ~100k standing rows, local[4], 4-core host):
-    * 200.4 s at the 8-write cadence and 79.2 s folding every write,
-    * both with the point-pattern MATCH cross unhinted (69.8 s with
-    * the broadcast cross) — not worse at the largest size measured
-    * under the gate, so the gate stays here. */
+  /** Bucketed overlay size (vertex + edge rows) past which
+    * [[GraphStore]]'s segment collapse promotes the overlay to an LSM
+    * level (or, once [[MaxLevels]] have stacked, re-materializes the
+    * store): the overlay rides broadcast joins, so it must stay
+    * comfortably under the broadcast budget; a quarter-million keyed
+    * rows is a few tens of MB. */
   val OverlayFoldRows: Long = 1L << 18
 
   /** Statement-delta size up to which the write path collapses its
@@ -2213,21 +2037,6 @@ object GraphStore {
     * union branch + one broadcast anti join per probe, so the bound
     * stays small. */
   val MaxLevels: Int = 4
-
-  /** Base size (rows) up to which the fold COPIES the store (the
-    * round-12 full localCheckpoint) instead of overlay-folding. The
-    * round-13 store-size soak measured the crossover empirically: at
-    * 3.3M in-memory map-typed rows, one full copy (~2 s) is CHEAPER
-    * than the overlay fold's four standing probe scans (~3 s) plus
-    * the per-probe view overhead (seeded soak: 1.6-1.9 s/stmt copied
-    * vs 2.3-2.4 overlaid), because scanning map-typed rows costs
-    * nearly as much as writing them while the store fits in memory.
-    * Past this bound — and always for stores too big to
-    * re-materialize per 8 statements, the 100 TB posture — the
-    * overlay's never-rewrite-the-base property is what keeps
-    * compaction viable at all. 8M rows is the comfortable in-memory
-    * bound at the target executor sizing. */
-  val FullFoldBaseRows: Long = 1L << 23
 
   /** Run `f` with Catalyst constraint propagation OFF, restoring the
     * previous setting when the LAST concurrent caller on the session

@@ -517,18 +517,16 @@ class CypherWriteSpec extends AnyFunSuite {
     // vertex/edge tables: no SortMergeJoin, no ShuffledHashJoin, and
     // no Exchange hashing the full tables (a full-outer formulation
     // would SMJ-shuffle the 100 TB side on every statement). The
-    // store stays off the per-write fold, so the standing frames keep
-    // the apply's plan instead of its checkpoint.
-    val s = new GraphStore(emptyGraph(),
-      Map("Person" -> Seq("pid"), "City" -> Seq("name")),
-      overlayFoldRows = -1L)
-    s.execute("MERGE (p:Person {pid: 1}) SET p.a = 'x'")
-    s.execute("MERGE (p:Person {pid: 2})")
-    s.execute(
+    // applies chain over a bare graph, so the frames keep the apply's
+    // plan instead of a store fold's checkpoint.
+    val g = applied(Seq(
+      "MERGE (p:Person {pid: 1}) SET p.a = 'x'",
+      "MERGE (p:Person {pid: 2})",
       """MATCH (a:Person {pid: 1}) MATCH (b:Person {pid: 2})
-         MERGE (a)-[:KNOWS]->(b)""")
-    val vPlan = s.graph.vertices.queryExecution.executedPlan.toString
-    val ePlan = s.graph.edges.queryExecution.executedPlan.toString
+         MERGE (a)-[:KNOWS]->(b)""").map(q => (q, Map.empty[String, Any])),
+      Map("Person" -> Seq("pid"), "City" -> Seq("name")))
+    val vPlan = g.vertices.queryExecution.executedPlan.toString
+    val ePlan = g.edges.queryExecution.executedPlan.toString
     assert(vPlan.contains("BroadcastHashJoin"), vPlan)
     assert(!vPlan.contains("SortMergeJoin"), vPlan)
     assert(!ePlan.contains("SortMergeJoin"), ePlan)
@@ -839,27 +837,31 @@ class CypherWriteSpec extends AnyFunSuite {
     Seq.empty[(String, String, String, Map[String, String])]
       .toDF("src", "dst", "rel", "props"))
 
-  /** The never-folded reference: [[foldSeq]] chained through
-    * `CypherWrite.apply` over a bare graph — no store, no fold. */
-  private def stackedApply(): GraphSig = sigOf(foldSeq.foldLeft(emptyGraph()) {
-    case (g, (q, ps)) =>
+  /** Write statements chained through `CypherWrite.apply` over a
+    * bare graph — no store, no fold. */
+  private def applied(stmts: Seq[(String, Map[String, Any])],
+                      keys: Map[String, Seq[String]]): PropertyGraph =
+    stmts.foldLeft(emptyGraph()) { case (g, (q, ps)) =>
       CypherParser.parseAny(q) match {
-        case Left(w) => CypherWrite(g, w, ps, foldKeys).graph
+        case Left(w) => CypherWrite(g, w, ps, keys).graph
         case Right(_) => fail(s"not a write: $q")
       }
-  })
+    }
+
+  /** The never-folded reference: [[foldSeq]] applied stacked. */
+  private def stackedApply(): GraphSig = sigOf(applied(foldSeq, foldKeys))
+
+  /** Every standing frame is a checkpoint: no stacked layer left. */
+  private def assertFolded(s: GraphStore): Unit =
+    Seq(s.graph.vertices, s.graph.edges)
+      .map(_.queryExecution.optimizedPlan.toString)
+      .foreach(p => assert(!p.contains("Join") && !p.contains("Union"), p))
 
   /** [[foldSeq]] through a store, plus an explicit compact() every
-    * `foldEvery` statements (0 = only the store's own folds).
-    * `foldRows = -1` keeps even a tiny store off the per-write fold,
-    * on the 8-write cadence. */
-  private def runStore(foldEvery: Int, overlay: Boolean = false,
-                       bucketed: Boolean = false,
-                       foldRows: Long = GraphStore.OverlayFoldRows)
+    * `foldEvery` statements (0 = only the store's own folds). */
+  private def runStore(foldEvery: Int, bucketed: Boolean = false)
       : (GraphSig, GraphStore) = {
-    val s = new GraphStore(emptyGraph(), foldKeys,
-      forceOverlay = overlay, forceBucketed = bucketed,
-      overlayFoldRows = foldRows)
+    val s = new GraphStore(emptyGraph(), foldKeys, forceBucketed = bucketed)
     foldSeq.zipWithIndex.foreach { case ((q, ps), i) =>
       s.execute(q, ps)
       if (foldEvery > 0 && (i + 1) % foldEvery == 0) s.compact()
@@ -868,24 +870,12 @@ class CypherWriteSpec extends AnyFunSuite {
   }
 
   test("overlay fold ≡ stacked apply across create/update/delete/detach") {
-    // round-13 compaction: the store folds a delta-sized OVERLAY onto
-    // a pinned base instead of re-materializing the standing graph.
+    // the bucketed store folds a delta-sized OVERLAY onto a pinned
+    // base instead of re-materializing the standing graph.
     // Equivalence proof: the same statement sequence lands the same
-    // graph whether folds happen after every statement, never, or on
-    // the default cadence.
-    // the adaptive switch sends tiny bases down the full-fold path —
-    // overlay = true pins the DELTA path, so both are proven
-    val everyStmt = runStore(1, overlay = true)._1
+    // graph as the never-folded stacked apply.
     val never = stackedApply() // pure stacked apply, no store
-    val defaults = runStore(4, overlay = true)._1
-    // small-base full-fold path (off the per-write fold)
-    val fullPath = runStore(1, foldRows = -1L)._1
-    val cadence8 = runStore(0, foldRows = -1L)._1 // one fold, at 8
-    assert(everyStmt == never, s"overlay fold-every-statement diverges:\n$everyStmt\nvs\n$never")
-    assert(defaults == never, s"overlay fold-every-4 diverges")
-    assert(fullPath == never, s"full fold-every-statement diverges")
-    assert(cadence8 == never, s"8-write cadence diverges")
-    // round 14: the bucket-pruned probe path (segment compaction) —
+    // the bucket-pruned probe path (segment compaction) —
     // same sequence includes MATCH-prefix scans on declared-key
     // labels (pruned), DETACH, re-creation after deletion, edge
     // deletes — all through the pruned probes + segment window
@@ -909,10 +899,27 @@ class CypherWriteSpec extends AnyFunSuite {
     val stacked = stackedApply()
     assert(perWrite == stacked, s"per-write fold diverges:\n$perWrite\nvs\n$stacked")
     assert(s.stats.folds == foldSeq.size.toLong)
-    // every standing frame is a checkpoint: no stacked layer left
-    val plans = Seq(s.graph.vertices, s.graph.edges)
-      .map(_.queryExecution.optimizedPlan.toString)
-    plans.foreach(p => assert(!p.contains("Join") && !p.contains("Union"), p))
+    assertFolded(s)
+  }
+
+  test("after a transaction commit the next write folds the whole store") {
+    // the fork's statements were not tracked: the first write after
+    // commitTx folds both frame families, later writes fold per write
+    val s = new GraphStore(emptyGraph(), foldKeys)
+    val half = foldSeq.size / 2
+    foldSeq.take(half).foreach { case (q, ps) => s.execute(q, ps) }
+    val fork = foldSeq.slice(half, foldSeq.size - 1)
+      .foldLeft(s.graph) { case (g, (q, ps)) => s.executeOn(g, q, ps)._1 }
+    s.commitTx(fork)
+    def counted = s.graph.vertices.count() + s.graph.edges.count()
+    assert(s.stats.rows == counted)
+    val (q, ps) = foldSeq.last
+    s.execute(q, ps) // touches vertices only: the edge fork folds too
+    val folded = sigOf(s.graph)
+    val stacked = stackedApply()
+    assert(folded == stacked, s"post-commit fold diverges:\n$folded\nvs\n$stacked")
+    assertFolded(s)
+    assert(s.stats.rows == counted)
   }
 
   test("store stats: rows follow every statement's write stats") {
