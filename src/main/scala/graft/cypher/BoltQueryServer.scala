@@ -114,8 +114,8 @@ final class BoltQueryServer(store: GraphStore, readOnly: Boolean) {
       // explicit transaction (BEGIN…COMMIT/ROLLBACK): a fork of the
       // standing graph. Statements apply to the fork — the tx reads
       // its own writes — and COMMIT swaps the fork in atomically;
-      // ROLLBACK just drops it. Compaction cadence mirrors the
-      // GraphStore's (stacked broadcast probes get super-linear).
+      // ROLLBACK just drops it. The fork compacts every 8 writes
+      // (stacked broadcast probes get super-linear).
       var txGraph: Option[PropertyGraph] = None
       var txWrites = 0
       var open = true
@@ -260,7 +260,7 @@ final class BoltQueryServer(store: GraphStore, readOnly: Boolean) {
                         success(Map("fields" -> fields))
                       case None =>
                         // auto-commit: the store's execute holds the
-                        // single-writer lock and the compaction cadence
+                        // single-writer lock and folds
                         val (s, rows) = store.executeReturning(stmt, params)
                         val (fields, recs) = collectRows(rows)
                         pending = Some((fields, recs))

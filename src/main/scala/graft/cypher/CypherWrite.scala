@@ -127,11 +127,13 @@ object CypherWrite {
     }
 
   /** The delta-sized row sets one statement touched — what
-    * [[GraphStore]]'s overlay compaction folds instead of
-    * re-materializing the standing graph (round 13: the store-size
-    * soak measured the full-store localCheckpoint every 8 statements
-    * at 1.7-2.3× the empty-store per-statement cost on a 3.3M-row
-    * standing graph). Every frame here is already localCheckpoint'd
+    * [[GraphStore]] folds by: the per-write fold re-checkpoints only
+    * the frame families they name, and a bucketed store keeps them as
+    * a window segment instead of re-materializing the standing graph
+    * (round 13: the store-size soak measured the full-store
+    * localCheckpoint every 8 statements at 1.7-2.3× the empty-store
+    * per-statement cost on a 3.3M-row standing graph). Every frame
+    * here is already localCheckpoint'd
     * by the apply (they are the apply's own delta/deletion sets) and
     * bounded by the statement's parameter/match size, never the
     * graph. */

@@ -124,9 +124,9 @@ final class GraphStore(initial: PropertyGraph,
     * updated). */
   private var ovV: Option[DataFrame] = None
   private var ovE: Option[DataFrame] = None
-  /** Cumulative masks of base rows superseded or deleted — PRE-
-    * INTERSECTED with the base at fold time (one base scan per fold),
-    * so an append-mostly workload (the reference's: new day nodes
+  /** Bucketed cumulative masks of base rows superseded or deleted —
+    * PRE-INTERSECTED with the base at collapse time (bucket-pruned
+    * probes), so an append-mostly workload (the reference's: new day nodes
     * every statement) keeps them EMPTY and the standing view is a
     * plain `base ∪ overlay` with zero extra join stages per probe.
     * DETACH masks resolve to the base edge TRIPLES at fold time (new

@@ -903,8 +903,8 @@ class CypherWriteSpec extends AnyFunSuite {
   }
 
   test("after a transaction commit the next write folds the whole store") {
-    // the fork's statements were not tracked: the first write after
-    // commitTx folds both frame families, later writes fold per write
+    // the fork's statements were not tracked, so the first write
+    // after commitTx folds both frame families
     val s = new GraphStore(emptyGraph(), foldKeys)
     val half = foldSeq.size / 2
     foldSeq.take(half).foreach { case (q, ps) => s.execute(q, ps) }
