@@ -1,40 +1,79 @@
 package graft
+
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
+
+/** The catalog bench, in three modes:
+  *
+  *  - `runMain graft.Bench`: the full timed pass over every bench
+  *    entry, one JSON line `{"metric":"total",…,"queries":{…}}`.
+  *  - `runMain graft.Bench one <name> [reps]`: one entry `reps` times
+  *    (default 2) after the table pre-warm only, one line per rep, so
+  *    warm-up cost is visible; `SPARK_GRAFT_STAGES=1` dumps the
+  *    slowest stages of the last rep.
+  *  - `runMain graft.Bench explain <outDir> [a,b,…]`: writes
+  *    `<outDir>/<name>.txt` with the `.explain("formatted")` output of
+  *    each named entry (default: every bench entry). The committed
+  *    dumps let a reader check plan claims in OPTIMIZATION_r*.md
+  *    without re-running Spark (producing one does run a session, and
+  *    entries built on eager persist/localCheckpoint loops execute
+  *    their iterative jobs during DataFrame construction).
+  *
+  * Every mode reads `SPARK_GRAFT_SF_DIR` (default sf0.1), builds the
+  * harness session ([[GraftSession.harness]]) and then applies
+  * `SPARK_GRAFT_CONF="k=v;k=v"` runtime conf overrides for A/B probes.
+  */
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the test-data generator writes timestamp[us] with
-      // isAdjustedToUTC=false; without this, Spark 4 infers
-      // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
-      // Reading as TIMESTAMP under the UTC session zone yields the
-      // same values DuckDB sees for the same bytes.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan ON TOP of cached plans too: persisted frames
-      // otherwise pin their shuffle partitioning, and a union of many
-      // small cached branches schedules partitions-per-branch tiny
-      // tasks (measured 2x wall on g_assembly at local[32])
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // scale-adaptive parallelism floor — rationale + A/B evidence on
-      // GraftSession.minCoalescedDefault (the one place the default
-      // and env knob live)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.minCoalescedDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // touch every table once so the first timed query doesn't absorb
-    // JVM/codegen/file-listing warmup
+  def main(args: Array[String]): Unit = args.toList match {
+    case Nil => catalog()
+    case "one" :: name :: reps if reps.length <= 1 => one(name, reps.headOption)
+    case "explain" :: outDir :: names if names.length <= 1 =>
+      explain(outDir, names.headOption)
+    case _ =>
+      System.err.println(
+        "usage: Bench | Bench one <name> [reps] | Bench explain <outDir> [a,b,...]")
+      sys.exit(2)
+  }
+
+  private val sfDir =
+    sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  private def session(): SparkSession = {
+    val spark = GraftSession.harness()
+    // empty segments (a trailing ;) are tolerated
+    for (kv <- sys.env.getOrElse("SPARK_GRAFT_CONF", "").split(";") if kv.nonEmpty)
+      kv.split("=", 2) match {
+        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
+        case _ => sys.error(s"SPARK_GRAFT_CONF segment not k=v: '$kv'")
+      }
+    spark
+  }
+
+  /** Touch every table once so the first timed query doesn't absorb
+    * JVM/codegen/file-listing warmup (file listing + footer reads +
+    * scan codegen are paid here). */
+  private def prewarmTables(spark: SparkSession): Unit =
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings")
       .foreach(t => graft.sources.Tables.read(spark, sfDir, t).count())
+
+  /** Median seconds over the reps that succeeded; a rep that threw is
+    * not a sample (its time-to-failure would pose as a fast run).
+    * `None` when no rep succeeded. For even counts the two middle
+    * samples are averaged (picking times(n/2) alone reported the max
+    * of a 2-rep run).
+    */
+  private[graft] def medianOfSuccesses(reps: Seq[Try[Double]]): Option[Double] = {
+    val t = reps.collect { case Success(s) => s }.sorted
+    val n = t.length
+    Option.when(n > 0)((t((n - 1) / 2) + t(n / 2)) / 2.0)
+  }
+
+  private def catalog(): Unit = {
+    val spark = session()
+    prewarmTables(spark)
     // Stage the 27-label assembly OUTSIDE the timed region. Three
     // catalog entries consume the identical staged frames
     // (Queries6.stagedAssembly lands them as parquet once per
@@ -57,7 +96,6 @@ object Bench {
     // of every driver run was flagged at 2-3x on sub-second medians
     // for exactly this reason.
     locally {
-      import org.apache.spark.sql.functions._
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("g").orderBy("v")
       val d = spark.range(0, 1L << 18)
@@ -68,7 +106,7 @@ object Bench {
       // …and the fallback-union shape (left_anti + unionByName with
       // missing columns) — a3_fallback_union's first-touch machinery
       // that the agg/join/window pass above doesn't reach (round-10
-      // verdict: driver flagged a3 at 4.23x, BenchOne rep 1 = 2.09s
+      // verdict: driver flagged a3 at 4.23x, `Bench one` rep 1 = 2.09s
       // vs reps 2-3 on-median — pure warmup, now paid here)
       val left = d.groupBy("g").agg(max("v").as("m"))
       left.unionByName(
@@ -78,7 +116,7 @@ object Bench {
         .write.format("noop").mode("overwrite").save()
     }
     // Round 12 (verdict item 1): four entries flagged in BOTH the r10
-    // and r11 driver passes with warm-on-median BenchOne probes every
+    // and r11 driver passes with warm-on-median `Bench one` probes every
     // time — their first-rep cold multiple (2.8-4.4x: first-touch
     // whole-stage-codegen of a banded bucket join, an iterative
     // min-propagation, a running-sum window, and explode-heavy text
@@ -117,15 +155,13 @@ object Bench {
       SparkEntry.benchQueries.get(n).foreach { fn =>
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
         catch { case e: Throwable => System.err.println(s"[warmup] $n: $e") }
-        graft.operators.CacheScope.global.release()
-        System.gc()
+        GraftSession.isolate()
       }
     }
     // …and the early-alphabet statistical-aggregate shape (corr /
     // covariance / stddev / exact percentile) that a_corr_moments and
     // a_winsorize pay first-touch for otherwise
     locally {
-      import org.apache.spark.sql.functions._
       val d = spark.range(0, 1L << 16)
         .select((col("id") % 13).as("g"), col("id").cast("double").as("x"),
           (col("id") * 7 % 101).cast("double").as("y"))
@@ -135,23 +171,22 @@ object Bench {
           expr("percentile(x, array(0.05, 0.95))").as("p"))
         .write.format("noop").mode("overwrite").save()
     }
-    graft.operators.CacheScope.global.release()
-    System.gc()
+    GraftSession.isolate()
     // SPARK_GRAFT_REPS > 1 → run each query that many times and report
     // the MEDIAN (the warm-baseline recording mode; rep 1 absorbs the
     // query's codegen compile). Driver runs keep the default of 1.
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
+    val reps = GraftSession.knob("SPARK_GRAFT_REPS",
+      sys.env.get("SPARK_GRAFT_REPS"), default = 1, min = 1).toInt
     // SPARK_GRAFT_ONLY="a,b,c_" → bench only entries matching a listed
     // name or prefix (builder-side medians recording for a new entry
     // family under the EXACT full-Bench conditions; driver runs keep
     // the default of everything)
-    val only: Option[Seq[String]] =
-      sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq.filter(_.nonEmpty))
+    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").filter(_.nonEmpty))
     // batch entries + the streaming runners (r17, verdict item 8:
     // stream_* paths had never been benched — additions-only, same
     // timed noop-sink loop; each stream fn drains its micro-batches
     // and returns the terminal state frame)
-    val results = (SparkEntry.benchQueries ++ SparkEntry.streamQueries)
+    val runs = (SparkEntry.benchQueries ++ SparkEntry.streamQueries)
       .toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         only.forall(_.exists(p => name == p || name.startsWith(p))) }
@@ -160,40 +195,36 @@ object Bench {
         val t0 = System.nanoTime()
         // noop sink: evaluates every output row (count() would let
         // Catalyst prune projection-only work and time ~nothing)
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // operators register every persist() and localCheckpoint() block
-        // with the global CacheScope; releasing it between queries drops
-        // them deterministically (checkpoint RDD handles included)
-        graft.operators.CacheScope.global.release()
-        // Broadcast-exchange blocks and shuffle state are NOT cache
-        // blocks: Spark's ContextCleaner reclaims them only after their
-        // driver-side references are GC'd. A single-JVM loop running
-        // 80+ queries never triggers that GC on its own, and the
-        // accumulated broadcasts thrash the heap — measured 2-40x
-        // slowdowns on the late queries of a reps=2 run. Nudging the
-        // collector here (outside the timed region) is how ContextCleaner
-        // is designed to be driven, not a substitute for the unpersist
-        // discipline above.
-        System.gc()
-        dt
-      }.sorted
-      // true median: for even reps the two middle samples are averaged
-      // (picking times(n/2) alone reported the max of a 2-rep run)
-      name -> (if (times.length % 2 == 1) times(times.length / 2)
-               else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0)
+        val rep =
+          try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+            Success((System.nanoTime() - t0) / 1e9)
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name: $e")
+            Failure(e)
+          }
+        GraftSession.isolate()
+        rep
+      }
+      name -> medianOfSuccesses(times).toRight(times.last.failed.get)
+    }
+    val results = runs.collect { case (name, Right(sec)) => name -> sec }
+    // an entry with no successful rep has no time: it leaves `queries`
+    // and `total` (and so the gate) and is reported under `failed`
+    val failed = runs.collect { case (name, Left(e)) =>
+      val msg = e.toString.replaceAll("[\"\\\\\\p{Cntrl}]", " ").take(200)
+      s""""$name":"$msg""""
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    val total = results.map(_._2).sum
     // Regression gate: compare against the recorded per-query medians
     // (bench/medians.json, written from the round's SPARK_GRAFT_REPS=3
     // recording — see BASELINE.md). A query is flagged when it runs
     // >1.5x its recorded median AND >0.5s over it (the absolute floor
     // keeps sub-second queries' scheduling noise out). Driver runs are
     // reps=1 cold — BASELINE.md documents a 1.2-1.5x cold-pass band on
-    // the TOTAL, so a flagged query is "investigate with BenchOne
+    // the TOTAL, so a flagged query is "investigate with `Bench one`
     // medians before believing", not "proven regression"; what the
     // gate ends is silent drift like round 4's unexplained
     // pipeline_app_chain 0.55->1.56s.
@@ -223,7 +254,7 @@ object Bench {
                    name.startsWith("dd_")) 1.7
           // two named multi-stage analytic heads measured at 1.5-1.75x
           // cold across rounds (r10 driver 1.51-1.56x, r11 preview
-          // 1.62-1.73x) while warm BenchOne reps converge to median —
+          // 1.62-1.73x) while warm `Bench one` reps converge to median —
           // the same scheduler+compile spread class as g_/dd_
           else if (name == "a_assoc_rules" ||
                    name == "eval_retrieval_metrics") 1.8
@@ -249,7 +280,93 @@ object Bench {
     }
     val regJson =
       if (regressions.isEmpty) "" else s""","regressions":${regressions.mkString("{", ",", "}")}"""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$regJson}""")
+    val failJson =
+      if (failed.isEmpty) "" else s""","failed":${failed.mkString("{", ",", "}")}"""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"$regJson$failJson}""")
     spark.stop()
+  }
+
+  private def one(name: String, repsArg: Option[String]): Unit = {
+    // resolve the name before any session starts: an unknown one
+    // fails fast with a non-zero exit
+    val fn = SparkEntry.queries.getOrElse(name, {
+      System.err.println(s"[bench-one] no such query: $name")
+      sys.exit(2)
+    })
+    val reps = GraftSession.knob("reps", repsArg, default = 2, min = 1).toInt
+    val spark = session()
+    // same table pre-warm as the full pass, so rep-1 timings are
+    // comparable; none of its staged or named-entry warmups
+    prewarmTables(spark)
+    // SPARK_GRAFT_STAGES=1 → dump the slowest stages of the last rep
+    // (wall duration + summed task time + task count), for finding
+    // which part of a multi-stage query dominates
+    val stages = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Int, Long, Long)]
+    if (sys.env.get("SPARK_GRAFT_STAGES").contains("1"))
+      spark.sparkContext.addSparkListener(
+        new org.apache.spark.scheduler.SparkListener {
+          override def onStageCompleted(
+              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+            val si = sc.stageInfo
+            val wall = (for (a <- si.submissionTime; b <- si.completionTime)
+              yield b - a).getOrElse(0L)
+            stages.synchronized {
+              stages += ((si.stageId, si.name.takeWhile(_ != '\n').take(80),
+                si.numTasks, wall, si.taskMetrics.executorRunTime))
+            }
+          }
+        })
+    // listener events arrive on the async bus; give stragglers a beat
+    // before clearing for the last rep / dumping at the end, so the
+    // dump neither misses late completions nor blends reps
+    def settleBus(): Unit = Thread.sleep(300)
+    (1 to reps).foreach { i =>
+      if (i == reps) { settleBus(); stages.synchronized(stages.clear()) }
+      val t0 = System.nanoTime()
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+      println(f"[bench-one] $name rep $i: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+      GraftSession.isolate()
+    }
+    settleBus()
+    stages.synchronized {
+      stages.sortBy(-_._4).take(15).foreach { case (id, n, t, wall, run) =>
+        println(f"[stage] $id%5d wall=${wall / 1e3}%6.2fs taskSum=${run / 1e3}%7.2fs tasks=$t%4d  $n")
+      }
+    }
+    spark.stop()
+  }
+
+  /** Any stale `<name>.txt` is deleted BEFORE the dump is attempted,
+    * so a failed re-dump can never leave a prior run's plan posing as
+    * current evidence. Exits non-zero when a name is unknown or its
+    * dump failed. */
+  private def explain(outDir: String, namesArg: Option[String]): Unit = {
+    val names = namesArg.fold(SparkEntry.benchQueries.keys.toSeq.sorted)(
+      _.split(",").toSeq.filter(_.nonEmpty))
+    val spark = session()
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
+    val ok = names.map { n =>
+      SparkEntry.queries.get(n) match {
+        case None =>
+          System.err.println(s"[explain] no such query: $n")
+          false
+        case Some(fn) =>
+          val out = java.nio.file.Paths.get(outDir, s"$n.txt")
+          try {
+            java.nio.file.Files.deleteIfExists(out)
+            val txt = fn(spark, sfDir).queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode)
+            java.nio.file.Files.write(out, txt.getBytes("UTF-8"))
+            println(s"[explain] wrote $outDir/$n.txt")
+            true
+          } catch {
+            case e: Throwable =>
+              System.err.println(s"[explain] $n failed: $e")
+              false
+          } finally graft.operators.CacheScope.global.release()
+      }
+    }
+    spark.stop()
+    if (ok.contains(false)) sys.exit(1)
   }
 }

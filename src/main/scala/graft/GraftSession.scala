@@ -14,9 +14,7 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Scale-adaptive AQE parallelism floor (optimization guide
-    * §2.2/§2.5), the ONE place the default and env knob live (r17,
-    * advisor note: the value was previously repeated across 6 session
-    * builders). AQE's parallelism-first coalescing targets
+    * §2.2/§2.5). AQE's parallelism-first coalescing targets
     * max(minPartitionSize, totalBytes/defaultParallelism); Spark's
     * 1 MiB default floor serializes byte-small but CPU-dense shuffle
     * stages (measured: the decimal-exact graph iterations at 2 tasks
@@ -36,12 +34,11 @@ object GraftSession {
     * loops ([[withMinCoalesced]]); 512k was measured as a compromise
     * and won neither class (probe totals 52.0 / 53.9 / 52.2 s for
     * 1m / 512k / 256k). At cluster scale totalBytes/parallelism >>
-    * 256k so the floor is inert. Env-overridable
-    * (`SPARK_GRAFT_MIN_COALESCED`) for A/B probes and cluster
-    * overrides.
+    * 256k so the floor is inert. An embedder that wants another floor
+    * sets the key on [[builder]] (a later `.config` wins); a Bench A/B
+    * probe sets it through `SPARK_GRAFT_CONF`.
     */
-  def minCoalescedDefault: String =
-    sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCED", "256k")
+  val minCoalescedDefault: String = "256k"
 
   /** Run `body` with the AQE coalescing floor temporarily set to
     * `value`, restoring the previous session value after. Used by the
@@ -77,7 +74,7 @@ object GraftSession {
     * "Observed convergence rounds"). The cache splits its entries
     * over 4 LRU segments, so the constant leaves room above the larger
     * working set. A static conf: it must be set before the session
-    * starts, so [[tune]] cannot apply it.
+    * starts.
     */
   val CodegenCacheEntries = 512
 
@@ -101,6 +98,8 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
+      // permissive-cast semantics (null on bad parse), mirroring the
+      // DuckDB oracle's TRY_CAST-based SQL
       .config("spark.sql.ansi.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the test-data generator writes timestamp[us] with
@@ -116,6 +115,10 @@ object GraftSession {
       // after ~160 back-to-back queries without it (SCALE.md); the
       // default interval is 30min.
       .config("spark.cleaner.periodicGC.interval", "5min")
+      // reliable checkpoints (GRAFT_CHECKPOINT_DIR, see CacheScope) leave
+      // files behind unless the ContextCleaner may delete them; local
+      // checkpoints are unaffected
+      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.ui.enabled", "false")
 
   def getOrCreate(): SparkSession = {
@@ -124,17 +127,46 @@ object GraftSession {
     spark
   }
 
-  /** Apply engine defaults to an externally-created session (Verify/Bench
-    * create their own). Idempotent; safe on a running session.
+  /** The session of the harness mains (Bench, Verify, StoreSoak,
+    * WireSoak): `local[SPARK_GRAFT_CPUS]` (default 4) with as many
+    * shuffle partitions, log level WARN.
     */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set(
-      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-      minCoalescedDefault)
+  def harness(): SparkSession = {
+    val cpus = knob("SPARK_GRAFT_CPUS", sys.env.get("SPARK_GRAFT_CPUS"),
+      default = 4, min = 1).toInt
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** Isolation between two queries of a harness main, which runs them
+    * strictly serially (see [[graft.operators.CacheScope.global]]).
+    * Operators register every persist() and localCheckpoint() block
+    * with the global CacheScope; releasing it drops them
+    * deterministically (checkpoint RDD handles included).
+    * Broadcast-exchange blocks and shuffle state are NOT cache blocks:
+    * Spark's ContextCleaner reclaims them only after their driver-side
+    * references are GC'd. A single-JVM loop running 80+ queries never
+    * triggers that GC on its own, and the accumulated broadcasts thrash
+    * the heap — measured 2-40x slowdowns on the late queries of a
+    * reps=2 run. Nudging the collector here (outside the timed region)
+    * is how ContextCleaner is designed to be driven, not a substitute
+    * for the unpersist discipline.
+    */
+  private[graft] def isolate(): Unit = {
+    graft.operators.CacheScope.global.release()
+    System.gc()
+  }
+
+  /** An integer knob: `raw` is its value (an env var's or an
+    * argument's), `None` means `default`. A value that is not an
+    * integer `>= min` fails naming the knob, so a typo never reaches
+    * Spark as `local[abc]` or a bare NumberFormatException.
+    */
+  def knob(name: String, raw: Option[String], default: Long, min: Long): Long =
+    raw.fold(default) { s =>
+      s.trim.toLongOption.filter(_ >= min).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be an integer >= $min, got '$s'"))
+    }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.cypher.{GraphStore, PropertyGraph}
 
 /** Statement-volume soak for the Cypher WRITE surface (round-12
@@ -50,23 +48,10 @@ object StoreSoak {
     val days = if (args.length > 0) args(0).toInt else 90
     val stations = if (args.length > 1) args(1).toInt else 4
     val seedRows = if (args.length > 2) args(2).toLong else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.harness()
     import spark.implicits._
 
     import org.apache.spark.sql.functions._
-
-    // an integer env knob; a bad value fails with the variable NAMED
-    def envKnob(name: String, default: Long): Long =
-      sys.env.get(name).map(s => scala.util.Try(s.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"$name must be an integer, got '$s'"))).getOrElse(default)
 
     // optional standing-graph seed: a ring of `seedRows` Seed vertices
     // + edges in the store's structured layout, materialized eagerly
@@ -105,8 +90,8 @@ object StoreSoak {
       // fires on soak-sized replays — the seeded leveled-fold
       // measurement (SCALE.md round-15). An unbucketed store folds
       // per write whatever its value.
-      val ovBudget =
-        envKnob("GRAFT_SOAK_OVERLAY_ROWS", GraphStore.OverlayFoldRows)
+      val ovBudget = GraftSession.knob("GRAFT_SOAK_OVERLAY_ROWS",
+        sys.env.get("GRAFT_SOAK_OVERLAY_ROWS"), GraphStore.OverlayFoldRows, min = 0)
       new GraphStore(initial,
         Map("Station" -> Seq("sid"), "WeatherDay" -> Seq("sid", "date")),
         overlayFoldRows = ovBudget)
@@ -125,7 +110,8 @@ object StoreSoak {
     // session/codegen warmup
     store.execute("MERGE (s:Station {sid: -1})")
     val marks = Seq(rows.length / 4, rows.length / 2, rows.length)
-    val gcEvery = envKnob("SPARK_GRAFT_SOAK_GC", 64L)
+    val gcEvery = GraftSession.knob("SPARK_GRAFT_SOAK_GC",
+      sys.env.get("SPARK_GRAFT_SOAK_GC"), default = 64, min = 0)
     val t0 = System.nanoTime()
     var tWin = t0
     val times = scala.collection.mutable.LinkedHashMap.empty[Int, Double]

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,35 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter (dev loop)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // permissive-cast semantics (null on bad parse) to mirror the
-      // DuckDB oracle's TRY_CAST-based SQL
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the test-data generator writes timestamp[us] with
-      // isAdjustedToUTC=false; without this, Spark 4 infers
-      // TIMESTAMP_NTZ and unix_micros/watermarks reject the column.
-      // Reading as TIMESTAMP under the UTC session zone yields the
-      // same values DuckDB sees for the same bytes.
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let AQE re-plan ON TOP of cached plans too: persisted frames
-      // otherwise pin their shuffle partitioning, and a union of many
-      // small cached branches schedules partitions-per-branch tiny
-      // tasks (measured 2x wall on g_assembly at local[32])
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // scale-adaptive parallelism floor — see GraftSession.minCoalescedDefault
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        GraftSession.minCoalescedDefault)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val only = args.lift(2).map(_.split(",").toSet)
+    val spark = GraftSession.harness()
     new java.io.File(outDir).mkdirs()
     // manifest: query → row count + order-independent content hash of
     // the WRITTEN parquet (read back, so it attests exactly the bytes
@@ -113,11 +85,7 @@ object Verify {
       }
       finally {
         flushManifest()
-        graft.operators.CacheScope.global.release()
-        // let ContextCleaner reclaim broadcast/shuffle state between
-        // queries — GC-driven by design; a 80-query single-JVM loop
-        // never triggers it on its own (see Bench for the measurement)
-        System.gc()
+        GraftSession.isolate()
       }
     }
     flushManifest()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Wire-sink scale soak: drive [[graft.sinks.CypherSink.writeGraph]]
   * through the REAL TCP Bolt transport over an amplified (~10× sf0.1)
   * fixture, sweeping the UNWIND batch size — the knob the reference
@@ -20,21 +18,8 @@ import org.apache.spark.sql.SparkSession
 object WireSoak {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val sizes =
-      (if (args.length > 1) args(1) else "500,1000,5000")
-        .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val sizes = args.lift(1).getOrElse("500,1000,5000").split(",").map(_.trim.toInt).toSeq
+    val spark = GraftSession.harness()
 
     import graft.sinks.{CypherSink, InMemoryBolt}
     import graft.sinks.bolt.{BoltLoopbackServer, BoltSocketSessionFactory}
@@ -64,8 +49,7 @@ object WireSoak {
           s"store mismatch at batchSize=$bs: " +
             s"${st.nodes.size}/$nV nodes, ${st.edges.size}/$nE edges")
       } finally { srv.close(); InMemoryBolt.drop(token) }
-      graft.operators.CacheScope.global.release()
-      System.gc()
+      GraftSession.isolate()
     }
     spark.stop()
   }

@@ -42,9 +42,11 @@ final class CacheScope {
     * store on a cluster): survives executor loss, costs one write +
     * read-back of the frame. Inert locally (env unset → localCheckpoint
     * exactly as before). Reliable checkpoint files are reclaimed by
-    * the ContextCleaner once the RDD handle released here is GC'd
-    * (`spark.cleaner.referenceTracking.cleanCheckpoints=true`), or by
-    * deleting the directory between runs.
+    * the ContextCleaner once the RDD handle released here is GC'd:
+    * [[graft.GraftSession.builder]] sets
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (Spark's
+    * default is false). A session built elsewhere must set it too, or
+    * delete the directory between runs.
     */
   private[graft] def checkpoint[T](ds: Dataset[T]): Dataset[T] = synchronized {
     val cp = CacheScope.reliableDir match {

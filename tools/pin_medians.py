@@ -25,7 +25,15 @@ from pathlib import Path
 def load(path):
     for ln in open(path, errors="replace"):
         if '"metric"' in ln and '"queries"' in ln:
-            return json.loads(ln[ln.index('{'):])["queries"]
+            rec = json.loads(ln[ln.index('{'):])
+            failed = rec.get("failed", {})
+            if failed:
+                # an entry with no successful rep has no time; pinning the
+                # rest would silently drop it from the gate
+                raise SystemExit(f"{path}: refusing to pin a recording with "
+                                 f"{len(failed)} failed entries: "
+                                 f"{', '.join(sorted(failed))}")
+            return rec["queries"]
     raise SystemExit(f"no bench JSON line in {path}")
 
 
