@@ -17,50 +17,19 @@ object GraftSession {
     * §2.2/§2.5). AQE's parallelism-first coalescing targets
     * max(minPartitionSize, totalBytes/defaultParallelism); Spark's
     * 1 MiB default floor serializes byte-small but CPU-dense shuffle
-    * stages (measured: the decimal-exact graph iterations at 2 tasks
-    * on 32 cores, 2x the query wall).
-    *
-    * The r17 interleaved REPS=4 32-core A/B over {1m, 512k, 256k}
-    * (14 probes, OPTIMIZATION_r17.md) found the floor is CLASS-split,
-    * not one-value-fits-all: 256k wins the fixed-iteration
-    * message-passing plans (g_hits 3.08 vs 5.42 s at 1m, g_pagerank
-    * 4.37 vs 5.94, ts_theilsen 1.58 vs 1.93) and LOSES the many-round
-    * CONVERGENCE loops whose per-round state is tiny (g_kcore_cert
-    * 4.26 vs 3.02, g_mis 6.65 vs 5.40, g_kcore 4.31 vs 3.36) — over-
-    * fanning multiplies (rounds x probe-jobs x fixed task cost), the
-    * exact anti-scaling the r16 driver measured at 8-vs-32 cores. So
-    * the global default stays 256k and the convergence-loop operators
-    * scope themselves back to Spark's 1m default around their round
-    * loops ([[withMinCoalesced]]); 512k was measured as a compromise
-    * and won neither class (probe totals 52.0 / 53.9 / 52.2 s for
-    * 1m / 512k / 256k). At cluster scale totalBytes/parallelism >>
-    * 256k so the floor is inert. An embedder that wants another floor
-    * sets the key on [[builder]] (a later `.config` wins); a Bench A/B
-    * probe sets it through `SPARK_GRAFT_CONF`.
+    * stages onto a few tasks. The r17 interleaved 32-core A/B over
+    * {1m, 512k, 256k} (OPTIMIZATION_r17.md) found 256k best for the
+    * byte-small plans that still run through AQE, e.g. ts_theilsen
+    * (1.58 s at 256k vs 1.93 s at 1m). The graph loops it also timed
+    * no longer plan through AQE: their rounds run as RDD supersteps on
+    * `spark.sql.shuffle.partitions` partitions (see
+    * [[graft.operators.GraphOps]]), so no operator scopes the floor.
+    * At cluster scale totalBytes/parallelism >> 256k and the floor is
+    * inert. An embedder that wants another floor sets the key on
+    * [[builder]] (a later `.config` wins); a Bench A/B probe sets it
+    * through `SPARK_GRAFT_CONF`.
     */
   val minCoalescedDefault: String = "256k"
-
-  /** Run `body` with the AQE coalescing floor temporarily set to
-    * `value`, restoring the previous session value after. Used by the
-    * many-round convergence-loop operators (k-core peel, MIS,
-    * converged CC) to run their per-round probe + checkpoint actions
-    * at Spark's 1m default while the session keeps the global
-    * [[minCoalescedDefault]] — the 32-core A/B showed the two classes
-    * want opposite floors (see above). The conf is session-global:
-    * under concurrent queries the scope leaks to whatever else runs
-    * during `body` (harness mains run strictly serially; concurrent
-    * embedders should isolate with their own session).
-    */
-  def withMinCoalesced[T](spark: SparkSession, value: String)(body: => T): T = {
-    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-    val old = try Some(spark.conf.get(key)) catch { case _: Exception => None }
-    spark.conf.set(key, value)
-    try body
-    finally old match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
 
   /** Entries of Spark's JVM-wide generated-class cache
     * (`spark.sql.codegen.cache.maxEntries`, Spark's default 100).

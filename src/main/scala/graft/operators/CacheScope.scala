@@ -3,17 +3,18 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
 /** Lifecycle owner for blocks an operator materializes on the cluster:
   * `persist()`ed intermediates (LSH signatures, inverted indexes) and
-  * `localCheckpoint()` RDDs (graph-iteration bases). Operators that
-  * cache register here instead of calling `persist` directly, and the
-  * caller releases the scope after its terminal action — so a
-  * long-running job (100 TB session running many queries) never
-  * accumulates squatting storage blocks, and the bench needs no
-  * clearCache/System.gc crutch between queries.
+  * checkpointed frames and RDDs (graph-iteration bases and states).
+  * Operators that cache register here instead of calling `persist`
+  * directly, and the caller releases the scope after its terminal
+  * action — so a long-running job (100 TB session running many
+  * queries) never accumulates squatting storage blocks, and the bench
+  * needs no clearCache/System.gc crutch between queries.
   *
   * Operators default to [[CacheScope.global]]; pass a dedicated scope
   * to bound an individual query's cache lifetime.
@@ -59,6 +60,24 @@ final class CacheScope {
     cp.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
       .foreach(rdds += _)
     cp
+  }
+
+  /** Checkpoint `rdd` the way [[checkpoint]] does a Dataset — local, or
+    * reliable under `GRAFT_CHECKPOINT_DIR` — and register it for
+    * release. The checkpoint is lazy: the next job that computes `rdd`
+    * materializes it (a reliable one in one more job, which reads the
+    * blocks persisted here instead of recomputing). Returns `rdd`.
+    */
+  private[graft] def checkpoint[T](rdd: RDD[T]): RDD[T] = synchronized {
+    CacheScope.reliableDir match {
+      case Some(dir) =>
+        val sc = rdd.sparkContext
+        if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
+        rdd.persist(StorageLevel.MEMORY_AND_DISK).checkpoint()
+      case None => rdd.localCheckpoint()
+    }
+    rdds += rdd
+    rdd
   }
 
   /** Drop every block this scope owns (non-blocking). Idempotent. */

@@ -1,26 +1,38 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import java.math.{BigInteger, MathContext, RoundingMode, BigDecimal => JBigDecimal}
+
+import scala.collection.mutable.{ArrayBuffer, LongMap}
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Graph view + graph analytics over DataFrames (SURVEY §4.2.3, §7 M7).
   *
   * The reference materializes a property graph of key-joined node
   * tables (§1.2/§1.3); here the graph IS the pair (vertices DF,
-  * edges DF), and the algorithms are iterative DataFrame programs.
-  * The message-passing ones (PageRank, HITS, components, SSSP) run
-  * every round as one [[superstep]]: vertex state ⋈ edges → messages →
-  * group-by on the receiving vertex — the plan Pregelix and GraphX's
-  * Pregel generate, but in DataFrames so Catalyst/AQE optimize it and
-  * the DuckDB oracle can replay it. Each superstep shuffles its
-  * messages by receiver, and its state ⋈ edge join plans an exchange
-  * or a broadcast as well (checkpointed edges record no partitioning
-  * under AQE, see [[pageRank]]). The converged forms share one
-  * convergence loop, [[converge]].
+  * edges DF), and the algorithms take and return DataFrames. The
+  * message-passing ones (PageRank, HITS, components, SSSP, k-core, MIS)
+  * run every round through one kernel, [[superstep]], the physical plan
+  * of Pregelix and GraphX's Pregel: per operator call the graph is an
+  * RDD of (vertex id, adjacency) checkpointed once, and the vertex state
+  * an RDD of (id, value), both under one `HashPartitioner` of
+  * `spark.sql.shuffle.partitions`. The state ⋈ adjacency join is then
+  * partition-local and a round's only shuffle is the message combine.
+  * The converged forms share one convergence loop, [[converge]], which
+  * runs each window of rounds as one job. DataFrames appear only at the
+  * operator boundary, with the column names and types of the SQL the
+  * DuckDB oracle replays.
   *
-  * Determinism: per-iteration sums go through a decimal cast
-  * ([[qsum]]), so the ranks are bit-identical regardless of
+  * Determinism: per-round sums are exact decimal sums quantized to the
+  * 1e-9 grid ([[qsum]] in SQL, [[qterm]]/[[qvalue]] in the kernel, bit
+  * for bit the same), so the ranks are bit-identical regardless of
   * partitioning — an engine running on 1000 executors produces the
   * same bytes as DuckDB single-threaded.
   */
@@ -31,11 +43,43 @@ object GraphOps {
     * integer (×1e9, round, BIGINT) because a direct decimal→double cast
     * is correctly rounded in the JVM but 1-ulp off in engines that
     * convert via (int128→double)/10^scale — that ulp compounds across
-    * iterations on hub vertices.
+    * iterations on hub vertices. The kernel computes the same value
+    * with [[qterm]] and [[qvalue]].
     */
-  private def qsum(c: Column): Column =
+  private[operators] def qsum(c: Column): Column =
     round(sum(c.cast("decimal(27,15)")) * 1000000000L)
       .cast("long").cast("double") / 1.0e9
+
+  /** One term of the kernel's [[qsum]]: the message's decimal(27,15)
+    * value (Spark's double→decimal cast: the shortest decimal string,
+    * rounded half-up to 15 places) as an unscaled integer. Terms add
+    * exactly, in any order.
+    */
+  private[operators] def qterm(m: Double): BigInteger =
+    new JBigDecimal(java.lang.Double.toString(m), MathContext.DECIMAL128)
+      .setScale(15, RoundingMode.HALF_UP).unscaledValue
+
+  /** The double of a sum of [[qterm]]s: ×1e9 (scale 15 → 6), rounded
+    * half-up to an integer, /1e9 — [[qsum]]'s last three steps.
+    */
+  private[operators] def qvalue(sum: BigInteger): Double =
+    new JBigDecimal(sum, 6).setScale(0, RoundingMode.HALF_UP).longValueExact / 1.0e9
+
+  /** HITS's normalization n / d re-quantized to the 1e-9 grid, as
+    * Spark evaluates `round(n / d * 1e9).cast(long).cast(double) / 1e9`:
+    * double division, a half-up round of the shortest decimal string
+    * (NaN and infinities pass), a saturating cast. Spark's division by
+    * zero is NULL, which every HITS consumer reads as 0.0 (a skipped
+    * message, a coalesced output), so it is 0.0 here.
+    */
+  private[operators] def qdiv(n: Double, d: Double): Double =
+    if (d == 0.0) 0.0
+    else {
+      val x = n / d * 1000000000L
+      val r = if (x.isNaN || x.isInfinite) x
+        else JBigDecimal.valueOf(x).setScale(0, RoundingMode.HALF_UP).doubleValue
+      r.toLong.toDouble / 1.0e9
+    }
 
   /** The vertex set (id) of an edge frame (src, dst). */
   private def vertexIds(e: DataFrame): DataFrame =
@@ -55,78 +99,280 @@ object GraphOps {
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
 
-  /** One message-passing superstep: every edge whose `src` has a row in
-    * `state` (keyed by `id`) sends `message` to its `dst`, and the
-    * messages are combined per receiving vertex by the aggregate
-    * `combine`. Zero-padding rows `pad` (id, m), if given, join the
-    * messages before the group-by, and their value column m names the
-    * message. Output: (id, combine). The group-by is the round's
-    * shuffle; the state is referenced once, so a chain of supersteps
-    * grows its plan linearly and runs as one job of pipelined shuffle
-    * stages.
+  // ---------------------------------------------------------------
+  // The superstep kernel.
+  // ---------------------------------------------------------------
+
+  /** One operator call's graph: `adj`, every vertex once with its
+    * adjacency payload, checkpointed; `part`, the partitioner of `adj`
+    * and of every state and message RDD of the call; `idType`, the id
+    * column type of the output frame (the input's, as the SQL form
+    * keeps it).
     */
-  private def superstep(edges: DataFrame, state: DataFrame, message: Column,
-                        combine: Column => Column, pad: Option[DataFrame] = None): DataFrame = {
-    val joined = edges.join(state, edges("src") === state("id"))
-    pad.fold(joined.groupBy(col("dst").as("id")).agg(combine(message))) { p =>
-      val m = p.columns.last
-      joined.select(col("dst").as("id"), message.as(m)).unionByName(p)
-        .groupBy(col("id")).agg(combine(col(m)))
+  private final case class Graph[A](adj: RDD[(Long, A)], part: Partitioner,
+                                    idType: DataType, spark: SparkSession)
+
+  /** The kernel [[Graph]] over `edges` (src, dst): `build` groups the
+    * adjacency under the call's partitioner, and the result is
+    * checkpointed once. `ids` (id) frames add to the id type.
+    */
+  private def graph[A](edges: DataFrame, scope: CacheScope, ids: DataFrame*)
+                      (build: Partitioner => RDD[(Long, A)]): Graph[A] = {
+    val spark = edges.sparkSession
+    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val idType = (Seq(edges.select(col("src").as("id")), edges.select(col("dst").as("id"))) ++
+      ids.map(_.select(col("id")))).reduce(_ union _).schema.head.dataType
+    Graph(held(build(part), scope), part, idType, spark)
+  }
+
+  /** The (src, dst) rows of `edges` as longs; a row with a null end
+    * names no vertex and is dropped.
+    */
+  private def pairs(edges: DataFrame): RDD[(Long, Long)] =
+    edges.select(col("src").cast("long"), col("dst").cast("long")).na.drop().rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+
+  /** The ids of an (id) frame as longs, nulls dropped. */
+  private def idRdd(ids: DataFrame): RDD[Long] =
+    ids.select(col("id").cast("long")).na.drop().rdd.map(_.getLong(0))
+
+  /** Groups the payloads `out` (vertex, payload) by vertex under `part`;
+    * every vertex of `also` appears too, with no payload.
+    */
+  private def adjacency[E: ClassTag](out: RDD[(Long, E)], also: RDD[Long],
+                                     part: Partitioner): RDD[(Long, Array[E])] =
+    combined(out.map { case (v, e) => (v, ArrayBuffer(e)) }
+      .union(also.map((_, ArrayBuffer.empty[E]))), part)(_ ++= _)
+      .mapValues(_.toArray)
+
+  /** The distinct neighbours of every vertex over both directions of
+    * the (src, dst) rows `p`; a self-loop makes a vertex its own
+    * neighbour.
+    */
+  private def undirected(p: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Array[Long])] =
+    adjacency(p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }, p.sparkContext.emptyRDD[Long], part)
+      .mapValues(_.distinct)
+
+  /** The undirected simple graph of `edges` (self-loops dropped, every
+    * vertex pair once — [[canonical]]): distinct neighbours per vertex.
+    */
+  private def simpleGraph(edges: DataFrame, scope: CacheScope): Graph[Array[Long]] =
+    graph(edges, scope)(undirected(pairs(edges).filter { case (a, b) => a != b }, _))
+
+  /** `f` over every (id, value) row of `rdd`, keys and partitioning
+    * kept.
+    */
+  private def update[A, B: ClassTag](rdd: RDD[(Long, A)])(f: (Long, A) => B): RDD[(Long, B)] =
+    rdd.mapPartitions(new Update(f), preservesPartitioning = true)
+
+  /** A state over every vertex of `g`, co-partitioned with it. */
+  private def init[A, S: ClassTag](g: Graph[A])(f: (Long, A) => S): RDD[(Long, S)] =
+    update(g.adj)(f)
+
+  /** `msgs` combined per receiving vertex under `part`: in a
+    * partition-local hash map before the shuffle and again after it.
+    * The shuffle itself carries no aggregator, so while `part` has at
+    * most `spark.shuffle.sort.bypassMergeThreshold` (200) partitions
+    * Spark writes it with its bypass-merge writer — no sort and no
+    * sampling of the combine map's size, which (with `reduceByKey`)
+    * took a large share of a round's task time.
+    */
+  private def combined[M: ClassTag](msgs: RDD[(Long, M)], part: Partitioner)
+                                   (combine: (M, M) => M): RDD[(Long, M)] =
+    new ShuffledRDD[Long, M, M](msgs.mapPartitions(new Combine(combine)), part)
+      .mapPartitions(new Combine(combine), preservesPartitioning = true)
+
+  /** `rdd`, checkpointed in `scope` as one array per partition. The
+    * block store sizes a deserialized block by sampling it as it grows,
+    * which on one record per vertex took a large share of a round's
+    * task time; an array is one record. The returned RDD exists before
+    * the checkpoint does, so it keeps `rdd`'s partition objects: `rdd`
+    * must end in a shuffle or a partition-local join of shuffled and
+    * held RDDs, not in a chain of earlier rounds (see [[converge]]).
+    */
+  private def held[T: ClassTag](rdd: RDD[T], scope: CacheScope): RDD[T] =
+    scope.checkpoint(arrays(rdd)).mapPartitions(new Unpack[T], preservesPartitioning = true)
+
+  /** `rdd.glom()`, except that `glom`'s closure captures `rdd` itself,
+    * so a checkpointed glom still serializes its whole cut lineage into
+    * every task that reads it.
+    */
+  private def arrays[T: ClassTag](rdd: RDD[T]): RDD[Array[T]] =
+    rdd.mapPartitions(new Pack[T], preservesPartitioning = true)
+
+  /** One superstep: a partition-local hash join of the graph with the
+    * co-partitioned `state` (a vertex without a state row sends
+    * nothing), `send`'s messages, and their [[combined]] value per
+    * receiving vertex — the step's only shuffle. Output: (id, combined
+    * message), under the graph's partitioner.
+    */
+  private def superstep[A, S: ClassTag, M: ClassTag](g: Graph[A], state: RDD[(Long, S)])
+      (send: (Long, A, S) => Iterator[(Long, M)])(combine: (M, M) => M): RDD[(Long, M)] =
+    combined(g.adj.zipPartitions(state)(new Send(send)), g.part)(combine)
+
+  /** Partition-local left join of two co-partitioned RDDs: `f` maps
+    * every row of `left` with its `right` value, if any.
+    */
+  private def zipLocal[S: ClassTag, T: ClassTag, U: ClassTag](left: RDD[(Long, S)], right: RDD[(Long, T)])
+      (f: (Long, S, Option[T]) => U): RDD[(Long, U)] =
+    left.zipPartitions(right, preservesPartitioning = true)(new Join(f))
+
+  /** The operator's output frame over the kernel's `rows`, columns
+    * `names`; the vertex-id columns (id, v, comp) take the graph's id
+    * type.
+    */
+  private def frame[T <: Product : TypeTag](g: Graph[_], rows: RDD[T], names: String*): DataFrame =
+    g.spark.createDataFrame(rows).toDF(names: _*).select(names.map { n =>
+      if (Set("id", "v", "comp")(n)) col(n).cast(g.idType).as(n) else col(n)
+    }: _*)
+
+  /** The convergence loop of the converged forms. From `start`, it runs
+    * windows of up to `window` steps until a window ends with no
+    * vertex signalled, or until `maxIterations` steps have run (the
+    * runaway bound). `round(state, steps)` chains one window of `steps`
+    * steps lazily and returns the new state with each vertex's signal.
+    * The window is checkpointed and its signal counted by the one
+    * action that materializes it, so each window is one job.
+    */
+  private def converge[S: ClassTag](start: RDD[(Long, S)], window: Int, maxIterations: Int,
+                                    scope: CacheScope)
+                                   (round: (RDD[(Long, S)], Int) => RDD[(Long, (S, Boolean))])
+      : RDD[(Long, S)] = {
+    var (state, signalled, iter) = (start, 1L, 0)
+    while (signalled > 0L && iter < maxIterations) {
+      val steps = math.min(window, maxIterations - iter)
+      // [[held]]'s array form, counted before the next state is derived:
+      // derived before the checkpoint, the state would keep the
+      // window's partition chain and every later task would carry all
+      // earlier windows
+      val marked = scope.checkpoint(arrays(round(state, steps)))
+      signalled = marked.sparkContext.runJob(marked, new Signalled[S]).sum
+      state = update(marked.mapPartitions(new Unpack[(Long, (S, Boolean))],
+        preservesPartitioning = true))((_, s) => s._1)
+      iter += steps
+    }
+    state
+  }
+
+  // The kernel hands Spark named function classes, not lambdas: for
+  // every lambda it is given, Spark's closure cleaner parses the class
+  // that defines it (to reject `return`s), and on this object that
+  // parse took most of the driver's time per round.
+
+  /** [[combined]]'s partition-local combine. */
+  private final class Combine[M](f: (M, M) => M)
+      extends (Iterator[(Long, M)] => Iterator[(Long, M)]) with Serializable {
+    def apply(it: Iterator[(Long, M)]): Iterator[(Long, M)] = {
+      val acc = LongMap.empty[M]
+      it.foreach { case (k, m) => acc.update(k, acc.get(k).fold(m)(f(_, m))) }
+      acc.iterator
     }
   }
 
-  /** PageRank's message edges (src, dst, frac): frac = w / Σ_out w over
-    * the integer weights `w`, or 1 / outdeg at unit weight — one IEEE
-    * division per edge that every engine computes identically.
-    */
-  private def fracEdges(e: DataFrame, weighted: Boolean = false): DataFrame = {
-    val (out, frac) =
-      if (weighted) (sum(col("w")), col("w").cast("double") / col("out").cast("double"))
-      else (count(lit(1)), lit(1.0) / col("out"))
-    e.join(e.groupBy(col("src")).agg(out.as("out")), "src")
-      .select(col("src"), col("dst"), frac.as("frac"))
+  /** [[superstep]]'s hash join and send. */
+  private final class Send[A, S, M](f: (Long, A, S) => Iterator[(Long, M)])
+      extends ((Iterator[(Long, A)], Iterator[(Long, S)]) => Iterator[(Long, M)]) with Serializable {
+    def apply(vs: Iterator[(Long, A)], ss: Iterator[(Long, S)]): Iterator[(Long, M)] = {
+      val st = LongMap.from(ss)
+      vs.flatMap { case (id, a) => st.get(id).fold(Iterator.empty[(Long, M)])(f(id, a, _)) }
+    }
   }
 
-  /** The checkpointed PageRank inputs over checkpointed edges `e`: the
-    * vertex set, the [[fracEdges]] spread on src, and one zero
-    * contribution per vertex. The zero rows replace a per-iteration
-    * `vertices LEFT JOIN summed` that re-attached vertices without
-    * inflow: summing an extra 0 is a no-op for receivers and yields
-    * reset + damp·0 for the rest — identical values, one fewer join
-    * per iteration.
-    */
-  private def rankEdges(e: DataFrame, scope: CacheScope, weighted: Boolean = false)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val vertices = scope.checkpoint(vertexIds(e))
-    val frac = scope.checkpoint(fracEdges(e, weighted).repartition(col("src")))
-    (vertices, frac, scope.checkpoint(vertices.select(col("id"), lit(0.0).as("contrib"))))
+  /** [[zipLocal]]'s hash join. */
+  private final class Join[S, T, U](f: (Long, S, Option[T]) => U)
+      extends ((Iterator[(Long, S)], Iterator[(Long, T)]) => Iterator[(Long, U)]) with Serializable {
+    def apply(ls: Iterator[(Long, S)], rs: Iterator[(Long, T)]): Iterator[(Long, U)] = {
+      val r = LongMap.from(rs)
+      ls.map { case (id, s) => (id, f(id, s, r.get(id))) }
+    }
   }
 
-  /** One PageRank step over [[rankEdges]]: rank(v) = reset + damp ·
+  /** [[update]]'s map. */
+  private final class Update[A, B](f: (Long, A) => B)
+      extends (Iterator[(Long, A)] => Iterator[(Long, B)]) with Serializable {
+    def apply(it: Iterator[(Long, A)]): Iterator[(Long, B)] = it.map { case (id, a) => (id, f(id, a)) }
+  }
+
+  /** One partition as one array. */
+  private final class Pack[T: ClassTag] extends (Iterator[T] => Iterator[Array[T]]) with Serializable {
+    def apply(it: Iterator[T]): Iterator[Array[T]] = Iterator.single(it.toArray)
+  }
+
+  /** [[Pack]]'s inverse. */
+  private final class Unpack[T] extends (Iterator[Array[T]] => Iterator[T]) with Serializable {
+    def apply(it: Iterator[Array[T]]): Iterator[T] = it.flatMap(_.iterator)
+  }
+
+  /** The exact [[qterm]] sum of one partition's values. */
+  private final class QTotal extends (Iterator[(Long, Double)] => BigInteger) with Serializable {
+    def apply(it: Iterator[(Long, Double)]): BigInteger =
+      it.foldLeft(BigInteger.ZERO)((acc, v) => acc.add(qterm(v._2)))
+  }
+
+  /** [[converge]]'s count of signalled vertices in one packed partition. */
+  private final class Signalled[S] extends (Iterator[Array[(Long, (S, Boolean))]] => Long)
+      with Serializable {
+    def apply(it: Iterator[Array[(Long, (S, Boolean))]]): Long = it.map(_.count(_._2._2).toLong).sum
+  }
+
+  // ---------------------------------------------------------------
+
+  /** PageRank's message edges (src, dst, frac) as a frame, frac =
+    * 1 / outdeg — one IEEE division per edge that every engine computes
+    * identically.
+    */
+  private def fracEdges(e: DataFrame): DataFrame =
+    e.join(e.groupBy(col("src")).agg(count(lit(1)).as("out")), "src")
+      .select(col("src"), col("dst"), (lit(1.0) / col("out")).as("frac"))
+
+  /** PageRank's graph: every vertex with its out-edges (dst, frac), frac
+    * = w / Σ_out w over the integer weights `w` (column w of `edges`),
+    * or 1 / outdeg at unit weight — the [[fracEdges]] division.
+    * Duplicate edges stay duplicates.
+    */
+  private def rankGraph(edges: DataFrame, scope: CacheScope,
+                        weighted: Boolean = false): Graph[Array[(Long, Double)]] =
+    graph(edges, scope) { part =>
+      val e = if (weighted)
+        edges.select(col("src").cast("long"), col("dst").cast("long"), col("w").cast("long"))
+          .na.drop().rdd.map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+      else pairs(edges).mapValues((_, 1L))
+      adjacency(e, e.map(_._2._1), part).mapValues { out =>
+        if (weighted) {
+          val total = out.map(_._2).sum.toDouble
+          out.map { case (dst, w) => (dst, w.toDouble / total) }
+        } else out.map { case (dst, _) => (dst, 1.0 / out.length) }
+      }
+    }
+
+  /** The qsum of `rank`-weighted messages along [[rankGraph]], with one
+    * zero message per vertex of `ranks` (so a vertex without inflow
+    * still gets a row): (id, exact sum).
+    */
+  private def inflow(g: Graph[Array[(Long, Double)]], ranks: RDD[(Long, Double)])
+      : RDD[(Long, BigInteger)] =
+    superstep(g, ranks) { (id, out, rank) =>
+      Iterator.single((id, BigInteger.ZERO)) ++ out.iterator.map { case (dst, f) => (dst, qterm(rank * f)) }
+    }(_ add _)
+
+  /** One PageRank step over [[rankGraph]]: rank(v) = reset + damp ·
     * qsum_{u→v} rank(u)·frac(u, v).
     */
-  private def rankStep(frac: DataFrame, ranks: DataFrame, zeros: DataFrame,
-                       reset: Double, damp: Double): DataFrame =
-    superstep(frac, ranks, col("rank") * col("frac"),
-      m => (lit(reset) + lit(damp) * qsum(m)).as("rank"), Some(zeros))
+  private def rankStep(g: Graph[Array[(Long, Double)]], ranks: RDD[(Long, Double)],
+                       reset: Double, damp: Double): RDD[(Long, Double)] =
+    update(inflow(g, ranks))((_, q) => reset + damp * qvalue(q))
 
-  /** Connected components' inputs over checkpointed edges `e`: the
-    * checkpointed vertex set and undirected edges spread on src. The
-    * undirected edges carry one self-loop per vertex, which makes the
-    * recurrence min over neighbours ∪ self: comp_t is referenced once
-    * per round (the superstep's join) instead of twice (join source +
-    * "keep own label" join target), and the values are identical.
+  /** Connected components' graph: every vertex with its distinct
+    * undirected neighbours.
     */
-  private def ccEdges(e: DataFrame, scope: CacheScope): (DataFrame, DataFrame) = {
-    val vertices = scope.checkpoint(vertexIds(e))
-    (vertices, scope.checkpoint(symmetric(e)
-      .union(vertices.select(col("id").as("src"), col("id").as("dst")))
-      .repartition(col("src"))))
-  }
+  private def ccGraph(edges: DataFrame, scope: CacheScope): Graph[Array[Long]] =
+    graph(edges, scope)(undirected(pairs(edges), _))
 
   /** One min-label step: comp(v) = min over v's neighbours ∪ v. */
-  private def ccStep(undirected: DataFrame, comp: DataFrame): DataFrame =
-    superstep(undirected, comp, col("comp"), min(_).as("comp"))
+  private def ccStep(g: Graph[Array[Long]], comp: RDD[(Long, Long)]): RDD[(Long, Long)] =
+    superstep(g, comp) { (id, nbrs, c) =>
+      Iterator.single((id, c)) ++ nbrs.iterator.map((_, c))
+    }((a, b) => math.min(a, b))
 
   /** Deterministic PageRank: rank_{t+1}(v) = reset + damp * Σ_{u→v}
     * rank_t(u) / outdeg(u), fixed iteration count, dangling mass
@@ -135,26 +381,13 @@ object GraphOps {
   def pageRank(edges: DataFrame, iterations: Int,
                reset: Double = 0.15, damp: Double = 0.85,
                scope: CacheScope = CacheScope.global): DataFrame = {
-    // The input lineage is referenced 4× by the setup (vertices union
-    // twice, out-degree, fractions), and every iteration's logical plan
-    // would embed it again — localCheckpoint materializes it ONCE and
-    // replaces the lineage with a LogicalRDD, so iteration plans stay
-    // constant-size (a persist alone caches execution but Catalyst
-    // still re-analyzes the full tree).
-    // The checkpoints do NOT carry their hash partitioning: under AQE
-    // the checkpointed plan is an AdaptiveSparkPlanExec, which reports
-    // UnknownPartitioning(0), so the LogicalRDD of `repartition(src)`
-    // records no partitioning and every iteration's rank⋈edge join
-    // plans an exchange or a broadcast. The `repartition(src)` only
-    // spreads the edges evenly.
-    val (vertices, frac, zeros) = rankEdges(scope.checkpoint(edges), scope)
-    // rank_t is referenced exactly ONCE per iteration, so the plan
-    // grows LINEARLY — no lineage truncation needed, and the loop runs
-    // as one job of pipelined shuffle stages instead of `iterations`
-    // blocking materialization jobs.
-    (1 to iterations).foldLeft(vertices.select(col("id"), lit(1.0).as("rank"))) {
-      (ranks, _) => rankStep(frac, ranks, zeros, reset, damp)
-    }
+    // The iterations chain lazily: each is one shuffle (the message
+    // combine) over the checkpointed graph, and the loop runs as one
+    // job of pipelined shuffle stages at the caller's action.
+    val g = rankGraph(edges, scope)
+    frame(g, (1 to iterations).foldLeft(init(g)((_, _) => 1.0)) {
+      (ranks, _) => rankStep(g, ranks, reset, damp)
+    }, "id", "rank")
   }
 
   /** Edge-weighted PageRank: rank_{t+1}(v) = reset + damp ·
@@ -163,8 +396,8 @@ object GraphOps {
     * w ≡ 1). Input: edges (src, dst, w: integer weights, so the
     * normalized fraction w / Σw is one deterministic double both
     * engines compute identically). Same iteration discipline as
-    * [[pageRank]]: checkpointed edges, zero-contribution union instead
-    * of a per-iteration vertex join, decimal-quantized sums.
+    * [[pageRank]]: a checkpointed graph, one zero message per vertex
+    * instead of a per-iteration vertex join, decimal-quantized sums.
     *
     * Weights must be POSITIVE: a non-positive edge weight would give
     * a src with sum(w) ≤ 0 whose fractions are NaN/negative and
@@ -180,10 +413,10 @@ object GraphOps {
     require(badW == 0,
       "pageRankWeighted: edge weights must be positive non-null " +
         "(found a w <= 0 or NULL edge); filter or reweight upstream")
-    val (vertices, frac, zeros) = rankEdges(e, scope, weighted = true)
-    (1 to iterations).foldLeft(vertices.select(col("id"), lit(1.0).as("rank"))) {
-      (ranks, _) => rankStep(frac, ranks, zeros, reset, damp)
-    }
+    val g = rankGraph(e, scope, weighted = true)
+    frame(g, (1 to iterations).foldLeft(init(g)((_, _) => 1.0)) {
+      (ranks, _) => rankStep(g, ranks, reset, damp)
+    }, "id", "rank")
   }
 
   /** Connected components by iterative min-label propagation over the
@@ -193,20 +426,13 @@ object GraphOps {
     */
   def connectedComponents(edges: DataFrame, iterations: Int,
                           scope: CacheScope = CacheScope.global): DataFrame = {
-    // The input lineage is referenced twice by the symmetric union;
-    // localCheckpoint materializes it once and keeps iteration plans
-    // constant-size. With the self-loops of [[ccEdges]] comp_t is
-    // referenced once per iteration, so the plan grows linearly — no
-    // per-iteration lineage truncation, and the whole loop executes as
-    // ONE job of pipelined shuffle stages (same trick as pageRank). As
-    // in pageRank, the checkpointed undirected edges record no
-    // partitioning under AQE, so the propagation join plans an
-    // exchange or a broadcast per iteration besides the min-aggregate's
-    // shuffle.
-    val (vertices, undirected) = ccEdges(scope.checkpoint(edges), scope)
-    (1 to iterations).foldLeft(vertices.select(col("id"), col("id").as("comp"))) {
-      (comp, _) => ccStep(undirected, comp)
-    }
+    // every vertex sends its label to itself as well as to its
+    // neighbours, so the step's combine is the whole recurrence: one
+    // shuffle per iteration, chained lazily into one job
+    val g = ccGraph(edges, scope)
+    frame(g, (1 to iterations).foldLeft(init(g)((id, _) => id)) {
+      (comp, _) => ccStep(g, comp)
+    }, "id", "comp")
   }
 
   /** Synchronous label propagation (community detection), `iterations`
@@ -218,7 +444,7 @@ object GraphOps {
     * component, min-of-neighbors finds the component itself.
     *
     * Plan shape per round: ONE join (labels against the checkpointed
-    * undirected edge list, same discipline as pageRank) and TWO
+    * undirected edge list) and TWO
     * map-side-combined hash aggregates — the (vertex, label) vote
     * count, then the per-vertex argmax. The two aggregates are keyed
     * differently, so the round is not one [[superstep]]. The
@@ -245,14 +471,10 @@ object GraphOps {
 
   /** Multi-source BFS / unit-weight shortest paths along edge
     * direction: dist(v) = hops from the nearest source, null if
-    * unreachable within `iterations`. Same Pregel shape and the same
-    * plan discipline as [[connectedComponents]]: zero-weight
-    * self-loops make the recurrence `min over in-edges ∪ self`, so
-    * the frontier frame is referenced once per iteration, the plan
-    * grows linearly, and each iteration is one join against the
-    * checkpointed hop relation plus the min-aggregate. `iterations`
-    * must be >= the radius of interest; unreached vertices surface as
-    * null, not a sentinel, so truncation is visible to the caller.
+    * unreachable within `iterations`: [[weightedSssp]] at w ≡ 1, one
+    * superstep per iteration. `iterations` must be >= the radius of
+    * interest; unreached vertices surface as null, not a sentinel, so
+    * truncation is visible to the caller.
     */
   def shortestPaths(edges: DataFrame, sources: DataFrame, iterations: Int,
                     scope: CacheScope = CacheScope.global): DataFrame =
@@ -344,112 +566,59 @@ object GraphOps {
 
   /** Weighted single-source(s) shortest paths — Bellman-Ford
     * relaxation over integer-weight edges (src, dst, w), fixed
-    * `iterations` rounds. Per round ONE shuffle: the edge join on the
-    * current distance frame + a min-aggregate; the zero-weight
-    * self-loop union keeps settled distances in play without a
-    * second union branch. Distances are exact BIGINTs, so a depth-k
-    * run is the true minimum over paths of ≤ k edges and any engine
-    * replays it bit-for-bit ([[shortestPaths]] is the w ≡ 1 case).
-    * Unreachable-within-k vertices emit NULL.
+    * `iterations` rounds. Per round ONE shuffle: the reached vertices'
+    * relaxations along their out-edges, plus each reached vertex's own
+    * distance (the zero-weight self-loop), min-combined per receiver.
+    * Distances are exact BIGINTs, so a depth-k run is the true minimum
+    * over paths of ≤ k edges and any engine replays it bit-for-bit
+    * ([[shortestPaths]] is the w ≡ 1 case). Unreachable-within-k
+    * vertices emit NULL.
     */
   def weightedSssp(edges: DataFrame, sources: DataFrame, iterations: Int,
                    scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.checkpoint(
-      edges.select(col("src"), col("dst"), col("w").cast("long").as("w")))
-    // Sources are unioned into the vertex set so an isolated source
-    // (no incident edges) still surfaces with dist=0 rather than
-    // silently vanishing from the output.
-    val vertices = scope.checkpoint(e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .union(sources.select(col("id"))).distinct())
-    val hop = scope.checkpoint(e
-      .union(vertices.select(col("id").as("src"), col("id").as("dst"),
-        lit(0L).as("w")))
-      .repartition(col("src")))
-    // distinct() guards against duplicate source ids feeding duplicate
-    // seed rows into the first min-aggregate.
-    val seeds = sources.select(col("id")).distinct().withColumn("dist", lit(0L))
+    // Sources join the vertex set so an isolated source (no incident
+    // edges) still surfaces with dist=0 rather than silently vanishing
+    // from the output. An edge with a NULL weight relaxes nothing.
+    val srcIds = idRdd(sources)
+    val g = graph(edges, scope, sources) { part =>
+      val rows = edges.select(col("src").cast("long"), col("dst").cast("long"),
+        col("w").cast("long")).filter(col("src").isNotNull && col("dst").isNotNull).rdd
+      val out = rows.filter(!_.isNullAt(2)).map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
+      adjacency(out, rows.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).union(srcIds), part)
+    }
+    // the reduce also drops duplicate source ids
+    val seeds = combined(srcIds.map((_, 0L)), g.part)((a, _) => a)
     val dist = (1 to iterations).foldLeft(seeds) { (d, _) =>
-      superstep(hop, d, col("dist") + col("w"), min(_).as("dist"))
+      superstep(g, d) { (id, out, x) =>
+        Iterator.single((id, x)) ++ out.iterator.map { case (dst, w) => (dst, x + w) }
+      }((a, b) => math.min(a, b))
     }
-    vertices.join(dist, Seq("id"), "left").select(col("id"), col("dist"))
-  }
-
-  /** One round of a convergence loop: checkpoint the round's state
-    * `next` and count, in that same job, the rows where `signal`
-    * holds (an [[Observation]] on the checkpointed plan). A separate
-    * `limit(1).count()` probe would cost one more job per round, and
-    * its generated code never hits the codegen cache: Spark names
-    * every limit plan's row counter from a global sequence, so each
-    * probe compiles fresh classes. Returns the checkpointed state and
-    * the count.
-    */
-  private def observedRound(next: DataFrame, signal: Column,
-                            scope: CacheScope): (DataFrame, Long) = {
-    val obs = Observation()
-    val state = scope.checkpoint(next.observe(obs, sum(signal.cast("long")).as("n")))
-    // the sum over an empty state is null: nothing signalled
-    (state, Option(obs.get("n")).fold(0L)(_.asInstanceOf[Long]))
-  }
-
-  /** The convergence loop of the converged forms. From the
-    * checkpointed state `start` (`pending` rows signalled), it runs
-    * windows of up to `window` steps until a window ends with no row
-    * where `signal` holds, or until `maxIterations` steps have run (the
-    * runaway bound). `round(state, steps)` builds one window of `steps`
-    * steps as one lazy plan — the window pipelines as one job of
-    * shuffle stages — and returns the window's new state joined with
-    * whatever `signal` compares it against. Each window ends in one
-    * [[observedRound]], whose checkpoint job also counts the signal;
-    * the new state keeps `start`'s columns.
-    */
-  private def converge(start: DataFrame, window: Int, maxIterations: Int,
-                       signal: Column, scope: CacheScope, pending: Long = 1L)
-                      (round: (DataFrame, Int) => DataFrame): DataFrame = {
-    val cols = start.columns.toSeq.map(col)
-    var (state, n, iter) = (start, pending, 0)
-    while (n > 0L && iter < maxIterations) {
-      val steps = math.min(window, maxIterations - iter)
-      val (next, signalled) = observedRound(round(state, steps), signal, scope)
-      state = next.select(cols: _*)
-      n = signalled
-      iter += steps
-    }
-    state
+    frame(g, zipLocal(g.adj, dist)((_, _, d) => d), "id", "dist")
   }
 
   /** Convergence-safe connected components: same min-label propagation
     * as [[connectedComponents]], iterated until NO label changed in a
-    * round (counted by the round's checkpoint job, see
-    * [[observedRound]]) or `maxIterations` as a runaway bound. A
-    * fixed-depth run silently splits any component whose diameter exceeds the depth —
+    * window (counted by the window's one job, see [[converge]]) or
+    * `maxIterations` as a runaway bound. A fixed-depth run silently
+    * splits any component whose diameter exceeds the depth —
     * at corpus scale a dup chain longer than the depth under-dedups —
     * so this is the production path; the fixed-depth form stays for
     * oracle replay (a data-dependent iteration count cannot be
     * mirrored in static SQL).
-    *
-    * Each window's labels are checkpointed: without materialization
-    * round t+1 would recompute rounds 1..t.
     */
   def connectedComponentsConverged(edges: DataFrame, maxIterations: Int = 50,
                                    scope: CacheScope = CacheScope.global): DataFrame = {
-    // convergence-loop floor scope (r17) — see [[kCore]]: per-window
-    // checkpoint actions run at Spark's 1m floor (32-core A/B:
-    // g_connected_components 2.57 s at 256k vs 2.18 s at 1m, g_mis
-    // 6.65 vs 5.40).
-    graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-      val (vertices, undirected) = ccEdges(scope.checkpoint(edges), scope)
-      // Windows of 3 steps (the pageRankConverged cadence): labels only
-      // DECREASE, so "no vertex changed across the whole window" is
-      // EXACTLY "no step in the window changed anything" — the check
-      // against the window-start state is exact, and "any label
-      // strictly smaller" is "changed".
-      converge(scope.checkpoint(vertices.select(col("id"), col("id").as("comp"))),
-        window = 3, maxIterations, col("comp") < col("prev"), scope) { (comp, steps) =>
-        (1 to steps).foldLeft(comp)((cur, _) => ccStep(undirected, cur))
-          .join(comp.select(col("id"), col("comp").as("prev")), "id")
+    val g = ccGraph(edges, scope)
+    // Windows of 3 steps (the pageRankConverged cadence): labels only
+    // DECREASE, so "no vertex changed across the whole window" is
+    // EXACTLY "no step in the window changed anything" — the check
+    // against the window-start state is exact, and "any label
+    // strictly smaller" is "changed".
+    frame(g, converge(init(g)((id, _) => id), window = 3, maxIterations, scope) { (comp, steps) =>
+      zipLocal((1 to steps).foldLeft(comp)((cur, _) => ccStep(g, cur)), comp) {
+        (_, c, prev) => (c, prev.exists(c < _))
       }
-    }
+    }, "id", "comp")
   }
 
   /** Personalized PageRank: random walks restart at the SOURCE set
@@ -460,11 +629,9 @@ object GraphOps {
     * same exact 1e-9-quantized decimal sums as [[pageRank]] so the
     * oracle replays the iteration chain bit-for-bit.
     *
-    * Plan shape: the per-vertex reset vector is checkpointed once and
-    * re-joined to each iteration's aggregate output. The checkpoint
-    * records no partitioning under AQE (see [[pageRank]]), so that
-    * re-join, like the contribution join, plans an exchange or a
-    * broadcast per iteration.
+    * Plan shape: the per-vertex reset vector is checkpointed once,
+    * co-partitioned with the graph, and each step adds it to the
+    * combined inflow partition-locally — one shuffle per iteration.
     * `sources` is an (id) frame; ids absent from the graph contribute
     * nothing.
     */
@@ -472,68 +639,53 @@ object GraphOps {
                            iterations: Int,
                            reset: Double = 0.15, damp: Double = 0.85,
                            scope: CacheScope = CacheScope.global): DataFrame = {
-    val (vertices, frac, zeros) = rankEdges(scope.checkpoint(edges), scope)
-    val srcSet = sources.select(col("id")).distinct()
-      .withColumn("__s", lit(1))
-    val resetVec = scope.checkpoint(
-      vertices.join(broadcast(srcSet), Seq("id"), "left")
-        .select(col("id"),
-          when(col("__s").isNotNull, lit(reset)).otherwise(lit(0.0))
-            .as("reset_w"))
-        .repartition(col("id")))
-    val start = resetVec.select(col("id"),
-      when(col("reset_w") > 0.0, lit(1.0)).otherwise(lit(0.0)).as("rank"))
-    (1 to iterations).foldLeft(start) { (ranks, _) =>
-      superstep(frac, ranks, col("rank") * col("frac"),
-        m => (lit(damp) * qsum(m)).as("inflow"), Some(zeros))
-        .join(resetVec, "id")
-        .select(col("id"), (col("reset_w") + col("inflow")).as("rank"))
-    }
+    val g = rankGraph(edges, scope)
+    val resetVec = held(zipLocal(g.adj, combined(idRdd(sources).map((_, ())), g.part)((a, _) => a)) {
+      (_, _, src) => if (src.isDefined) reset else 0.0
+    }, scope)
+    val start = update(resetVec)((_, w) => if (w > 0.0) 1.0 else 0.0)
+    frame(g, (1 to iterations).foldLeft(start) { (ranks, _) =>
+      zipLocal(inflow(g, ranks), resetVec)((_, q, w) => w.getOrElse(0.0) + damp * qvalue(q))
+    }, "id", "rank")
   }
 
   /** Convergence-safe PageRank: same recurrence (and the same exact
     * 1e-9-quantized decimal sums) as [[pageRank]], iterated until no
     * vertex's rank moved more than `tol` in a round — counted by the
-    * round's checkpoint job like [[connectedComponentsConverged]] — or
+    * window's one job like [[connectedComponentsConverged]] — or
     * `maxIterations` as the runaway bound. A fixed iteration count
     * under-converges hub-heavy graphs whose mixing time exceeds the
     * depth; this is the production path, while the fixed-depth form
     * stays for oracle replay (a data-dependent iteration count cannot
     * be mirrored in static SQL).
     *
-    * Each window's ranks are checkpointed: the state is referenced
-    * twice (contribution join + delta check) — the price is one
-    * blocking materialization per window, the same trade the CC/k-core
-    * converged forms make. Termination is guaranteed even for tiny
-    * `tol`: the damped recurrence contracts deltas by `damp` per round
-    * and ranks live on the 1e-9 quantization grid, so the sequence
-    * reaches an exact fixpoint.
+    * Termination is guaranteed even for tiny `tol`: the damped
+    * recurrence contracts deltas by `damp` per round and ranks live on
+    * the 1e-9 quantization grid, so the sequence reaches an exact
+    * fixpoint.
     */
   def pageRankConverged(edges: DataFrame, tol: Double = 1e-7,
                         maxIterations: Int = 50,
                         reset: Double = 0.15, damp: Double = 0.85,
                         scope: CacheScope = CacheScope.global): DataFrame = {
     require(tol > 0.0 && maxIterations >= 1)
-    val (vertices, frac, zeros) = rankEdges(scope.checkpoint(edges), scope)
-    // Windows of 3 recurrence steps run as ONE job of pipelined
-    // shuffle stages instead of 3 blocking checkpoint jobs. A
-    // tol-fixpoint stays a fixpoint under extra iterations (the
-    // recurrence is a contraction), so overshooting by ≤2 steps changes
-    // nothing the certificate or oracle can see.
-    converge(scope.checkpoint(vertices.select(col("id"), lit(1.0).as("rank"))),
-      window = 3, maxIterations, abs(col("rank") - col("prev")) > tol, scope) {
+    val g = rankGraph(edges, scope)
+    // Windows of 3 recurrence steps run as ONE job. A tol-fixpoint
+    // stays a fixpoint under extra iterations (the recurrence is a
+    // contraction), so overshooting by ≤2 steps changes nothing the
+    // certificate or oracle can see.
+    frame(g, converge(init(g)((_, _) => 1.0), window = 3, maxIterations, scope) {
       (ranks, steps) =>
         // the stopping criterion stays the SINGLE-step delta (what the
         // certificate's residual bound assumes): compare the window's
-        // last step against the state just before it — beforeLast is
-        // referenced twice (inside the step's plan and by the delta
-        // join), which at window size 3 keeps plans bounded
+        // last step against the state just before it
         val beforeLast = (1 until steps).foldLeft(ranks) {
-          (cur, _) => rankStep(frac, cur, zeros, reset, damp)
+          (cur, _) => rankStep(g, cur, reset, damp)
         }
-        rankStep(frac, beforeLast, zeros, reset, damp)
-          .join(beforeLast.select(col("id"), col("rank").as("prev")), "id")
-    }
+        zipLocal(rankStep(g, beforeLast, reset, damp), beforeLast) {
+          (_, rank, prev) => (rank, prev.exists(p => math.abs(rank - p) > tol))
+        }
+    }, "id", "rank")
   }
 
   // ---------------------------------------------------------------
@@ -564,12 +716,13 @@ object GraphOps {
                           reset: Double = 0.15, damp: Double = 0.85,
                           scope: CacheScope = CacheScope.global): DataFrame = {
     val e = scope.persist(edges.select(col("src"), col("dst")))
-    val frac = scope.persist(fracEdges(e))
-    val expected = rankStep(frac, ranks.select(col("id"), col("rank")),
-      vertexIds(e).select(col("id"), lit(0.0).as("contrib")), reset, damp)
-    val inMass = frac.groupBy(col("dst").as("id"))
+    val g = rankGraph(e, scope)
+    val given = ranks.select(col("id").cast("long"), col("rank")).na.drop().rdd
+      .map(r => (r.getLong(0), r.getDouble(1))).partitionBy(g.part)
+    val expected = frame(g, rankStep(g, given, reset, damp), "id", "expected")
+    val inMass = fracEdges(e).groupBy(col("dst").as("id"))
       .agg(sum(col("frac")).as("in_mass"))
-    ranks.join(expected.select(col("id"), col("rank").as("expected")), "id")
+    ranks.join(expected, "id")
       .join(inMass, Seq("id"), "left")
       .select(col("id"),
         (abs(col("rank") - col("expected")) <=
@@ -590,10 +743,13 @@ object GraphOps {
     */
   def connectedComponentsCertificate(edges: DataFrame, comp: DataFrame,
                                      scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.select(col("src"), col("dst")))
     val labels = scope.persist(comp.select(col("id"), col("comp")))
-    val nbrMin = superstep(symmetric(e), labels.select(col("id"), col("comp").as("c")),
-      col("c"), min(_).as("nbr_min"))
+    val g = ccGraph(edges, scope)
+    val given = labels.select(col("id").cast("long"), col("comp").cast("long")).na.drop().rdd
+      .map(r => (r.getLong(0), r.getLong(1))).partitionBy(g.part)
+    // neighbours only: a vertex sees its own label through a self-loop
+    val nbrMin = frame(g, superstep(g, given) { (_, nbrs, c) => nbrs.iterator.map((_, c)) }(
+      (a, b) => math.min(a, b)), "id", "nbr_min")
     val roots = labels.filter(col("id") === col("comp"))
       .select(col("comp"), lit(true).as("root_ok"))
     labels.join(nbrMin, Seq("id"), "left")
@@ -645,11 +801,11 @@ object GraphOps {
     */
   def pageRankGraphX(edges: DataFrame, iterations: Int,
                      reset: Double = 0.15): DataFrame = {
-    import org.apache.spark.graphx.{Edge, Graph}
+    import org.apache.spark.graphx.{Edge, Graph => GraphX}
     val spark = edges.sparkSession
     val edgeRdd = edges.select(col("src"), col("dst")).rdd
       .map(r => Edge(r.getLong(0), r.getLong(1), 1))
-    val graph = Graph.fromEdges(edgeRdd, defaultValue = 1.0)
+    val graph = GraphX.fromEdges(edgeRdd, defaultValue = 1.0)
     val ranks = graph.staticPageRank(iterations, reset).vertices
     spark.createDataFrame(ranks.map { case (id, r) => (id, r) })
       .toDF("id", "rank")
@@ -675,10 +831,10 @@ object GraphOps {
     * EXTRACTOR. Fixed `iterations` so the oracle can replay the
     * unrolled peel; callers needing guaranteed convergence use
     * [[kCoreConverged]] (peeling is monotone, so a round that removes
-    * nothing marks THE k-core). Each round is one degree
-    * aggregate + two semi-join filters, checkpointed so round t+1
-    * does not recompute rounds 1..t. A peel, not message passing, so
-    * the round is not a [[superstep]].
+    * nothing marks THE k-core). Runs [[kCoreConverged]]'s frontier
+    * loop with `iterations` as the bound: after the same number of
+    * rounds the two peels agree, and a loop that stops early on an
+    * empty frontier has nothing left to peel.
     *
     * Input treated as undirected; self-loops dropped, edges
     * canonicalized + distinct. Returns surviving (id, degree).
@@ -686,35 +842,7 @@ object GraphOps {
   def kCore(edges: DataFrame, k: Int, iterations: Int,
             scope: CacheScope = CacheScope.global): DataFrame = {
     require(k >= 1 && iterations >= 1)
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("a").as("id")).union(e.select(col("b").as("id")))
-        .groupBy(col("id")).agg(count(lit(1)).as("d"))
-    // convergence-loop floor scope (r17): each peel round materializes
-    // a tiny edge set — the global 256k AQE floor over-fans those
-    // per-round shuffles into rounds x tasks x fixed-cost task storms
-    // (32-core A/B: 4.31 s at 256k vs 3.36 s at 1m). The round loop
-    // runs at Spark's 1m default; the terminal degree aggregate (lazy,
-    // runs at the caller's action) keeps the session floor.
-    graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-      var e = scope.checkpoint(canonical(edges))
-      for (_ <- 1 to iterations) {
-        val keep = degrees(e).filter(col("d") >= k).select(col("id"))
-        e = scope.checkpoint(e
-          .join(keep.select(col("id").as("a")), Seq("a"), "left_semi")
-          .join(keep.select(col("id").as("b")), Seq("b"), "left_semi")
-          .select(col("a"), col("b")))
-      }
-      degrees(e).withColumnRenamed("d", "degree")
-    }
-  }
-
-  /** The symmetric adjacency (v, n) of the canonical undirected edge
-    * set: one row per directed neighbour pair.
-    */
-  private def adjacency(edges: DataFrame): DataFrame = {
-    val canon = canonical(edges)
-    canon.select(col("a").as("v"), col("b").as("n"))
-      .union(canon.select(col("b").as("v"), col("a").as("n")))
+    kCoreConverged(edges, k, iterations, scope)
   }
 
   /** Convergence-safe k-core: same peeling recurrence as [[kCore]],
@@ -727,14 +855,12 @@ object GraphOps {
     * data-dependent round count cannot be mirrored in static SQL).
     *
     * Frontier form (Pregelix's active-vertex plan): the state is
-    * (id, deg, alive) over a checkpointed symmetric adjacency, and in
+    * (deg, alive) per vertex of the simple undirected graph, and in
     * each round only the vertices peeled that round (alive, deg < k)
-    * send −1 to their neighbours — one degree aggregate per round,
-    * over the frontier's edges only. The rounds run through
-    * [[converge]] one step per window: each round's checkpoint job
-    * also counts the next round's frontier, so an empty frontier ends
-    * the loop without a probe job. After the same number of rounds
-    * the survivors and their degrees equal [[kCore]]'s.
+    * send −1 to their neighbours — one superstep per round, over the
+    * frontier's edges only. The rounds run through [[converge]] one
+    * step per window: each round's job also counts the next round's
+    * frontier, so an empty frontier ends the loop.
     *
     * Returns surviving (id, degree); on a runaway-bound exit the
     * non-convergence is visible as degree < k rows in the output.
@@ -742,32 +868,23 @@ object GraphOps {
   def kCoreConverged(edges: DataFrame, k: Int, maxIterations: Int = 50,
                      scope: CacheScope = CacheScope.global): DataFrame = {
     require(k >= 1 && maxIterations >= 1)
-    // convergence-loop floor scope (r17) — see [[kCore]]: the per-round
-    // checkpoint actions run at Spark's 1m floor (32-core A/B via
-    // g_kcore_cert: 4.26 s at 256k vs 3.02 s at 1m).
-    graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-      val adj = scope.checkpoint(adjacency(edges))
-      val frontier = col("alive") && col("deg") < k
-      val (start, peeling) = observedRound(
-        adj.groupBy(col("v").as("id")).agg(count(lit(1)).as("deg"))
-          .withColumn("alive", lit(true)), frontier, scope)
-      val core = converge(start, window = 1, maxIterations, frontier, scope, peeling) {
-        (state, _) =>
-          val dec = adj.join(state.filter(frontier).select(col("id").as("n")), "n")
-            .groupBy(col("v").as("id")).agg(count(lit(1)).as("dec"))
-          // both columns read the round's input deg: a vertex is peeled
-          // on the degree it entered the round with
-          state.join(dec, Seq("id"), "left")
-            .select(col("id"),
-              (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"),
-              (col("alive") && col("deg") >= k).as("alive"))
+    val g = simpleGraph(edges, scope)
+    val core = converge(init(g)((_, nbrs) => (nbrs.length.toLong, true)), window = 1,
+        maxIterations, scope) { (state, _) =>
+      val dec = superstep(g, state) { (_, nbrs, s) =>
+        if (s._2 && s._1 < k) nbrs.iterator.map((_, 1L)) else Iterator.empty
+      }(_ + _)
+      // both fields read the round's input deg: a vertex is peeled on
+      // the degree it entered the round with
+      zipLocal(state, dec) { case (_, (deg, alive), d) =>
+        val next = (deg - d.getOrElse(0L), alive && deg >= k)
+        (next, next._2 && next._1 < k)
       }
-      // a survivor whose neighbours all peeled in the last round has
-      // no edge left; like [[kCore]], list the surviving edge set's
-      // vertices (only reachable on a runaway-bound exit, as k >= 1)
-      core.filter(col("alive") && col("deg") > 0)
-        .select(col("id"), col("deg").as("degree"))
     }
+    // a survivor whose neighbours all peeled in the last round has
+    // no edge left and is not listed (only reachable on a bounded
+    // exit, as k >= 1)
+    frame(g, core.collect { case (id, (deg, true)) if deg > 0 => (id, deg) }, "id", "degree")
   }
 
   /** Exact triangle count via degree-ordered orientation (the MapReduce
@@ -826,59 +943,44 @@ object GraphOps {
     * makes the two rankings genuinely different.
     *
     * Determinism: every sum goes through the same decimal→×1e9→BIGINT
-    * hop as [[pageRank]], and each normalized value is re-quantized to
-    * the 1e-9 grid, so both the per-vertex sums and the scalar L1
-    * totals are partition-order-free and replay bit-for-bit in any
-    * engine. The L1 total is a 1-row aggregate broadcast into the
-    * division — a scalar join, not a data shuffle.
+    * hop as [[pageRank]] ([[qterm]]/[[qvalue]]), and each normalized
+    * value is re-quantized to the 1e-9 grid ([[qdiv]]), so both the
+    * per-vertex sums and the scalar L1 totals are partition-order-free
+    * and replay bit-for-bit in any engine.
     *
-    * Plan shape: per iteration, two keyed aggregates (the two message
-    * directions) + two 1-row broadcasts — the same one-shuffle-per-
-    * message-pass discipline as [[pageRank]]; edges are checkpointed
-    * once and reused.
+    * Plan shape: each half-iteration is one superstep over its own
+    * checkpointed graph (out-edges for the auth pass, in-edges for the
+    * hub pass, both on the one partitioner), and its L1 total is one
+    * job; the normalization is partition-local.
     */
   def hits(edges: DataFrame, iterations: Int,
            scope: CacheScope = CacheScope.global): DataFrame = {
-    // the two message directions join on different edge keys (src for
-    // the auth pass, dst for the hub pass), so keep TWO checkpointed
-    // copies, each spread on its join key; the hub pass sends along the
-    // dst-spread copy reversed. Neither checkpoint records that
-    // partitioning under AQE (see [[pageRank]]), so each
-    // half-iteration's join plans an exchange or a broadcast besides
-    // the message aggregate.
-    // The dst-spread copy and vertices derive FROM the materialized
-    // eBySrc (not a third checkpointed copy of the distinct edge set):
-    // one fewer materialization up front, and the distinct still runs
-    // once.
-    val eBySrc = scope.checkpoint(edges.select(col("src"), col("dst"))
-      .distinct().repartition(col("src")))
-    val reversed = scope.checkpoint(eBySrc.repartition(col("dst")))
-      .select(col("dst").as("src"), col("src").as("dst"))
-    val vertices = scope.checkpoint(vertexIds(eBySrc))
-    // IEEE division of two grid doubles, re-quantized to the grid
-    def qdiv(n: Column, d: Column): Column =
-      (round(n / d * 1000000000L).cast("long").cast("double") / 1.0e9)
-    val zeroV = scope.checkpoint(vertices.select(col("id"), lit(0.0).as("v")))
-    // one half-iteration: the message superstep, then L1 normalization.
-    // The raw sums are referenced twice (normalize + L1 total), so they
-    // are checkpointed — plans stay constant-size per iteration (the
-    // connectedComponents discipline) instead of doubling
-    def half(e: DataFrame, score: DataFrame): DataFrame = {
-      val raw = scope.checkpoint(
-        superstep(e, score, col("v"), qsum(_).as("v"), Some(zeroV)))
-      raw.crossJoin(broadcast(raw.agg(qsum(col("v")).as("tot"))))
-        .select(col("id"), qdiv(col("v"), col("tot")).as("v"))
+    // every vertex of the distinct edge set is a key of both graphs
+    val fwd = graph(edges, scope) { part =>
+      val p = pairs(edges)
+      adjacency(p, p.map(_._2), part).mapValues(_.distinct)
     }
-    var hub = vertices.select(col("id"), lit(1.0).as("v"))
-    var auth = zeroV
+    val rev = graph(edges, scope) { part =>
+      val p = pairs(edges).map(_.swap)
+      adjacency(p, p.map(_._2), part).mapValues(_.distinct)
+    }
+    // one half-iteration: the message superstep (one zero message per
+    // vertex), then L1 normalization by the qsum of all raw sums
+    def half(g: Graph[Array[Long]], score: RDD[(Long, Double)]): RDD[(Long, Double)] = {
+      val raw = update(superstep(g, score) { (id, out, v) =>
+        Iterator.single((id, BigInteger.ZERO)) ++ out.iterator.map((_, qterm(v)))
+      }(_ add _))((_, q) => qvalue(q))
+      val tot = qvalue(raw.sparkContext.runJob(raw, new QTotal).foldLeft(BigInteger.ZERO)(_ add _))
+      update(raw)((_, v) => qdiv(v, tot))
+    }
+    var hub = init(fwd)((_, _) => 1.0)
+    var auth = init(fwd)((_, _) => 0.0)
     for (_ <- 1 to iterations) {
-      auth = half(eBySrc, hub)
-      hub = half(reversed, auth)
+      auth = half(fwd, hub)
+      hub = half(rev, auth)
     }
-    hub.select(col("id"), col("v").as("hub"))
-      .join(auth.select(col("id"), col("v").as("auth")), Seq("id"), "full")
-      .select(col("id"), coalesce(col("hub"), lit(0.0)).as("hub"),
-        coalesce(col("auth"), lit(0.0)).as("auth"))
+    frame(fwd, zipLocal(hub, auth)((_, h, a) => (h, a.getOrElse(0.0)))
+      .map { case (id, (h, a)) => (id, h, a) }, "id", "hub", "auth")
   }
 
   /** DETERMINISTIC random walks — the graph-embedding corpus
@@ -1068,52 +1170,44 @@ object GraphOps {
     * count cannot be mirrored in static SQL, same trade as
     * [[kCore]]); vertices still active after the last round are
     * emitted with `sel_round = -1`, so non-convergence is visible in
-    * the result instead of silently truncating the set. Per round:
-    * one neighbor-compare equi-join + two anti-joins, all on the
-    * vertex key — no windows, no driver state beyond the loop
-    * counter.
+    * the result instead of silently truncating the set. A round is two
+    * supersteps: the min of the active neighbours' (h, id), then the
+    * winners' removal of their neighbours. Rounds run through
+    * [[converge]], so the loop ends early, with the same output, once
+    * no vertex is active.
     */
   def maximalIndependentSet(edges: DataFrame, rounds: Int,
                             scope: CacheScope = CacheScope.global): DataFrame = {
     require(rounds >= 1)
-    // convergence-loop floor scope (r17) — see [[kCore]]: per-round
-    // winner/active/adj checkpoints run at Spark's 1m floor (32-core
-    // A/B: g_mis 6.65 s at 256k vs 5.40 s at 1m).
-    graft.GraftSession.withMinCoalesced(edges.sparkSession, "1m") {
-    var adj = scope.checkpoint(adjacency(edges))
-    var active = scope.checkpoint(
-      adj.select(col("v")).distinct()
-        .withColumn("h", Sampling.detHash2(col("v"))))
-    var mis: DataFrame = null
-    for (r <- 1 to rounds) {
-      // a vertex LOSES if any active neighbor precedes it in (h, id)
-      val losers = adj
-        .join(active, Seq("v"))
-        .join(active.select(col("v").as("n"), col("h").as("nh")), Seq("n"))
-        .filter(col("nh") < col("h") ||
-          (col("nh") === col("h") && col("n") < col("v")))
-        .select(col("v")).distinct()
-      // winners are CHECKPOINTED: the round's 3-way losers join is
-      // referenced both by this round's removal step and by the final
-      // mis union — unmaterialized, the terminal action re-ran every
-      // round's neighbor-compare join a second time (r16: one losers
-      // join per round instead of two; winner frames are tiny)
-      val winners = scope.checkpoint(
-        active.join(losers, Seq("v"), "left_anti")
-          .select(col("v"), lit(r).as("sel_round")))
-      mis = if (mis == null) winners else mis.unionByName(winners)
-      // winners and their neighbors leave
-      val removed = winners.select(col("v"))
-        .union(adj.join(winners.select(col("v").as("n")), Seq("n"), "left_semi")
-          .select(col("v")))
-        .distinct()
-      active = scope.checkpoint(
-        active.join(removed, Seq("v"), "left_anti"))
-      adj = scope.checkpoint(adj
-        .join(active.select(col("v")), Seq("v"), "left_semi")
-        .join(active.select(col("v").as("n")), Seq("n"), "left_semi"))
+    val g = simpleGraph(edges, scope)
+    // status: Active, Removed, or the round r >= 1 the vertex won in
+    val (active, removed) = (0, -2)
+    // Sampling.detHash2 on a long id
+    def h(id: Long): Long = (1 to 2).foldLeft(id)((x, _) => (x % 94906249L) * 1103515245L % 2147483647L)
+    def precedes(a: (Long, Long), b: (Long, Long)): Boolean =
+      a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)
+    var r = 0
+    val end = converge(init(g)((id, _) => (h(id), active)), window = 1, rounds, scope) { (state, _) =>
+      r += 1
+      val round = r
+      // a vertex LOSES if any active neighbour precedes it in (h, id)
+      val minNbr = superstep(g, state) { (id, nbrs, s) =>
+        if (s._2 == active) nbrs.iterator.map((_, (s._1, id))) else Iterator.empty
+      }((a, b) => if (precedes(b, a)) b else a)
+      val won = zipLocal(state, minNbr) { (id, s, m) =>
+        if (s._2 == active && !m.exists(precedes(_, (s._1, id)))) (s._1, round) else s
+      }
+      // winners and their neighbours leave
+      val hit = superstep(g, won) { (_, nbrs, s) =>
+        if (s._2 == round) nbrs.iterator.map((_, true)) else Iterator.empty
+      }((a, _) => a)
+      zipLocal(won, hit) { (_, s, x) =>
+        val next = if (s._2 == active && x.isDefined) (s._1, removed) else s
+        (next, next._2 == active)
+      }
     }
-    mis.unionByName(active.select(col("v"), lit(-1).as("sel_round")))
-    }
+    frame(g, end.collect {
+      case (v, (_, st)) if st != removed => (v, if (st == active) -1 else st)
+    }, "v", "sel_round")
   }
 }

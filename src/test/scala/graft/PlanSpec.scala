@@ -85,12 +85,7 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("__salt"), "salt missing from the shuffle keys:\n" + p)
   }
 
-  // The scale claim for the iterative graph loops: ONE shuffle per
-  // iteration (the message-passing aggregate) and nothing else — no
-  // per-iteration vertex re-join exchange, no per-iteration blocking
-  // materialization. Count shuffle exchanges in the final plan; the
-  // inputs are localCheckpoint'd LogicalRDDs so setup shuffles don't
-  // appear in the loop's lineage.
+  /** Shuffle exchanges in the final (post-AQE) plan of `df`. */
   private def shuffleCount(df: org.apache.spark.sql.DataFrame): Int = {
     df.collect()
     // AQE's toString prints the final plan followed by the pre-AQE
@@ -116,53 +111,45 @@ class PlanSpec extends AnyFunSuite {
     assert(ng.toLowerCase.contains("distinctwordgrams"), ng)
   }
 
-  test("hits half-iteration: pre-partitioned edges join the score exchange-free") {
-    // hits checkpoints every iteration (plans are truncated), so the
-    // final plan can't witness the loop. Mirror ONE half-iteration
-    // exactly as hits builds it — checkpointed repartition(src) edge
-    // copy joined to a groupBy-partitioned score, then the message
-    // aggregate — and assert the ONLY exchange is that aggregate:
-    // LogicalRDD must preserve the hash(src) partitioning and the
-    // join must reuse the score side's aggregate partitioning.
+  // The scale claim for the iterative graph loops: ONE shuffle per
+  // iteration (the message combine) and nothing else — no
+  // per-iteration state ⋈ edges exchange, no per-iteration blocking
+  // materialization. The loops run on RDDs, so count the
+  // ShuffleDependencies in the output's RDD lineage, after an action
+  // has materialized the checkpointed inputs (whose setup shuffles the
+  // checkpoint cut from the lineage).
+  private def loopShuffles(df: org.apache.spark.sql.DataFrame): Int = {
+    df.collect()
+    val seen = scala.collection.mutable.Set.empty[Int]
+    def walk(rdd: org.apache.spark.rdd.RDD[_]): Int =
+      if (!seen.add(rdd.id)) 0
+      else rdd.dependencies.map { d =>
+        walk(d.rdd) + (d match {
+          case _: org.apache.spark.ShuffleDependency[_, _, _] => 1
+          case _ => 0
+        })
+      }.sum
+    walk(df.queryExecution.toRdd)
+  }
+
+  private def pathEdges = {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val scope = new graft.operators.CacheScope
-    try {
-      val e = scope.checkpoint(
-        (1L to 400L).map(i => (i % 37, i % 53)).toDF("src", "dst").distinct())
-      val eBySrc = scope.checkpoint(e.repartition(col("src")))
-      val hub = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id")))
-        .groupBy(col("id")).agg(lit(1.0).as("v"))
-      val authRaw = eBySrc.join(hub, eBySrc("src") === hub("id"))
-        .select(col("dst").as("id"), col("v"))
-        .groupBy(col("id")).agg(sum(col("v")).as("v"))
-      val n = shuffleCount(authRaw)
-      // hub's own groupBy is 1 exchange, the message aggregate is 1;
-      // the JOIN itself must add none (un-co-partitioned edges would)
-      assert(n <= 2, s"expected <=2 shuffles (score agg + message agg), saw $n")
-    } finally scope.release()
+    Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L)).toDF("src", "dst")
   }
 
   test("pageRank plans one shuffle per iteration and nothing more") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L))
-      .toDF("src", "dst")
     val iters = 5
-    val n = shuffleCount(graft.operators.GraphOps.pageRank(edges, iters))
-    assert(n <= iters + 1, s"expected ~$iters shuffles, saw $n")
+    val n = loopShuffles(graft.operators.GraphOps.pageRank(pathEdges, iters))
+    assert(n == iters, s"expected $iters shuffles, saw $n")
   }
 
   test("personalized pageRank plans one shuffle per iteration; reset re-join is exchange-free") {
     import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L))
-      .toDF("src", "dst")
     val seeds = Seq(Tuple1(1L)).toDF("id")
     val iters = 5
-    val n = shuffleCount(graft.operators.GraphOps.personalizedPageRank(edges, seeds, iters))
-    // the per-iteration reset join must reuse the aggregate's hash
-    // partitioning — any extra exchange per iteration doubles this
-    assert(n <= iters + 1, s"expected ~$iters shuffles, saw $n")
+    val n = loopShuffles(
+      graft.operators.GraphOps.personalizedPageRank(pathEdges, seeds, iters))
+    assert(n == iters, s"expected $iters shuffles, saw $n")
   }
 
   test("connected components plans one shuffle per iteration and nothing more") {
@@ -170,8 +157,46 @@ class PlanSpec extends AnyFunSuite {
     val edges = Seq((1L, 2L), (3L, 4L), (4L, 5L), (7L, 3L))
       .toDF("src", "dst")
     val iters = 4
-    val n = shuffleCount(graft.operators.GraphOps.connectedComponents(edges, iters))
-    assert(n <= iters + 1, s"expected ~$iters shuffles, saw $n")
+    val n = loopShuffles(graft.operators.GraphOps.connectedComponents(edges, iters))
+    assert(n == iters, s"expected $iters shuffles, saw $n")
+  }
+
+  test("hits runs one shuffle per half-iteration and nothing more") {
+    import spark.implicits._
+    val edges = (1L to 400L).map(i => (i % 37, i % 53)).toDF("src", "dst")
+    val iters = 3
+    val n = loopShuffles(graft.operators.GraphOps.hits(edges, iters))
+    assert(n == 2 * iters, s"expected ${2 * iters} shuffles, saw $n")
+  }
+
+  test("connectedComponentsConverged runs one job per convergence window") {
+    import spark.implicits._
+    // a path 1..20: the minimum label walks one hop per step, so 19
+    // steps change labels — 7 windows of 3, then one that changes
+    // nothing
+    val edges = (1L to 19L).map(i => (i, i + 1)).toDF("src", "dst")
+    val windows = 8
+    // a reliable checkpoint writes its files in one more job
+    val perWindow = if (graft.operators.CacheScope.reliableDir.isDefined) 2 else 1
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val scope = new graft.operators.CacheScope
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val comp = graft.operators.GraphOps.connectedComponentsConverged(edges, scope = scope)
+      org.apache.spark.TestBus.drain(sc)
+      assert(jobs.get == windows * perWindow,
+        s"expected $windows windows x $perWindow jobs, saw ${jobs.get} jobs")
+      assert(comp.collect().forall(_.getLong(1) == 1L))
+    } finally {
+      sc.removeSparkListener(listener)
+      scope.release()
+    }
   }
 
   test("stratified sampling is a pure filter over the scan - no shuffle, no window") {
