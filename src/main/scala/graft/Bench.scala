@@ -336,6 +336,15 @@ object Bench {
     spark.stop()
   }
 
+  /** A plan dump with its run-dependent tokens masked: expression ids
+    * (`#123`), broadcast `plan_id=`s, RDD ids and source call sites
+    * (`CacheScope.scala:55`). Two dumps of one plan are then identical,
+    * so a `plans/` diff shows only plan changes.
+    */
+  private[graft] def stablePlan(txt: String): String =
+    Seq("#\\d+" -> "#_", "plan_id=\\d+" -> "plan_id=_", "RDD\\[\\d+\\]" -> "RDD[_]", "\\.scala:\\d+" -> ".scala:_")
+      .foldLeft(txt) { case (t, (re, to)) => t.replaceAll(re, to) }
+
   /** Any stale `<name>.txt` is deleted BEFORE the dump is attempted,
     * so a failed re-dump can never leave a prior run's plan posing as
     * current evidence. Exits non-zero when a name is unknown or its
@@ -354,8 +363,8 @@ object Bench {
           val out = java.nio.file.Paths.get(outDir, s"$n.txt")
           try {
             java.nio.file.Files.deleteIfExists(out)
-            val txt = fn(spark, sfDir).queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode)
+            val txt = stablePlan(fn(spark, sfDir).queryExecution.explainString(
+              org.apache.spark.sql.execution.FormattedMode))
             java.nio.file.Files.write(out, txt.getBytes("UTF-8"))
             println(s"[explain] wrote $outDir/$n.txt")
             true

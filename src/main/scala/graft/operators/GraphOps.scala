@@ -18,17 +18,19 @@ import org.apache.spark.sql.types.DataType
   * The reference materializes a property graph of key-joined node
   * tables (§1.2/§1.3); here the graph IS the pair (vertices DF,
   * edges DF), and the algorithms take and return DataFrames. The
-  * message-passing ones (PageRank, HITS, components, SSSP, k-core, MIS)
-  * run every round through one kernel, [[superstep]], the physical plan
-  * of Pregelix and GraphX's Pregel: per operator call the graph is an
-  * RDD of (vertex id, adjacency) checkpointed once, and the vertex state
-  * an RDD of (id, value), both under one `HashPartitioner` of
-  * `spark.sql.shuffle.partitions`. The state ⋈ adjacency join is then
-  * partition-local and a round's only shuffle is the message combine.
-  * The converged forms share one convergence loop, [[converge]], which
-  * runs each window of rounds as one job. DataFrames appear only at the
-  * operator boundary, with the column names and types of the SQL the
-  * DuckDB oracle replays.
+  * message-passing ones (PageRank, HITS, components, label
+  * propagation, SSSP, k-core, MIS) and the fixpoint certificates of the
+  * converged forms run every round through one kernel, [[superstep]],
+  * the physical plan of Pregelix and GraphX's Pregel: per operator call
+  * the graph is an RDD of (vertex id, adjacency) checkpointed once, and
+  * the vertex state an RDD of (id, value), both under one
+  * `HashPartitioner` of `spark.sql.shuffle.partitions`. The state ⋈
+  * adjacency join is then partition-local and a round's only shuffle
+  * is the message combine. The converged forms share one convergence
+  * loop, [[converge]], which runs each window of rounds as one job.
+  * DataFrames appear only at the operator boundary, with the column
+  * names and types of the SQL the DuckDB oracle replays. An edge with
+  * a null end names no vertex.
   *
   * Determinism: per-round sums are exact decimal sums quantized to the
   * 1e-9 grid ([[qsum]] in SQL, [[qterm]]/[[qvalue]] in the kernel, bit
@@ -80,15 +82,6 @@ object GraphOps {
         else JBigDecimal.valueOf(x).setScale(0, RoundingMode.HALF_UP).doubleValue
       r.toLong.toDouble / 1.0e9
     }
-
-  /** The vertex set (id) of an edge frame (src, dst). */
-  private def vertexIds(e: DataFrame): DataFrame =
-    e.select(col("src").as("id")).union(e.select(col("dst").as("id"))).distinct()
-
-  /** Both directions of every edge, as (src, dst). */
-  private def symmetric(e: DataFrame): DataFrame =
-    e.select(col("src"), col("dst"))
-      .union(e.select(col("dst").as("src"), col("src").as("dst")))
 
   /** The undirected simple edge set as (a, b) with a < b: self-loops
     * dropped, every vertex pair once.
@@ -145,19 +138,19 @@ object GraphOps {
       .union(also.map((_, ArrayBuffer.empty[E]))), part)(_ ++= _)
       .mapValues(_.toArray)
 
-  /** The distinct neighbours of every vertex over both directions of
-    * the (src, dst) rows `p`; a self-loop makes a vertex its own
-    * neighbour.
+  /** The neighbours of every vertex over both directions of the
+    * (src, dst) rows `p`, one per row and direction: a duplicate row
+    * names its neighbour twice, and a self-loop names the vertex itself
+    * twice.
     */
   private def undirected(p: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Array[Long])] =
     adjacency(p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }, p.sparkContext.emptyRDD[Long], part)
-      .mapValues(_.distinct)
 
   /** The undirected simple graph of `edges` (self-loops dropped, every
     * vertex pair once — [[canonical]]): distinct neighbours per vertex.
     */
   private def simpleGraph(edges: DataFrame, scope: CacheScope): Graph[Array[Long]] =
-    graph(edges, scope)(undirected(pairs(edges).filter { case (a, b) => a != b }, _))
+    graph(edges, scope)(undirected(pairs(edges).filter { case (a, b) => a != b }, _).mapValues(_.distinct))
 
   /** `f` over every (id, value) row of `rdd`, keys and partitioning
     * kept.
@@ -218,12 +211,12 @@ object GraphOps {
     left.zipPartitions(right, preservesPartitioning = true)(new Join(f))
 
   /** The operator's output frame over the kernel's `rows`, columns
-    * `names`; the vertex-id columns (id, v, comp) take the graph's id
-    * type.
+    * `names`; the vertex-id columns (id, v, comp, lbl) take the graph's
+    * id type.
     */
   private def frame[T <: Product : TypeTag](g: Graph[_], rows: RDD[T], names: String*): DataFrame =
     g.spark.createDataFrame(rows).toDF(names: _*).select(names.map { n =>
-      if (Set("id", "v", "comp")(n)) col(n).cast(g.idType).as(n) else col(n)
+      if (Set("id", "v", "comp", "lbl")(n)) col(n).cast(g.idType).as(n) else col(n)
     }: _*)
 
   /** The convergence loop of the converged forms. From `start`, it runs
@@ -317,18 +310,11 @@ object GraphOps {
 
   // ---------------------------------------------------------------
 
-  /** PageRank's message edges (src, dst, frac) as a frame, frac =
-    * 1 / outdeg — one IEEE division per edge that every engine computes
-    * identically.
-    */
-  private def fracEdges(e: DataFrame): DataFrame =
-    e.join(e.groupBy(col("src")).agg(count(lit(1)).as("out")), "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("out")).as("frac"))
-
   /** PageRank's graph: every vertex with its out-edges (dst, frac), frac
     * = w / Σ_out w over the integer weights `w` (column w of `edges`),
-    * or 1 / outdeg at unit weight — the [[fracEdges]] division.
-    * Duplicate edges stay duplicates.
+    * or 1 / outdeg at unit weight — one IEEE division per edge that
+    * every engine computes identically. Duplicate edges stay
+    * duplicates.
     */
   private def rankGraph(edges: DataFrame, scope: CacheScope,
                         weighted: Boolean = false): Graph[Array[(Long, Double)]] =
@@ -366,7 +352,7 @@ object GraphOps {
     * undirected neighbours.
     */
   private def ccGraph(edges: DataFrame, scope: CacheScope): Graph[Array[Long]] =
-    graph(edges, scope)(undirected(pairs(edges), _))
+    graph(edges, scope)(undirected(pairs(edges), _).mapValues(_.distinct))
 
   /** One min-label step: comp(v) = min over v's neighbours ∪ v. */
   private def ccStep(g: Graph[Array[Long]], comp: RDD[(Long, Long)]): RDD[(Long, Long)] =
@@ -443,30 +429,27 @@ object GraphOps {
     * the vote: mode-of-neighbors finds dense communities inside a
     * component, min-of-neighbors finds the component itself.
     *
-    * Plan shape per round: ONE join (labels against the checkpointed
-    * undirected edge list) and TWO
-    * map-side-combined hash aggregates — the (vertex, label) vote
-    * count, then the per-vertex argmax. The two aggregates are keyed
-    * differently, so the round is not one [[superstep]]. The
-    * argmax is `max_by` over (count, −label) — an aggregate, never a
-    * rank-1 window, so a hub's votes combine map-side instead of
-    * sorting on one reducer. Labels are referenced once per round, so
-    * the logical plan grows linearly and needs no per-round
-    * checkpoint. Every vertex derived from the edge list has a
-    * neighbor, so no keep-own fallback join is needed.
+    * The vote counts every (src, dst) row in both directions, as the
+    * oracle's `UNION ALL` does: a duplicate edge votes twice, and a
+    * self-loop votes for the vertex's own label twice.
+    *
+    * Plan shape: one [[superstep]] per round over the checkpointed
+    * undirected adjacency. Each vertex sends its label to every
+    * neighbour as a one-entry (label → count) map, the combine adds the
+    * maps (map-side, so a hub's votes arrive pre-counted), and the
+    * argmax is taken partition-locally from the combined map: one
+    * shuffle per round. Every vertex of the graph has a neighbour, so
+    * every vertex receives a vote.
     */
   def labelPropagation(edges: DataFrame, iterations: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.checkpoint(edges)
-    val undirected = scope.checkpoint(symmetric(e).repartition(col("src")))
-    var lbl = vertexIds(e).select(col("id"), col("id").as("lbl"))
-    for (_ <- 1 to iterations) {
-      val votes = undirected.join(lbl, undirected("src") === lbl("id"))
-        .groupBy(col("dst"), col("lbl")).agg(count(lit(1)).as("c"))
-      lbl = votes.groupBy(col("dst").as("id"))
-        .agg(max_by(col("lbl"), struct(col("c"), -col("lbl"))).as("lbl"))
-    }
-    lbl
+    val g = graph(edges, scope)(undirected(pairs(edges), _))
+    frame(g, (1 to iterations).foldLeft(init(g)((id, _) => id)) { (lbl, _) =>
+      update(superstep(g, lbl) { (_, nbrs, l) => nbrs.iterator.map((_, Map(l -> 1L))) } { (a, b) =>
+        val (big, small) = if (a.size >= b.size) (a, b) else (b, a)
+        small.foldLeft(big) { case (m, (l, c)) => m.updated(l, m.getOrElse(l, 0L) + c) }
+      })((_, votes) => votes.minBy { case (l, c) => (-c, l) }._1)
+    }, "id", "lbl")
   }
 
   /** Multi-source BFS / unit-weight shortest paths along edge
@@ -578,19 +561,21 @@ object GraphOps {
                    scope: CacheScope = CacheScope.global): DataFrame = {
     // Sources join the vertex set so an isolated source (no incident
     // edges) still surfaces with dist=0 rather than silently vanishing
-    // from the output. An edge with a NULL weight relaxes nothing.
+    // from the output. Every vertex carries its out-edges and whether
+    // it is a source, so the seeds come from the checkpointed graph and
+    // the loop's only shuffles are its rounds. An edge with a NULL
+    // weight relaxes nothing.
     val srcIds = idRdd(sources)
     val g = graph(edges, scope, sources) { part =>
       val rows = edges.select(col("src").cast("long"), col("dst").cast("long"),
         col("w").cast("long")).filter(col("src").isNotNull && col("dst").isNotNull).rdd
       val out = rows.filter(!_.isNullAt(2)).map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
-      adjacency(out, rows.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).union(srcIds), part)
+      zipLocal(adjacency(out, rows.flatMap(r => Iterator(r.getLong(0), r.getLong(1))).union(srcIds), part),
+        combined(srcIds.map((_, ())), part)((a, _) => a))((_, o, src) => (o, src.isDefined))
     }
-    // the reduce also drops duplicate source ids
-    val seeds = combined(srcIds.map((_, 0L)), g.part)((a, _) => a)
-    val dist = (1 to iterations).foldLeft(seeds) { (d, _) =>
-      superstep(g, d) { (id, out, x) =>
-        Iterator.single((id, x)) ++ out.iterator.map { case (dst, w) => (dst, x + w) }
+    val dist = (1 to iterations).foldLeft(update(g.adj.filter(_._2._2))((_, _) => 0L)) { (d, _) =>
+      superstep(g, d) { (id, a, x) =>
+        Iterator.single((id, x)) ++ a._1.iterator.map { case (dst, w) => (dst, x + w) }
       }((a, b) => math.min(a, b))
     }
     frame(g, zipLocal(g.adj, dist)((_, _, d) => d), "id", "dist")
@@ -693,41 +678,47 @@ object GraphOps {
   // data-dependent number of rounds, which no static SQL can unroll —
   // so their CORRECTNESS entries check the FIXPOINT PROPERTY instead
   // of the trajectory. Each certificate recomputes one application of
-  // the recurrence from the OUTPUT itself (the engine's own step) and
-  // emits rows whose correct values are knowable to the
-  // oracle without replaying: the vertex list (graph-derived) and
-  // all-true / all-zero violation columns. An under-converged run
-  // cannot reproduce them — the residual check fails on exactly the
-  // vertices whose values were still moving.
+  // the recurrence from the OUTPUT itself, as one [[superstep]] over the
+  // operator's own kernel graph, and emits rows whose correct values
+  // are knowable to the oracle without replaying: the vertex list
+  // (graph-derived) and all-true / all-zero violation columns. An
+  // under-converged run cannot reproduce them — the residual check
+  // fails on exactly the vertices whose values were still moving. The
+  // given state is read as (id, value) rows; a row with a null field is
+  // skipped, as no converged form emits one.
   // ---------------------------------------------------------------
 
   /** Per-vertex PageRank fixpoint certificate over `ranks` (the (id,
     * rank) output of [[pageRankConverged]]): recompute expected(v) =
-    * reset + damp·Σ rank(u)/outdeg(u) with the engine's own step
-    * ([[rankStep]]) and flag |rank − expected| within the contraction
-    * bound. At a tol-fixpoint the residual of vertex v is at most
-    * damp·(in_mass(v)·tol + q) where in_mass(v) = Σ_{u→v} 1/outdeg(u)
-    * (each in-neighbor moved ≤ tol in the final round) and q = 1e-9 is
-    * one quantization step — the per-vertex bound used here, plus 1e-8
-    * slack. Emits (id, converged): every graph vertex exactly once,
-    * all true iff the claimed fixpoint holds.
+    * reset + damp·Σ rank(u)/outdeg(u) with the engine's own step and
+    * flag |rank − expected| within the contraction bound. At a
+    * tol-fixpoint the residual of vertex v is at most damp·(in_mass(v)·
+    * tol + q) where in_mass(v) = Σ_{u→v} 1/outdeg(u) (each in-neighbor
+    * moved ≤ tol in the final round) and q = 1e-9 is one quantization
+    * step — the per-vertex bound used here, plus 1e-8 slack. The step's
+    * one shuffle carries both sums. Emits (id, converged): every ranked
+    * graph vertex once per `ranks` row, all true iff the claimed
+    * fixpoint holds.
     */
   def pageRankCertificate(edges: DataFrame, ranks: DataFrame, tol: Double,
                           reset: Double = 0.15, damp: Double = 0.85,
                           scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(edges.select(col("src"), col("dst")))
-    val g = rankGraph(e, scope)
+    val g = rankGraph(edges, scope)
     val given = ranks.select(col("id").cast("long"), col("rank")).na.drop().rdd
       .map(r => (r.getLong(0), r.getDouble(1))).partitionBy(g.part)
-    val expected = frame(g, rankStep(g, given, reset, damp), "id", "expected")
-    val inMass = fracEdges(e).groupBy(col("dst").as("id"))
-      .agg(sum(col("frac")).as("in_mass"))
-    ranks.join(expected, "id")
-      .join(inMass, Seq("id"), "left")
-      .select(col("id"),
-        (abs(col("rank") - col("expected")) <=
-          lit(damp) * (coalesce(col("in_mass"), lit(0.0)) * lit(tol) + lit(1e-9))
-            + lit(1e-8)).as("converged"))
+    // every graph vertex sends: one zero to itself, so it gets a sum,
+    // and one message per out-edge, a zero rank term if it is unranked,
+    // so in_mass counts every in-edge
+    val sums = superstep(g, zipLocal(g.adj, given)((_, _, rank) => rank)) { (id, out, rank) =>
+      Iterator.single((id, (BigInteger.ZERO, 0.0))) ++ out.iterator.map { case (dst, f) =>
+        (dst, (rank.fold(BigInteger.ZERO)(r => qterm(r * f)), f))
+      }
+    } { case ((q1, m1), (q2, m2)) => (q1 add q2, m1 + m2) }
+    frame(g.copy(idType = ranks.schema("id").dataType), zipLocal(given, sums) { (_, rank, sum) =>
+      sum.map { case (q, inMass) =>
+        math.abs(rank - (reset + damp * qvalue(q))) <= damp * (inMass * tol + 1e-9) + 1e-8
+      }
+    }.collect { case (id, Some(ok)) => (id, ok) }, "id", "converged")
   }
 
   /** Per-vertex connected-components fixpoint certificate over `comp`
@@ -737,59 +728,53 @@ object GraphOps {
     * id init); (b) no undirected neighbor carries a smaller label —
     * with symmetry that makes comp constant along every edge, exactly
     * the property an under-iterated run violates; (c) the label is a
-    * self-labeled root: comp(comp(v)) = comp(v). Emits (id,
-    * converged): every graph vertex exactly once, all true iff the
-    * fixpoint holds.
+    * self-labeled root: comp(comp(v)) = comp(v). (b) is one neighbour-
+    * min superstep, (c) a join of the label rows, keyed by label, with
+    * the roots on the graph's partitioner. Emits (id, converged): one
+    * row per `comp` row, all true iff the fixpoint holds.
     */
   def connectedComponentsCertificate(edges: DataFrame, comp: DataFrame,
                                      scope: CacheScope = CacheScope.global): DataFrame = {
-    val labels = scope.persist(comp.select(col("id"), col("comp")))
     val g = ccGraph(edges, scope)
-    val given = labels.select(col("id").cast("long"), col("comp").cast("long")).na.drop().rdd
+    val given = comp.select(col("id").cast("long"), col("comp").cast("long")).na.drop().rdd
       .map(r => (r.getLong(0), r.getLong(1))).partitionBy(g.part)
     // neighbours only: a vertex sees its own label through a self-loop
-    val nbrMin = frame(g, superstep(g, given) { (_, nbrs, c) => nbrs.iterator.map((_, c)) }(
-      (a, b) => math.min(a, b)), "id", "nbr_min")
-    val roots = labels.filter(col("id") === col("comp"))
-      .select(col("comp"), lit(true).as("root_ok"))
-    labels.join(nbrMin, Seq("id"), "left")
-      .join(roots, Seq("comp"), "left")
-      .select(col("id"),
-        (col("comp") <= col("id") &&
-          coalesce(col("nbr_min") >= col("comp"), lit(true)) &&
-          coalesce(col("root_ok"), lit(false))).as("converged"))
+    val nbrMin = superstep(g, given) { (_, nbrs, c) => nbrs.iterator.map((_, c)) }(
+      (a, b) => math.min(a, b))
+    val byLabel = zipLocal(given, nbrMin)((id, c, m) => (c, (id, c <= id && m.forall(_ >= c)))).values
+    val roots = given.filter { case (id, c) => id == c }
+    frame(g.copy(idType = comp.schema("id").dataType), byLabel.leftOuterJoin(roots, g.part).values.map {
+      case ((id, ok), root) => (id, ok && root.isDefined)
+    }, "id", "converged")
   }
 
   /** k-core fixpoint certificate over `core` (the (id, degree) output
-    * of [[kCoreConverged]]): restrict the canonicalized edge set to
-    * the surviving vertices and recompute induced degrees. At the
-    * k-core fixpoint (i) every induced degree is ≥ k — equivalently,
-    * one more peel removes nothing — and (ii) the reported degrees
-    * equal the induced recomputation (the final edge set IS the
-    * induced subgraph on survivors, since peeling only drops edges at
-    * removed endpoints). Emits ONE row (n_vertices, n_below_k,
-    * n_deg_mismatch): the graph's vertex count (oracle-computable) and
-    * two violation counts that are 0 iff the fixpoint holds.
+    * of [[kCoreConverged]]): over the simple undirected graph, every
+    * survivor sends 1 to each neighbour, so a survivor receives its
+    * degree in the subgraph induced on the survivors. At the k-core
+    * fixpoint (i) every induced degree is ≥ k — equivalently, one more
+    * peel removes nothing — and (ii) the reported degrees equal the
+    * induced ones (the final edge set IS the induced subgraph on
+    * survivors, since peeling only drops edges at removed endpoints).
+    * Emits ONE row (n_vertices, n_below_k, n_deg_mismatch): the
+    * graph's vertex count (oracle-computable) and two violation counts
+    * over the `core` rows that are 0 iff the fixpoint holds.
     */
   def kCoreCertificate(edges: DataFrame, core: DataFrame, k: Int,
                        scope: CacheScope = CacheScope.global): DataFrame = {
-    val e = scope.persist(canonical(edges))
-    val surv = scope.persist(core.select(col("id"), col("degree")))
-    val induced = e
-      .join(surv.select(col("id").as("a")), Seq("a"), "left_semi")
-      .join(surv.select(col("id").as("b")), Seq("b"), "left_semi")
-    val indDeg = induced.select(col("a").as("id"))
-      .union(induced.select(col("b").as("id")))
-      .groupBy(col("id")).agg(count(lit(1)).as("ind_d"))
-    val checks = surv.join(indDeg, Seq("id"), "left")
-      .agg(
-        coalesce(sum(when(coalesce(col("ind_d"), lit(0L)) < k, 1L)
-          .otherwise(0L)), lit(0L)).as("n_below_k"),
-        coalesce(sum(when(coalesce(col("ind_d"), lit(0L)) =!= col("degree"), 1L)
-          .otherwise(0L)), lit(0L)).as("n_deg_mismatch"))
-    val nVerts = e.select(col("a").as("id")).union(e.select(col("b").as("id")))
-      .agg(count_distinct(col("id")).as("n_vertices"))
-    nVerts.crossJoin(checks) // two 1-row aggregates
+    val g = simpleGraph(edges, scope)
+    val surv = core.select(col("id").cast("long"), col("degree").cast("long")).na.drop().rdd
+      .map(r => (r.getLong(0), r.getLong(1))).partitionBy(g.part)
+    val induced = superstep(g, surv)((_, nbrs, _) => nbrs.iterator.map((_, 1L)))(_ + _)
+    // (is a graph vertex, below k, degree mismatch) per vertex and per
+    // survivor row
+    val checks = update(g.adj)((_, _) => (true, false, false)).union(zipLocal(surv, induced) {
+      (_, deg, d) => (false, d.getOrElse(0L) < k, d.getOrElse(0L) != deg)
+    })
+    frame(g, checks.values, "vertex", "below", "mismatch").agg(
+      count(when(col("vertex"), 1)).as("n_vertices"),
+      count(when(col("below"), 1)).as("n_below_k"),
+      count(when(col("mismatch"), 1)).as("n_deg_mismatch"))
   }
 
   /** GraphX-backed PageRank over the same edge DataFrame — the

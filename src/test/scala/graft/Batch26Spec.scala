@@ -30,4 +30,16 @@ class Batch26Spec extends AnyFunSuite {
     val in3 = (r(3L) - 0.15) / 0.85
     assert(math.abs(in2 / in3 - 9.0) < 1e-6, s"9:1 split expected: $in2 vs $in3")
   }
+
+  test("weighted pageRank rejects a zero weight and a NULL weight") {
+    val good = Seq((1L, 2L, 2L), (2L, 3L, 1L), (3L, 1L, 4L))
+    val zero = (good :+ ((1L, 3L, 0L))).toDF("src", "dst", "w")
+    val nul = (good.map { case (s, d, w) => (s, d, Option(w)) } :+ ((1L, 3L, Option.empty[Long])))
+      .toDF("src", "dst", "w")
+    for ((what, e) <- Seq("w = 0" -> zero, "NULL w" -> nul)) {
+      val err = intercept[IllegalArgumentException](GraphOps.pageRankWeighted(e, 2))
+      assert(err.getMessage.contains("pageRankWeighted: edge weights must be positive non-null"),
+        s"$what: ${err.getMessage}")
+    }
+  }
 }

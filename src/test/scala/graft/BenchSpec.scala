@@ -4,7 +4,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.Bench.medianOfSuccesses
+import graft.Bench.{medianOfSuccesses, stablePlan}
 
 class BenchSpec extends AnyFunSuite {
   private val boom: Try[Double] = Failure(new RuntimeException("boom"))
@@ -29,5 +29,20 @@ class BenchSpec extends AnyFunSuite {
   test("no successful rep has no median") {
     assert(medianOfSuccesses(Seq(boom, boom)).isEmpty)
     assert(medianOfSuccesses(Seq.empty).isEmpty)
+  }
+
+  test("plan dumps mask expression ids, plan ids, RDD ids and call sites") {
+    def dump(attr: Int, planId: Int, rdd: Int, line: Int, join: String) =
+      s"""(3) $join
+         |Left keys [1]: [id#$attr]
+         |Right keys [1]: [id#${attr + 7}L]
+         |Arguments: HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id=$planId]
+         |Arguments: [id#$attr], MapPartitionsRDD[$rdd] at localCheckpoint at CacheScope.scala:$line, ExistingRDD
+         |""".stripMargin
+    val a = dump(16799, 43419, 2138, 55, "BroadcastHashJoin")
+    assert(stablePlan(a) == stablePlan(dump(218, 12, 7, 57, "BroadcastHashJoin")))
+    assert(stablePlan(a) != stablePlan(dump(16799, 43419, 2138, 55, "SortMergeJoin")))
+    assert(stablePlan(a).contains("[id#_L]") && stablePlan(a).contains("[plan_id=_]") &&
+      stablePlan(a).contains("MapPartitionsRDD[_] at localCheckpoint at CacheScope.scala:_"), stablePlan(a))
   }
 }

@@ -205,6 +205,28 @@ class CurationOps2Spec extends AnyFunSuite {
     assert(l1(7L) == 9L)
   }
 
+  test("label prop on a multigraph: every edge row votes, null ends name no vertex") {
+    // neighbours with multiplicity: 1 → [2, 2, 3], 2 → [1, 1, 4],
+    // 3 → [1, 3, 3, 5] (the self-loop votes twice), 4 → [2, 5],
+    // 5 → [4, 3]; the two null-end edges vote for nobody
+    val e = Seq[(Option[Long], Option[Long])](
+      (Some(1L), Some(2L)), (Some(1L), Some(2L)), (Some(1L), Some(3L)), (Some(3L), Some(3L)),
+      (Some(2L), Some(4L)), (Some(5L), Some(4L)), (Some(5L), Some(3L)),
+      (Some(4L), None), (None, Some(3L))
+    ).toDF("src", "dst")
+    def labels(iterations: Int): Map[Long, Long] = {
+      val rows = GraphOps.labelPropagation(e, iterations).collect()
+      assert(rows.forall(!_.isNullAt(0)), "a null-end edge must not yield a null-id row")
+      rows.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    // round 1: 1 {2:2, 3:1} → 2; 2 {1:2, 4:1} → 1; 3 {1:1, 3:2, 5:1} → 3;
+    // 4 {2:1, 5:1} → 2 and 5 {4:1, 3:1} → 3 on the smaller label
+    assert(labels(1) == Map(1L -> 2L, 2L -> 1L, 3L -> 3L, 4L -> 2L, 5L -> 3L))
+    // round 2: 1 {1:2, 3:1} → 1; 2 {2:3} → 2; 3 {2:1, 3:3} → 3;
+    // 4 {1:1, 3:1} → 1; 5 {2:1, 3:1} → 2
+    assert(labels(2) == Map(1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 1L, 5L -> 2L))
+  }
+
   test("label prop differs from CC: dense community keeps its own label") {
     // two triangles joined by one bridge edge — CC merges them to one
     // component; 2-round LPA keeps two communities

@@ -32,6 +32,44 @@ class GraphCertSpec extends AnyFunSuite {
       Seq((4L, 5L), (5L, 6L), (5L, 7L), (6L, 7L))
   ).toDF("src", "dst")
 
+  // a multigraph: a triangle with a duplicate edge and a self-loop, a
+  // 3-hop tail (so 1-round CC and a 1-round 2-core peel are
+  // unconverged), and two edges with a null end, which name no vertex
+  private def multiEdges = Seq[(Option[Long], Option[Long])](
+    (Some(1L), Some(2L)), (Some(1L), Some(2L)), (Some(2L), Some(3L)), (Some(3L), Some(1L)),
+    (Some(3L), Some(3L)), (Some(3L), Some(4L)), (Some(4L), Some(5L)), (Some(5L), Some(6L)),
+    (Some(6L), None), (None, Some(1L))
+  ).toDF("src", "dst")
+
+  private def verdicts(cert: DataFrame): Map[Long, Boolean] = {
+    val rows = cert.collect()
+    assert(rows.forall(!_.isNullAt(0)), "a null-end edge must not yield a null-id row")
+    val m = rows.map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(m.size == rows.length, "one row per vertex")
+    m
+  }
+
+  test("certificates on a multigraph: duplicate edges, a self-loop, null ends") {
+    val e = multiEdges
+    val tol = 1e-9
+    val pr = verdicts(GraphOps.pageRankCertificate(e,
+      GraphOps.pageRankConverged(e, tol = tol, maxIterations = 200), tol))
+    assert(pr.keySet == (1L to 6L).toSet && pr.values.forall(identity), pr)
+    assert(verdicts(GraphOps.pageRankCertificate(e, GraphOps.pageRank(e, 1), tol)).exists(!_._2))
+
+    val cc = verdicts(GraphOps.connectedComponentsCertificate(e, GraphOps.connectedComponentsConverged(e)))
+    assert(cc.keySet == (1L to 6L).toSet && cc.values.forall(identity), cc)
+    assert(verdicts(GraphOps.connectedComponentsCertificate(e, GraphOps.connectedComponents(e, 1)))
+      .exists(!_._2))
+    val rootless = (1L to 6L).map(i => (i, 0L)).toDF("id", "comp")
+    assert(verdicts(GraphOps.connectedComponentsCertificate(e, rootless)).values.forall(!_))
+
+    val good = GraphOps.kCoreCertificate(e, GraphOps.kCoreConverged(e, k = 2), 2).collect().head
+    assert((good.getLong(0), good.getLong(1), good.getLong(2)) == ((6L, 0L, 0L)))
+    val bad = GraphOps.kCoreCertificate(e, GraphOps.kCore(e, k = 2, iterations = 1), 2).collect().head
+    assert(bad.getLong(0) == 6L && bad.getLong(1) > 0L, "an under-peeled core must report degree<k rows")
+  }
+
   test("pageRankCertificate: converged passes, 1-iteration run fails") {
     val e = cycleEdges
     val tol = 1e-9

@@ -169,6 +169,28 @@ class PlanSpec extends AnyFunSuite {
     assert(n == 2 * iters, s"expected ${2 * iters} shuffles, saw $n")
   }
 
+  test("label propagation plans one shuffle per round and nothing more") {
+    import spark.implicits._
+    // a duplicate edge and a self-loop: the vote's multiplicity must
+    // not cost a shuffle of its own
+    val edges = Seq((1L, 2L), (1L, 2L), (2L, 3L), (3L, 3L), (4L, 1L), (5L, 4L))
+      .toDF("src", "dst")
+    val iters = 4
+    val n = loopShuffles(graft.operators.GraphOps.labelPropagation(edges, iters))
+    assert(n == iters, s"expected $iters shuffles, saw $n")
+  }
+
+  test("weighted sssp plans one shuffle per relaxation round and nothing more") {
+    import spark.implicits._
+    val edges = Seq((1L, 2L, 3L), (2L, 3L, 1L), (1L, 3L, 5L), (3L, 4L, 2L), (4L, 1L, 1L))
+      .toDF("src", "dst", "w")
+    // a duplicate source and one outside the graph
+    val sources = Seq(1L, 1L, 9L).toDF("id")
+    val iters = 3
+    val n = loopShuffles(graft.operators.GraphOps.weightedSssp(edges, sources, iters))
+    assert(n == iters, s"expected $iters shuffles, saw $n")
+  }
+
   test("connectedComponentsConverged runs one job per convergence window") {
     import spark.implicits._
     // a path 1..20: the minimum label walks one hop per step, so 19
@@ -397,13 +419,6 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
   }
 
-  test("label propagation: vote argmax is an aggregate; all joins are equi-joins") {
-    val full = plan("g_label_prop")
-    val p = full.split("== Initial Plan ==")(0)
-    assert(!p.contains("Window"), "argmax must not be a rank window:\n" + p)
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
-  }
-
   test("scd2: both windows run in one per-key sort, no global window") {
     val full = plan("lake_scd2")
     val p = full.split("== Initial Plan ==")(0)
@@ -516,15 +531,6 @@ class PlanSpec extends AnyFunSuite {
     val p = full.split("== Initial Plan ==")(0)
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("Exchange rangepartitioning"), "no global sort:\n" + p)
-  }
-
-  test("weighted sssp: relaxation rounds are equi-joins over data") {
-    val full = plan("g_weighted_sssp")
-    val p = full.split("== Initial Plan ==")(0)
-    assert(!p.contains("CartesianProduct"), p)
-    // the 1-row seed frame may stitch via nested loop; data joins hash
-    val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).length
-    assert(bnlj <= 1, s"only the seed stitch may loop, saw $bnlj:\n$p")
   }
 
   test("asof attribution: candidates collapse in an argmin aggregate, not a rank window") {
