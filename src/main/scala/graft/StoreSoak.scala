@@ -40,7 +40,9 @@ import graft.cypher.{GraphStore, PropertyGraph}
   *
   * Usage: `runMain graft.StoreSoak [days] [stations] [seedRows]`
   * (defaults 90 × 4 = 1080 statements, seedRows=0). Prints one
-  * summary line per checkpoint plus the final linearity verdict;
+  * summary line per checkpoint plus the final linearity verdict, and
+  * last the final `GraphStore.stats` of both stores (regime, folds,
+  * last fold ms, key-index entries, overlay rows, LSM levels);
   * numbers are recorded in SCALE.md.
   */
 object StoreSoak {
@@ -189,6 +191,16 @@ object StoreSoak {
     require(vA == vB && eA == eB,
       s"replay modes diverge: row-at-a-time ($vA, $eA) vs batched ($vB, $eB)")
     println(s"[soak] converged: $vA vertices, $eA edges both modes")
+    // which regime and index size the soak's figures measured
+    def profile(s: GraphStore): String = {
+      val st = s.stats
+      f"${if (st.bucketed) "bucketed" else "unbucketed"}, ${st.rows} rows, " +
+        f"${st.folds} folds (last ${st.lastFoldMs}%.1f ms), " +
+        s"${st.indexEntries} index entries, ${st.overlayRows} overlay rows, " +
+        s"${st.levels} levels"
+    }
+    println(s"[soak] store: row-at-a-time ${profile(store)}; " +
+      s"batched ${profile(batched)}")
     spark.stop()
   }
 }

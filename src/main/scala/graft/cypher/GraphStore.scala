@@ -30,6 +30,16 @@ import CypherAst.ConstraintDdl
   *     per-write fold and two store regimes). The first write after an
   *     explicit transaction's commit folds the whole store once
   *     instead: the fork's statements were not tracked.
+  *     Existence is answered on the driver, the way the reference's
+  *     Neo4j answers a MERGE from its uniqueness-constraint index: a
+  *     key index holds, per written MERGE/CREATE label, the standing
+  *     ids of that label's id family and, per written relationship
+  *     type, the standing `(src, dst)` pairs ([[GraphStore.KeyIndex]],
+  *     reached through [[CypherWrite.ProbeHint.Indexed]]). A write
+  *     then pays for its delta and its fold, and no probe jobs
+  *     (SCALE.md, "A driver-side key index"). The index changes only
+  *     after a statement applied and folded; a commit, a save and the
+  *     move to the bucketed regime drop it, and it rebuilds lazily.
   *   - Past the gate (or `forceBucketed`) the store is BUCKETED: the
   *     base is clustered by key hash, each write appends a delta-sized
   *     window segment, and every 8 writes the segments collapse into a
@@ -38,8 +48,10 @@ import CypherAst.ConstraintDdl
   *     `overlayFoldRows` rows and [[GraphStore.MaxLevels]] LSM levels
   *     have stacked.
   *
-  * [[stats]] snapshots the standing row count, the bucket mode and
-  * the fold count and cost.
+  * [[stats]] snapshots the standing row count, the bucket mode, the
+  * fold count and cost, the key index's entries and the bucketed
+  * overlay's rows and LSM levels. Transaction forks ([[executeOn]])
+  * apply without a hint: plain Spark probes over the fork.
   */
 final class GraphStore(initial: PropertyGraph,
                        initialLabelKeys: Map[String, Seq[String]] = Map.empty,
@@ -86,7 +98,7 @@ final class GraphStore(initial: PropertyGraph,
           val bad = d.keys.map(k => col("props").getItem(k).isNotNull)
             .foldLeft(col("id") =!= expect)(_ && _)
           val hit = withoutConstraintPropagation(g.vertices
-            .filter(col("label") === d.label && bad).limit(1).count())
+            .filter(col("label") === d.label && bad).count())
           if (hit > 0) throw new IllegalStateException(
             s"CREATE CONSTRAINT on :${d.label}: existing row(s) " +
             "violate the id convention id = " +
@@ -159,6 +171,10 @@ final class GraphStore(initial: PropertyGraph,
   // touched rows).
   private var bktV: Option[BucketedFrame] = None
   private var bktE: Option[BucketedFrame] = None
+
+  /** The unbucketed regime's key index (see the class header); empty
+    * while bucketed. */
+  private val keyIdx = new GraphStore.KeyIndex
 
   // ---- leveled overlay fold (round 15) -----------------------------
   // LSM-style: an overlay that outgrows its budget PROMOTES to a
@@ -239,7 +255,8 @@ final class GraphStore(initial: PropertyGraph,
       liveRows = withoutConstraintPropagation(
         g.vertices.count() + g.edges.count())
     GraphStore.StoreStats(rows = liveRows, bucketed = bktV.isDefined,
-      folds = folds, lastFoldMs = lastFoldMs)
+      folds = folds, lastFoldMs = lastFoldMs, indexEntries = keyIdx.entries,
+      overlayRows = ovRows, levels = math.max(lvlV.size, lvlE.size))
   }
 
   // ---- catalog procedures (round 16) ------------------------------
@@ -375,8 +392,9 @@ final class GraphStore(initial: PropertyGraph,
       CypherParser.parseAny(stmt) match {
         case Left(w) =>
           ensureProbeIndex()
+          val keyView = if (bktV.isDefined) None else Some(new keyIdx.View(g))
           val hintOpt =
-            if (bktV.isDefined) Some(probeHint()) else None
+            if (bktV.isDefined) Some(probeHint()) else keyView.map(_.hint)
           val a = withoutConstraintPropagation(
             CypherWrite(g, w, params, labelKeys, hintOpt))
           if (bktV.isDefined) {
@@ -405,6 +423,8 @@ final class GraphStore(initial: PropertyGraph,
           // store's segments are delta-sized at bounded plan depth;
           // they collapse every 8 writes.
           if (bktV.isEmpty || writesSinceCompact >= 8) compact()
+          // the statement applied and folded: its index changes land
+          keyView.foreach(v => withoutConstraintPropagation(v.commit(a.touched)))
           (a.stats, a.rows)
         case Right(_) => throw new IllegalArgumentException(
           "read query passed to execute(); use cypher()")
@@ -453,6 +473,7 @@ final class GraphStore(initial: PropertyGraph,
     bktV = None; bktE = None; segs = Vector.empty
     ovV = None; ovE = None; maskV = None; maskE = None; ovRows = 0L
     clearLevels()
+    keyIdx.clear()
     baseV = ng.vertices; baseE = ng.edges
   }
 
@@ -573,6 +594,7 @@ final class GraphStore(initial: PropertyGraph,
     ovV = None; ovE = None; maskV = None; maskE = None
     ovRows = 0L; window = Nil; segs = Vector.empty; baseValid = true
     clearLevels()
+    keyIdx.clear() // the bucketed regime probes through the buckets
     g = PropertyGraph(baseV, baseE)
   }
 
@@ -582,7 +604,7 @@ final class GraphStore(initial: PropertyGraph,
   private def probeHint(): CypherWrite.ProbeHint = {
     val memoV = new java.util.IdentityHashMap[DataFrame, DataFrame]
     val memoE = new java.util.IdentityHashMap[DataFrame, DataFrame]
-    CypherWrite.ProbeHint(
+    CypherWrite.ProbeHint.Pruned(
       vertices = keys => memoV.computeIfAbsent(keys, { k =>
         val bset = bktV.get.bucketsOf(k)
         bucketedVertexView(bktV.get.prunedBySet(bset),
@@ -696,7 +718,7 @@ final class GraphStore(initial: PropertyGraph,
       def unionAll(fs: Seq[DataFrame]): Option[DataFrame] =
         fs.reduceOption(_ unionByName _)
       val nonEmpty: Option[DataFrame] => Option[DataFrame] =
-        _.filter(df => df.limit(1).count() > 0)
+        _.filter(df => df.count() > 0)
 
       // ---- vertices: touched/dead ids across the window ------------
       val idsAll = unionAll(segs.flatMap(s => Seq(s.vIds, s.vDead).flatten))
@@ -879,6 +901,7 @@ final class GraphStore(initial: PropertyGraph,
     maskV = None; maskE = None
     bktV = None; bktE = None; segs = Vector.empty
     clearLevels()
+    keyIdx.clear()
     ovRows = 0L; window = Nil; baseValid = true
     writesSinceCompact = 0
   }
@@ -887,9 +910,76 @@ final class GraphStore(initial: PropertyGraph,
 object GraphStore {
   /** [[GraphStore.stats]]: standing rows (vertices + edges), whether
     * the bucket-pruned probe index is on, folds so far and the last
-    * fold's wall time. */
+    * fold's wall time; the unbucketed key index's entries (ids plus
+    * edge pairs held), and the bucketed overlay's rows and LSM level
+    * count. */
   final case class StoreStats(rows: Long, bucketed: Boolean, folds: Long,
-                              lastFoldMs: Double)
+                              lastFoldMs: Double, indexEntries: Long,
+                              overlayRows: Long, levels: Int)
+
+  /** The unbucketed store's driver-resident key index: per MERGE/CREATE
+    * label `L` the standing ids equal to `L` or starting with `L:` (the
+    * only ids a delta row of `L` can mint), per relationship type the
+    * standing `(src, dst)` pairs. A slice is built by one collect the
+    * first time a statement's delta names its family, and only written
+    * families are held — bounded by the regime's [[BucketProbeRows]].
+    * Guarded by the store's lock. */
+  private final class KeyIndex {
+    import scala.collection.mutable
+    private val vIds = mutable.HashMap.empty[String, mutable.HashSet[String]]
+    private val ePairs =
+      mutable.HashMap.empty[String, mutable.HashSet[(String, String)]]
+
+    def entries: Long = vIds.valuesIterator.map(_.size.toLong).sum +
+      ePairs.valuesIterator.map(_.size.toLong).sum
+    def clear(): Unit = { vIds.clear(); ePairs.clear() }
+    private def slicesOf(id: String): Iterator[mutable.HashSet[String]] =
+      vIds.iterator.collect {
+        case (l, ids) if id == l || id.startsWith(l + ":") => ids
+      }
+
+    /** One statement's view over the standing graph `g`. The slices it
+      * builds and the keys it creates stay pending until [[commit]], so
+      * a statement that throws leaves the index as it was. */
+    final class View(g: PropertyGraph) {
+      private val newV = mutable.HashMap.empty[String, mutable.HashSet[String]]
+      private val newE =
+        mutable.HashMap.empty[String, mutable.HashSet[(String, String)]]
+      private val addV = mutable.ArrayBuffer.empty[String]
+      private val addE = mutable.ArrayBuffer.empty[(String, String, String)]
+
+      val hint: CypherWrite.ProbeHint.Indexed = CypherWrite.ProbeHint.Indexed(
+        vertexIds = l => vIds.getOrElse(l, newV.getOrElseUpdate(l,
+          mutable.HashSet.from(g.vertices
+            .filter(col("id") === l || col("id").startsWith(l + ":"))
+            .select(col("id")).collect().map(_.getString(0))))),
+        edgePairs = r => ePairs.getOrElse(r, newE.getOrElseUpdate(r,
+          mutable.HashSet.from(g.edges
+            .filter(col("rel") === r && col("src").isNotNull &&
+              col("dst").isNotNull)
+            .select(col("src"), col("dst")).collect()
+            .map(x => (x.getString(0), x.getString(1)))))),
+        created = (vs, es) => { addV ++= vs; addE ++= es })
+
+      /** The statement applied: its built slices and created keys go
+        * in, its deletions (delta-sized frames, collected only when it
+        * deleted) come out — a DETACH takes its endpoints' pairs. */
+      def commit(t: CypherWrite.Touched): Unit = {
+        vIds ++= newV; ePairs ++= newE
+        addV.foreach(id => slicesOf(id).foreach(_ += id))
+        addE.foreach { case (s, d, r) => ePairs.get(r).foreach(_ += ((s, d))) }
+        t.deletedNodeIds.foreach(_.collect().foreach(r =>
+          Option(r.getString(0)).foreach(id => slicesOf(id).foreach(_ -= id))))
+        t.deletedEdgeTriples.foreach(_.collect().foreach(r =>
+          ePairs.get(r.getString(2)).foreach(_ -= ((r.getString(0), r.getString(1))))))
+        t.detachedNodeIds.foreach { df =>
+          val ids = df.collect().map(_.getString(0)).toSet
+          ePairs.valuesIterator.foreach(_.filterInPlace { case (s, d) =>
+            !ids(s) && !ids(d) })
+        }
+      }
+    }
+  }
 
   /** Rows a statement added to the standing graph, net. */
   private def netRows(s: CypherWrite.Stats): Long =

@@ -930,11 +930,189 @@ class CypherWriteSpec extends AnyFunSuite {
       val counted = s.graph.vertices.count() + s.graph.edges.count()
       assert(st.rows == counted, s"after `$q`: stats.rows ${st.rows}, counted $counted")
       assert(!st.bucketed && st.folds == i + 1L && st.lastFoldMs >= 0.0)
+      assert(st.overlayRows == 0L && st.levels == 0, st)
     }
+    // the key index holds the written families (Person and City ids,
+    // LIVES_IN pairs), which here are every standing row
     assert(s.stats.rows == 5L) // 4 vertices + 1 edge
-    // the bucketed store keeps the same count through pruned probes
+    assert(s.stats.indexEntries == 5L, s.stats)
+    // the bucketed store keeps the same count through pruned probes;
+    // its overlay holds the rows the 8-write collapse folded and the
+    // key index is empty
     val b = runStore(0, bucketed = true)._2
     assert(b.stats.bucketed && b.stats.rows == 5L)
+    assert(b.stats.indexEntries == 0L && b.stats.overlayRows > 0L &&
+      b.stats.levels == 0, b.stats)
+    // an overlay past its budget promotes to an LSM level
+    val lv = new GraphStore(emptyGraph(), foldKeys, forceBucketed = true,
+      overlayFoldRows = 1L)
+    foldSeq.foreach { case (q, ps) => lv.execute(q, ps) }
+    assert(lv.stats.levels == 1 && lv.stats.overlayRows == 0L, lv.stats)
+  }
+
+  /** The Spark jobs `f` starts, each with its call site: the action
+    * and the first graft frame of the SQL execution (or stage) that
+    * ran it, as `count at graft.cypher.CypherWrite$.apply(…)`. */
+  private def jobsDuring(f: => Unit)
+      : Seq[(org.apache.spark.scheduler.SparkListenerJobStart, String)] = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]
+    val execSite = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart => execSite.put(x.executionId, x.details)
+        case _ => ()
+      }
+    }
+    org.apache.spark.TestBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { f; org.apache.spark.TestBus.drain(sc) }
+    finally sc.removeSparkListener(listener)
+    def short(details: String): String = {
+      val ls = details.linesIterator.map(_.trim).toSeq
+      val action = ls.headOption.map(_.takeWhile(_ != '(').split('.').last)
+      s"${action.getOrElse("")} at ${ls.find(_.startsWith("graft.")).getOrElse("")}"
+    }
+    seen.toArray(Array.empty[SparkListenerJobStart]).toSeq.map { j =>
+      val exec = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+      (j, short(exec.flatMap(id => Option(execSite.get(id.toLong)))
+        .getOrElse(j.stageInfos.headOption.map(_.details).getOrElse(""))))
+    }
+  }
+
+  test("key index: point MERGE, MATCH … SET and edge MERGE run ≤ 6 jobs, " +
+       "none of them a Spark existence probe") {
+    val s = new GraphStore(emptyGraph(), foldKeys)
+    val merge = "MERGE (p:Person {pid: $pid})"
+    val set = "MATCH (p:Person {pid: $pid}) SET p.a = $a"
+    val edge = "MATCH (p:Person {pid: $pid}) MATCH (c:City {name: 'oslo'}) " +
+      "MERGE (p)-[:LIVES_IN]->(c)"
+    def ps(i: Int) = Map[String, Any]("pid" -> i, "a" -> s"v$i")
+    s.execute("MERGE (c:City {name: 'oslo'})")
+    // warm: the first statement of each family builds its slice
+    (1 to 2).foreach(i => Seq(merge, set, edge).foreach(s.execute(_, ps(i))))
+    for (i <- Seq(3, 1); q <- Seq(merge, set, edge)) {
+      val jobs = jobsDuring(s.execute(q, ps(i)))
+      val sites = jobs.map(_._2)
+      assert(jobs.size <= 6, s"`$q` (pid $i) ran ${jobs.size} jobs: $sites")
+      assert(!sites.exists(_.matches(
+        "(count|localCheckpoint) at graft\\.cypher\\.CypherWrite.*")), sites)
+    }
+    // 4 vertex ids and 3 LIVES_IN pairs
+    assert(!s.stats.bucketed && s.stats.indexEntries == 7L, s.stats)
+  }
+
+  test("a MATCH-less point MERGE's delta plans no Exchange") {
+    // the one-row seed frame is ONE slice, whose SinglePartition
+    // satisfies the delta dedup: the statement's own work (the delta
+    // collect) is one single-stage job. An Exchange would add a shuffle
+    // map stage — its own job under AQE, a second stage without it
+    val s = new GraphStore(emptyGraph(), foldKeys)
+    s.execute("MERGE (p:Person {pid: 1})")
+    val jobs = jobsDuring(s.execute("MERGE (p:Person {pid: 2})"))
+    val own = jobs.filter(_._2.contains("CypherWrite.scala")).map(_._1)
+    assert(own.size == 1, jobs.map(_._2))
+    assert(own.head.stageInfos.size == 1, own.head.stageInfos.map(_.name))
+  }
+
+  test("key index ≡ hint-less apply: stats, rows and graphs per statement") {
+    // an unbucketed store resolves existence, stats and the CREATE
+    // check from its driver-side key index; the hint-less apply chain
+    // (Spark probes, no store) is the reference
+    val keys0 = Map("Person" -> Seq("pid"), "City" -> Seq("name"))
+    val s = new GraphStore(emptyGraph(), keys0)
+    var ref = emptyGraph()
+    var refKeys = keys0
+    def rowsOf(df: Option[org.apache.spark.sql.DataFrame]) =
+      df.map(_.collect().map(_.toSeq).toSeq.sortBy(_.toString))
+    def refApply(q: String, ps: Map[String, Any]): CypherWrite.Applied =
+      CypherParser.parseAny(q) match {
+        case Left(w) => CypherWrite(ref, w, ps, refKeys)
+        case Right(_) => fail(s"not a write: $q")
+      }
+    def advance(a: CypherWrite.Applied): Unit =
+      ref = PropertyGraph(a.graph.vertices.localCheckpoint(),
+        a.graph.edges.localCheckpoint())
+    def both(q: String, ps: Map[String, Any] = Map.empty): Unit =
+      CypherParser.parseConstraintDdl(q) match {
+        case Some(d) =>
+          s.execute(q)
+          refKeys += d.label -> d.keys
+        case None =>
+          val (st, out) = s.executeReturning(q, ps)
+          val a = refApply(q, ps)
+          assert(st == a.stats, s"`$q`: store ${st} vs reference ${a.stats}")
+          assert(rowsOf(out) == rowsOf(a.rows), s"`$q` returned rows differ")
+          advance(a)
+      }
+    def bothThrow(q: String, ps: Map[String, Any]): Unit = {
+      val before = s.stats.indexEntries
+      intercept[Exception](s.execute(q, ps))
+      intercept[Exception](refApply(q, ps))
+      assert(s.stats.indexEntries == before, s"`$q` moved the index")
+    }
+    both("MERGE (p:Person {pid: 1}) SET p.a = 'x' RETURN p.a AS a")
+    both("MERGE (p:Person {pid: 1}) SET p.a = 'y' RETURN p.a AS a")
+    both("MATCH (p:Person {pid: 1}) SET p.b = '2'")
+    both("MERGE (c:City {name: 'oslo'})")
+    both("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) " +
+      "MERGE (p)-[r:LIVES_IN]->(c) SET r.x = '1'")
+    both("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) " +
+      "MERGE (p)-[r:LIVES_IN]->(c) SET r.x = '2' RETURN r.x AS x")
+    // a batch with a repeated key (same values: the batch contract)
+    both("UNWIND $rows AS row MERGE (p:Person {pid: row.pid}) SET p.n = row.n",
+      Map("rows" -> Seq(Map("pid" -> 2, "n" -> "a"), Map("pid" -> 3, "n" -> "b"),
+        Map("pid" -> 2, "n" -> "a"), Map("pid" -> 1, "n" -> "c"))))
+    both("MERGE (n:Foo)") // no props: the id is the bare label
+    both("MERGE (n:Foo) RETURN id(n) AS i")
+    both("MATCH (p:Person {pid: 3}) SET p:Temp")
+    both("MATCH (p:Temp) REMOVE p:Temp")
+    both("MATCH (p {pid: '3'}) DETACH DELETE p")
+    both("MERGE (p:Person {pid: 3}) SET p.a = 'back'")
+    both("MATCH (p:Person {pid: 1}) DETACH DELETE p")
+    both("MERGE (p:Person {pid: 1}) SET p.a = 'reborn'")
+    both("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) " +
+      "MERGE (p)-[:LIVES_IN]->(c)")
+    both("CREATE CONSTRAINT FOR (t:Station) REQUIRE t.sid IS UNIQUE")
+    both("MERGE (t:Station {sid: 7, name: 'x'})")
+    both("MERGE (t:Station {sid: 7}) SET t.name = 'y'")
+    bothThrow("CREATE (p:Person {pid: 2})", Map.empty)
+    bothThrow("MERGE (p:Person {pid: $id})", Map("id" -> null))
+    both("MERGE (p:Person {pid: 2}) SET p.after = 'ok'")
+    both("CREATE (p:Person {pid: 5})")
+    // an explicit transaction's commit swaps the graph: the index drops
+    val tx = Seq("MERGE (c:City {name: 'rome'})",
+      "MATCH (p:Person {pid: 2}) MATCH (c:City {name: 'rome'}) " +
+        "MERGE (p)-[:LIVES_IN]->(c)")
+    s.commitTx(tx.foldLeft(s.graph)((g, q) => s.executeOn(g, q)._1))
+    tx.foreach(q => advance(refApply(q, Map.empty)))
+    assert(s.stats.indexEntries == 0L)
+    both("MERGE (c:City {name: 'rome'}) SET c.cc = 'it'")
+    both("MATCH (p:Person {pid: 2}) MATCH (c:City {name: 'rome'}) " +
+      "MERGE (p)-[:LIVES_IN]->(c)")
+    // save re-bases the store on its durable layout: the index drops
+    val dir = java.nio.file.Files.createTempDirectory("graft-keyindex")
+    try {
+      s.save(dir.resolve("g").toString)
+      assert(s.stats.indexEntries == 0L)
+      both("MERGE (c:City {name: 'rome'})")
+      both("MERGE (p:Person {pid: 4})")
+      both("MATCH (p:Person {pid: 4}) DELETE p")
+      both("MERGE (p:Person {pid: 4}) SET p.a = 'again'")
+      both("MATCH (p:Person {pid: 2})-[r:LIVES_IN]->(c:City {name: 'rome'}) DELETE r")
+      both("MATCH (p:Person {pid: 2}) MATCH (c:City {name: 'rome'}) " +
+        "MERGE (p)-[:LIVES_IN]->(c)")
+      // the durable layout reads its partition columns (label, rel) last
+      val got = sigOf(PropertyGraph(
+        s.graph.vertices.select("id", "label", "props"),
+        s.graph.edges.select("src", "dst", "rel", "props")))
+      assert(got == sigOf(ref), s"$got\nvs\n${sigOf(ref)}")
+      assert(!s.stats.bucketed && s.stats.indexEntries > 0L, s.stats)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 
   test("bucket pruning: repartition(n, id) partition index IS " +
