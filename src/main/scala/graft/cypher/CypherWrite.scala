@@ -138,9 +138,12 @@ object CypherWrite {
     * a window segment instead of re-materializing the standing graph
     * (round 13: the store-size soak measured the full-store
     * localCheckpoint every 8 statements at 1.7-2.3× the empty-store
-    * per-statement cost on a 3.3M-row standing graph). Every frame
-    * here is already localCheckpoint'd
-    * by the apply (they are the apply's own delta/deletion sets) and
+    * per-statement cost on a 3.3M-row standing graph). With a key
+    * index ([[ProbeHint.Indexed]]) `nodeIds` / `edgeTriples` hold only
+    * the rows the statement changes (created, or matched with an
+    * update), so a family it leaves as it was is None and the store
+    * folds nothing for it. Every frame here is the apply's own
+    * checkpointed (or collected and re-entered) delta/deletion set,
     * bounded by the statement's parameter/match size, never the
     * graph. */
   final case class Touched(
@@ -187,7 +190,11 @@ object CypherWrite {
       * `R`. The apply then collects each delta once, re-enters it as
       * a local relation, and resolves existence, the write stats and
       * the CREATE uniqueness check on the driver: the statement's
-      * jobs are its delta and the store's fold. `created` receives the
+      * jobs are its delta and the store's fold. From the same rows it
+      * decides per family whether anything changes (a created row, or
+      * a matched one with a non-empty update map or a label mutation);
+      * an unchanged family keeps its standing frame, with no apply
+      * join, broadcast or fold. `created` receives the
       * vertex ids and `(src, dst, rel)` triples the statement creates
       * (null keys left out — they never match); the store stages them
       * and adds them to the index only once the statement applied. */
@@ -244,15 +251,25 @@ object CypherWrite {
     }
 
   /** Per-key map upsert: delta keys replace base keys; a null delta
-    * value removes the key. All lambda higher-order functions —
+    * value removes the key. Only the keys the delta names change — a
+    * base entry holding null stays — so an empty delta is an exact
+    * identity, and a matched row with empty update maps can be skipped
+    * without changing the graph. All lambda higher-order functions —
     * codegen-friendly, no UDFs. */
   private def mapUpsert(base: Column, delta: Column): Column = {
     val b = coalesce(base, emptyMap)
     val d = coalesce(delta, emptyMap)
-    map_filter(
-      map_concat(map_filter(b, (k, _) => !map_contains_key(d, k)), d),
-      (_, v) => v.isNotNull)
+    map_concat(map_filter(b, (k, _) => !map_contains_key(d, k)),
+      map_filter(d, (_, v) => v.isNotNull))
   }
+  /** Set-if-absent entries UNDER `props` (non-null): a key `props`
+    * holds wins, a null soft value sets nothing. */
+  private def softUnder(soft: Column, props: Column): Column =
+    map_concat(map_filter(coalesce(soft, emptyMap),
+      (k, v) => v.isNotNull && !map_contains_key(props, k)), props)
+  /** A created row's props: a null pattern value sets no key. */
+  private def present(m: Column): Column =
+    map_filter(coalesce(m, emptyMap), (_, v) => v.isNotNull)
 
   def apply(g: PropertyGraph, wq: WriteQuery, params: Map[String, Any],
             labelKeys: Map[String, Seq[String]],
@@ -433,11 +450,13 @@ object CypherWrite {
 
     /** Does any node delta come from a CREATE (uniqueness check)? */
     var hasCreate = false
-    /** Node-delta dedup by id. `ignoreNulls` everywhere: label-only
-      * rows carry NULL maps so they never shadow a prop-carrying row
-      * for the same id (within one clause every row has the same null
-      * pattern, so it picks exactly what a plain `first` would). `co`:
-      * some row of the id comes from a CREATE (the uniqueness check). */
+    /** The statement's node delta deduplicated by id, over the union
+      * of every clause's rows (the clauses themselves do not dedup:
+      * each dedup is one more Exchange and aggregate over map columns).
+      * `ignoreNulls` everywhere: label-only rows carry NULL maps so they
+      * never shadow a prop-carrying row for the same id (every row of
+      * one clause has the same null pattern). `co`: some row of the id
+      * comes from a CREATE (the uniqueness check). */
     def dedupNodes(df: DataFrame): DataFrame =
       df.groupBy(col("id"))
         .agg(first(col("dlabel"), ignoreNulls = true).as("dlabel"),
@@ -449,7 +468,8 @@ object CypherWrite {
           first(col("slabel"), ignoreNulls = true).as("slabel"),
           first(col("unlabel"), ignoreNulls = true).as("unlabel"),
           max(col("co")).as("co"))
-    /** Relationship-delta dedup by the (src, dst, rel) triple. */
+    /** The statement's relationship delta deduplicated by the
+      * (src, dst, rel) triple, over the union of every clause's rows. */
     def dedupEdges(df: DataFrame): DataFrame =
       df.groupBy(col("src"), col("dst"), col("rel"))
         .agg(first(col("eprops")).as("eprops"),
@@ -458,7 +478,8 @@ object CypherWrite {
           first(col("ealways")).as("ealways"))
 
     /** One node-delta row set: (id, dlabel, pat, oncreate, onmatch,
-      * always) per frame row, deduplicated by id. Contract: rows of
+      * always) per frame row, deduplicated by id with the statement's
+      * other clauses ([[dedupNodes]]). Contract: rows of
       * one statement targeting the SAME id must carry the same SET
       * values (first() picks the survivor otherwise) — the batch
       * idiom is one row per key, which is what the reference's
@@ -483,7 +504,6 @@ object CypherWrite {
           setMap(hard).as("always"), softMap(soft).as("soft"),
           lit(null).cast("string").as("slabel"),
           lit(null).cast("string").as("unlabel"), lit(create).as("co"))
-        .transform(dedupNodes)
     }
 
     /** Set-if-absent items → the SOFT delta map (applied UNDER the
@@ -504,7 +524,6 @@ object CypherWrite {
           setMap(hard).as("always"), softMap(soft).as("soft"),
           lit(null).cast("string").as("slabel"),
           lit(null).cast("string").as("unlabel"), lit(false).as("co"))
-        .transform(dedupNodes)
     }
 
     /** `SET v:Label` / `REMOVE v:Label` on a MATCH-bound node: a
@@ -522,7 +541,6 @@ object CypherWrite {
           (if (add) lit(label) else lit(null).cast("string")).as("slabel"),
           (if (add) lit(null).cast("string") else lit(label)).as("unlabel"),
           lit(false).as("co"))
-        .transform(dedupNodes)
     }
 
     /** Raise unless the standing edge table can hold relationship
@@ -547,7 +565,6 @@ object CypherWrite {
           col(s"$v __rel").as("rel"), emptyMap.as("eprops"),
           emptyMap.as("eoncreate"), emptyMap.as("eonmatch"),
           setMap(its).as("ealways"))
-        .transform(dedupEdges)
     }
 
     /** Relationship delta (src, dst, rel, eprops) from a single-hop
@@ -607,7 +624,6 @@ object CypherWrite {
           lit(edge.types.head).as("rel"), eprops.as("eprops"),
           setMap(onCreate).as("eoncreate"), setMap(onMatch).as("eonmatch"),
           setMap(always).as("ealways"))
-        .transform(dedupEdges)
     }
 
     // ---- collect deltas across the statement's clauses -------------
@@ -801,7 +817,9 @@ object CypherWrite {
     // — two broadcast-probe passes over the standing table, zero
     // exchanges on it (CypherWriteSpec pins the plan shape). With a key
     // index (ProbeHint.Indexed) step 1 and the created side resolve on
-    // the driver instead, over the once-collected delta.
+    // the driver instead, over the once-collected delta, and step 2
+    // probes only the matched rows that change something: a family
+    // none of whose rows changes keeps its standing frame as it is.
     var stats = Stats(0, 0, 0, 0)
     var touchedNodeIds: Option[DataFrame] = None
     var touchedTriples: Option[DataFrame] = None
@@ -827,13 +845,18 @@ object CypherWrite {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
     def duplicateCreate(id: String): Nothing = throw new IllegalStateException(
       s"CREATE violates uniqueness: node $id already exists (use MERGE)")
+    /** A non-empty map at `i` of a collected delta row. */
+    def nonEmptyAt(r: Row, i: Int): Boolean =
+      !r.isNullAt(i) && r.getMap[String, String](i).nonEmpty
+    /** Collected rows as a local relation, None when there are none. */
+    def localOpt(rows: Array[Row], like: DataFrame): Option[DataFrame] =
+      if (rows.isEmpty) None else Some(local(rows, like))
     val nds = nodeDeltas.result()
     if (nds.nonEmpty) {
-      // delta is param/match-sized: materialize it eagerly so the
-      // stats counts and the standing-graph plan reference a local
-      // truncated lineage, not a recompute of the whole bind
       val grouped = nds.reduce(_ unionByName _).transform(dedupNodes)
-      val (delta, fresh, nCreated, nMatched) = index match {
+      // `updates`: the rows the left-outer probe applies to matched
+      // vertices; `fresh`: the created side; `ids`: the touched ids
+      val (updates, fresh, ids, nCreated, nMatched) = index match {
         case Some(ix) =>
           val rows = grouped.collect()
           // a row without a MERGE/CREATE label comes from SET or a
@@ -847,12 +870,23 @@ object CypherWrite {
           old.find(_.getAs[Boolean]("co"))
             .foreach(r => duplicateCreate(r.getString(0)))
           ix.created(fresh.flatMap(r => Option(r.getString(0))).toSeq, Nil)
-          (local(rows, grouped), local(fresh, grouped),
+          // a matched row changes its vertex only through an update map
+          // (onmatch, always, soft) or a label mutation; the rest are
+          // identities (see mapUpsert), left out of the apply — and a
+          // statement that changes nothing leaves the family untouched,
+          // so the store folds nothing for it
+          val changed = old.filter(r => nonEmptyAt(r, 4) || nonEmptyAt(r, 5) ||
+            nonEmptyAt(r, 6) || !r.isNullAt(7) || !r.isNullAt(8))
+          (localOpt(changed, grouped), localOpt(fresh, grouped),
+            localOpt(changed ++ fresh, grouped).map(_.select(col("id"))),
             fresh.length.toLong, old.length.toLong)
         case None =>
-          // ONE partition (via ckptDelta): the delta is param-sized and
-          // every later broadcast build re-reads it — a 1-task job
-          // instead of a shuffle-partition-count job per broadcast
+          // delta is param/match-sized: materialize it eagerly so the
+          // stats counts and the standing-graph plan reference a local
+          // truncated lineage, not a recompute of the whole bind. ONE
+          // partition (via ckptDelta): every later broadcast build
+          // re-reads it — a 1-task job instead of a shuffle-partition-
+          // count job per broadcast
           val delta = grouped.transform(ckptDelta)
           val deltaIds = delta.select(col("id"))
           // ONE probe over the (pruned) standing ids, delta-sized output
@@ -869,38 +903,39 @@ object CypherWrite {
               .join(broadcast(matchedIds), Seq("id"), "left_semi")
               .limit(1).collect()
               .foreach(r => duplicateCreate(r.getString(0)))
-          (delta, delta.join(broadcast(matchedIds), Seq("id"), "left_anti"),
-            delta.count() - nMatched, nMatched)
+          (Some(delta),
+            Some(delta.join(broadcast(matchedIds), Seq("id"), "left_anti")),
+            Some(deltaIds), delta.count() - nMatched, nMatched)
       }
-      touchedNodeIds = Some(delta.select(col("id")))
+      touchedNodeIds = ids
       stats = stats + Stats(nCreated, nMatched, 0, 0)
-      val d = broadcast(delta.withColumn("__d", lit(true)))
-      val created = fresh
-        .select(col("id"), col("dlabel").as("label"),
-          mapUpsert(col("soft"),
-            mapUpsert(mapUpsert(col("pat"), col("oncreate")),
-              col("always")))
-            .as("props"))
+      val created = fresh.map(_.select(col("id"), col("dlabel").as("label"),
+        softUnder(col("soft"),
+          mapUpsert(mapUpsert(present(col("pat")), col("oncreate")),
+            col("always")))
+          .as("props")))
+      val d = updates.map(u => broadcast(u.withColumn("__d", lit(true))))
       vertexView = (base: DataFrame) => {
-        val updated = base.join(d, Seq("id"), "left_outer").select(
-          col("id"),
-          // label mutation (single-label model): SET reassigns,
-          // REMOVE clears only a matching stored label
-          when(col("__d").isNotNull && col("slabel").isNotNull,
-              col("slabel"))
-            .when(col("__d").isNotNull && col("unlabel").isNotNull &&
-                col("unlabel") === col("label"), lit(null).cast("string"))
-            .otherwise(col("label"))
-            .as("label"),
-          when(col("__d").isNotNull,
-              // soft (set-if-absent) entries apply UNDER the result:
-              // keys already present in the standing/updated props win
-              mapUpsert(col("soft"),
-                mapUpsert(mapUpsert(col("props"), col("onmatch")),
-                  col("always"))))
-            .otherwise(col("props"))
-            .as("props"))
-        updated.unionByName(created)
+        val updated = d.fold(base)(u => base.join(u, Seq("id"), "left_outer")
+          .select(
+            col("id"),
+            // label mutation (single-label model): SET reassigns,
+            // REMOVE clears only a matching stored label
+            when(col("__d").isNotNull && col("slabel").isNotNull,
+                col("slabel"))
+              .when(col("__d").isNotNull && col("unlabel").isNotNull &&
+                  col("unlabel") === col("label"), lit(null).cast("string"))
+              .otherwise(col("label"))
+              .as("label"),
+            when(col("__d").isNotNull,
+                // soft (set-if-absent) entries apply UNDER the result:
+                // keys already present in the standing/updated props win
+                softUnder(col("soft"),
+                  mapUpsert(mapUpsert(col("props"), col("onmatch")),
+                    col("always"))))
+              .otherwise(col("props"))
+              .as("props")))
+        created.fold(updated)(c => updated.unionByName(c))
       }
     }
 
@@ -921,7 +956,10 @@ object CypherWrite {
     if (rds.nonEmpty) {
       val keyCols = Seq("src", "dst", "rel")
       val grouped = rds.reduce(_ unionByName _).transform(dedupEdges)
-      val (delta, created, nCreated, nMatched) = index match {
+      // `updates`: the rows the left-outer probe applies to matched
+      // edges (only under ON MATCH / plain SET); `created`: the
+      // appended side; `triples`: the touched triples
+      val (updates, created, triples, nCreated, nMatched) = index match {
         case Some(ix) =>
           // a null endpoint never matches, as in the semi join
           val rows = grouped.collect()
@@ -933,7 +971,14 @@ object CypherWrite {
           ix.created(Nil, fresh.toSeq
             .filter(r => !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
             .map(r => (r.getString(0), r.getString(1), r.getString(2))))
-          (local(rows, grouped), local(fresh, grouped),
+          // as on the vertex side: a matched triple changes only through
+          // a non-empty update map
+          val changed =
+            if (!edgeUpdates) Array.empty[Row]
+            else old.filter(r => nonEmptyAt(r, 5) || nonEmptyAt(r, 6))
+          (localOpt(changed, grouped), localOpt(fresh, grouped),
+            localOpt(changed ++ fresh, grouped)
+              .map(_.select(keyCols.map(col): _*)),
             fresh.length.toLong, old.length.toLong)
         case None =>
           val delta = grouped.transform(ckptDelta) // param-sized, see node delta
@@ -947,31 +992,31 @@ object CypherWrite {
           val created = delta.join(broadcast(matchedTriples), keyCols,
             "left_anti")
           val nCreated = created.count()
-          (delta, created, nCreated, delta.count() - nCreated)
+          (if (edgeUpdates) Some(delta) else None, Some(created),
+            Some(deltaTriples), nCreated, delta.count() - nCreated)
       }
-      touchedTriples = Some(delta.select(keyCols.map(col): _*))
+      touchedTriples = triples
       stats = stats + Stats(0, 0, nCreated, nMatched)
-      val createdAligned =
+      val createdAligned = created.map(c =>
         if (g.edges.columns.contains("props"))
-          created.select(col("src"), col("dst"), col("rel"),
-            mapUpsert(mapUpsert(col("eprops"), col("eoncreate")),
+          c.select(col("src"), col("dst"), col("rel"),
+            mapUpsert(mapUpsert(present(col("eprops")), col("eoncreate")),
               col("ealways")).as("props"))
-        else created.select(keyCols.map(col): _*)
+        else c.select(keyCols.map(col): _*))
       // ON MATCH SET / SET r.… updates: one broadcast left-outer probe
       // over the standing edges (matched triples get props ⊕ onmatch ⊕
       // always) — skipped entirely for the historical append-only
       // statements, whose standing-edge pass stays a bare union
-      val dEdge = broadcast(delta.withColumn("__d", lit(true)))
+      val dEdge = updates.map(u => broadcast(u.withColumn("__d", lit(true))))
       edgeView = (standing: DataFrame) => {
-        val base =
-          if (!edgeUpdates) standing
-          else standing.join(dEdge, keyCols, "left_outer").select(
+        val base = dEdge.fold(standing)(d =>
+          standing.join(d, keyCols, "left_outer").select(
             col("src"), col("dst"), col("rel"),
             when(col("__d").isNotNull,
                 mapUpsert(mapUpsert(col("props"), col("eonmatch")),
                   col("ealways")))
-              .otherwise(col("props")).as("props"))
-        base.unionByName(createdAligned, allowMissingColumns = true)
+              .otherwise(col("props")).as("props")))
+        createdAligned.fold(base)(base.unionByName(_, allowMissingColumns = true))
       }
     }
 

@@ -2,6 +2,7 @@ package graft.cypher
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlShim
 import org.apache.spark.sql.types.MapType
 
 import CypherAst.ConstraintDdl
@@ -20,8 +21,10 @@ import CypherAst.ConstraintDdl
   * the only size gate between them:
   *
   *   - An UNBUCKETED store folds after EVERY write, re-checkpointing
-  *     only the frame family (vertices / edges) the statement touched
-  *     and keeping the row count from the statement's stats. An
+  *     only the frame family (vertices / edges) the statement changed
+  *     — none for a MERGE that matched and set nothing — and keeping
+  *     the row count from the statement's stats. Each checkpoint
+  *     carries its measured size as its plan statistics. An
   *     unfolded layer makes every later probe, read and fold re-run
   *     its broadcast builds, and the layers' union partitions add up
   *     (a disconnected MATCH prefix became a CartesianProduct over
@@ -241,8 +244,10 @@ final class GraphStore(initial: PropertyGraph,
       PropertyGraph(compactedFrame(pg.vertices), compactedFrame(pg.edges))
     }
 
+  /** One family checkpointed, its plan statistics the size of its
+    * blocks (not the estimate of the stacked plan it folded). */
   private def compactedFrame(df: DataFrame): DataFrame =
-    df.coalesce(targetParts).localCheckpoint(true)
+    SqlShim.withMeasuredSize(df.coalesce(targetParts).localCheckpoint(true))
 
   def graph: PropertyGraph = g
 
@@ -494,8 +499,10 @@ final class GraphStore(initial: PropertyGraph,
   }
 
   /** Fold the window (the last write) by re-checkpointing only the
-    * frame families it touched — a MERGE or SET that touches no edge
-    * keeps the edge base as it is. The row count comes from the
+    * frame families it changed — a MERGE or SET that changes no edge
+    * keeps the edge base as it is, and a statement that changed
+    * nothing ([[CypherWrite.Touched]] names no family) checkpoints
+    * nothing. The row count comes from the
     * statements' stats, not from count jobs. The superseded base is
     * NOT unpersisted: concurrent Bolt readers may hold snapshots over
     * it, and a localCheckpoint block cannot be recomputed; the

@@ -995,12 +995,26 @@ class CypherWriteSpec extends AnyFunSuite {
     s.execute("MERGE (c:City {name: 'oslo'})")
     // warm: the first statement of each family builds its slice
     (1 to 2).foreach(i => Seq(merge, set, edge).foreach(s.execute(_, ps(i))))
+    val atStore = ".* at graft\\.cypher\\.GraphStore.*"
     for (i <- Seq(3, 1); q <- Seq(merge, set, edge)) {
+      val edgesBefore = s.graph.edges
       val jobs = jobsDuring(s.execute(q, ps(i)))
       val sites = jobs.map(_._2)
       assert(jobs.size <= 6, s"`$q` (pid $i) ran ${jobs.size} jobs: $sites")
       assert(!sites.exists(_.matches(
         "(count|localCheckpoint) at graft\\.cypher\\.CypherWrite.*")), sites)
+      // pid 1 exists: the MERGE and the edge MERGE change nothing, so
+      // the store folds nothing — the MERGE's one job is its delta
+      // collect — and the SET folds the vertex family alone
+      if (i == 1 && q == merge) {
+        assert(jobs.size == 1, sites)
+        assert(!sites.exists(_.startsWith("localCheckpoint")), sites)
+      }
+      if (i == 1 && q == edge) assert(!sites.exists(_.matches(atStore)), sites)
+      if (q == set) {
+        assert(sites.exists(_.matches("localCheckpoint" + atStore)), sites)
+        assert(s.graph.edges eq edgesBefore)
+      }
     }
     // 4 vertex ids and 3 LIVES_IN pairs
     assert(!s.stats.bucketed && s.stats.indexEntries == 7L, s.stats)
@@ -1024,8 +1038,16 @@ class CypherWriteSpec extends AnyFunSuite {
     // check from its driver-side key index; the hint-less apply chain
     // (Spark probes, no store) is the reference
     val keys0 = Map("Person" -> Seq("pid"), "City" -> Seq("name"))
-    val s = new GraphStore(emptyGraph(), keys0)
-    var ref = emptyGraph()
+    // a seed row holding a null-valued prop, as GraphAssembly's map
+    // props do for a null column: a matched row with empty update maps
+    // is an identity, so the store may skip it and the reference apply
+    // it and both keep the entry
+    val seed = PropertyGraph(
+      Seq(("Person:9", "Person", Map("pid" -> "9", "z" -> (null: String))))
+        .toDF("id", "label", "props"),
+      emptyGraph().edges)
+    val s = new GraphStore(seed, keys0)
+    var ref = seed
     var refKeys = keys0
     def rowsOf(df: Option[org.apache.spark.sql.DataFrame]) =
       df.map(_.collect().map(_.toSeq).toSeq.sortBy(_.toString))
@@ -1063,6 +1085,13 @@ class CypherWriteSpec extends AnyFunSuite {
       "MERGE (p)-[r:LIVES_IN]->(c) SET r.x = '1'")
     both("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) " +
       "MERGE (p)-[r:LIVES_IN]->(c) SET r.x = '2' RETURN r.x AS x")
+    // no-op shapes: an existing key without SET, a matched
+    // relationship without SET (the store folds nothing for them)
+    both("MERGE (p:Person {pid: 9})")
+    both("MERGE (p:Person {pid: 1})")
+    both("MATCH (p:Person {pid: 1}) MATCH (c:City {name: 'oslo'}) " +
+      "MERGE (p)-[r:LIVES_IN]->(c)")
+    both("MATCH (p:Person {pid: 9}) SET p.y = '1'")
     // a batch with a repeated key (same values: the batch contract)
     both("UNWIND $rows AS row MERGE (p:Person {pid: row.pid}) SET p.n = row.n",
       Map("rows" -> Seq(Map("pid" -> 2, "n" -> "a"), Map("pid" -> 3, "n" -> "b"),
@@ -1084,6 +1113,28 @@ class CypherWriteSpec extends AnyFunSuite {
     bothThrow("MERGE (p:Person {pid: $id})", Map("id" -> null))
     both("MERGE (p:Person {pid: 2}) SET p.after = 'ok'")
     both("CREATE (p:Person {pid: 5})")
+    // the nutrient UNWIND's shape: a node SET plus edges that are
+    // created once and matched without SET on the re-run
+    val unwind = """UNWIND $rows AS r
+      |MATCH (p:Person { pid: r.pid })
+      |MERGE (c:City { name: r.city })
+      |SET c.pop = r.pop
+      |MERGE (p)-[:LIVES_IN]->(c)
+      |WITH c, r
+      |CALL {
+      |  WITH c, r
+      |  WITH c, r WHERE r.tag IS NOT NULL
+      |  MATCH (t:Person { pid: r.tag })
+      |  MERGE (t)-[:VISITS]->(c)
+      |  RETURN 0
+      |}""".stripMargin
+    def unwindRows(pop: String) = Map("rows" -> Seq(
+      Map("pid" -> "2", "city" -> "bergen", "pop" -> pop, "tag" -> "5"),
+      Map("pid" -> "5", "city" -> "oslo", "pop" -> pop, "tag" -> null),
+      Map("pid" -> "9", "city" -> "bergen", "pop" -> pop, "tag" -> "9")))
+    both(unwind, unwindRows("1"))
+    both(unwind, unwindRows("2"))
+    assert(sigOf(s.graph) == sigOf(ref), s"${sigOf(s.graph)}\nvs\n${sigOf(ref)}")
     // an explicit transaction's commit swaps the graph: the index drops
     val tx = Seq("MERGE (c:City {name: 'rome'})",
       "MATCH (p:Person {pid: 2}) MATCH (c:City {name: 'rome'}) " +
@@ -1113,6 +1164,51 @@ class CypherWriteSpec extends AnyFunSuite {
       assert(got == sigOf(ref), s"$got\nvs\n${sigOf(ref)}")
       assert(!s.stats.bucketed && s.stats.indexEntries > 0L, s.stats)
     } finally org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+  }
+
+  test("a folded family keeps its measured size: no product estimate, " +
+       "no runtime bloom filter on the 1-hop read") {
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    // a small weather store: 4 stations, 30 days each, one
+    // HAS_WEATHER_DAY edge per day
+    val days = for (st <- 1 to 4; d <- 1 to 30) yield (s"S$st", f"2025-06-$d%02d")
+    val g0 = PropertyGraph(
+      ((1 to 4).map(st => (s"Station:S$st", "Station",
+          Map("serial_number" -> s"S$st"))) ++
+        days.map { case (st, d) => (s"WeatherDay:$st:$d", "WeatherDay",
+          Map("station_serial" -> st, "date" -> d)) })
+        .toDF("id", "label", "props"),
+      days.map { case (st, d) => (s"Station:$st", s"WeatherDay:$st:$d",
+          "HAS_WEATHER_DAY", Map.empty[String, String]) }
+        .toDF("src", "dst", "rel", "props"))
+    val s = new GraphStore(g0, Map("Station" -> Seq("serial_number"),
+      "WeatherDay" -> Seq("station_serial", "date")))
+    // a new day per station with its edge: both families fold
+    (1 to 4).foreach { st =>
+      val day = Map[String, Any]("s" -> s"S$st", "d" -> "2025-07-15")
+      s.execute("MERGE (wd:WeatherDay { station_serial: $s, date: $d })", day)
+      s.execute("MATCH (s:Station { serial_number: $s }) " +
+        "MATCH (wd:WeatherDay { station_serial: $s, date: $d }) " +
+        "MERGE (s)-[:HAS_WEATHER_DAY]->(wd)", day)
+    }
+    days.take(24).zipWithIndex.foreach { case ((st, d), i) =>
+      s.execute("MATCH (wd:WeatherDay { station_serial: $s, date: $d }) " +
+        "SET wd.tmax = $t", Map("s" -> st, "d" -> d, "t" -> i.toString))
+    }
+    val v = s.graph.vertices
+    val rows = v.count()
+    val estimate = v.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perRow = EstimationUtils.getSizePerRow(v.queryExecution.optimizedPlan.output)
+    assert(estimate <= perRow * rows * 10 && estimate * 10 >= perRow * rows,
+      s"vertex estimate $estimate B for $rows rows of ~$perRow B")
+    val read = s.cypher("MATCH (s:Station { serial_number: $serial })" +
+      "-[:HAS_WEATHER_DAY]->(wd:WeatherDay { date: $date }) " +
+      "RETURN wd.tmax AS tmax", Map("serial" -> "S1", "date" -> "2025-06-03"))
+    assert(read.collect().map(_.getString(0)).toSeq == Seq("2"))
+    val plan = read.queryExecution.executedPlan.toString +
+      read.queryExecution.optimizedPlan.toString
+    assert(!plan.contains("might_contain") && !plan.contains("bloom_filter_agg") &&
+      !plan.contains("BloomFilterAggregate"), plan)
   }
 
   test("bucket pruning: repartition(n, id) partition index IS " +
