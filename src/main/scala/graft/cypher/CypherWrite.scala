@@ -263,10 +263,16 @@ object CypherWrite {
       map_filter(d, (_, v) => v.isNotNull))
   }
   /** Set-if-absent entries UNDER `props` (non-null): a key `props`
-    * holds wins, a null soft value sets nothing. */
-  private def softUnder(soft: Column, props: Column): Column =
-    map_concat(map_filter(coalesce(soft, emptyMap),
-      (k, v) => v.isNotNull && !map_contains_key(props, k)), props)
+    * holds with a non-null value wins; a soft entry fills a key that is
+    * missing or holds null (`coalesce(null, $p)` is `$p`), replacing
+    * that null entry; a null soft value sets nothing, so an empty soft
+    * map is an exact identity. */
+  private def softUnder(soft: Column, props: Column): Column = {
+    val fill = map_filter(coalesce(soft, emptyMap),
+      (k, v) => v.isNotNull && element_at(props, k).isNull)
+    map_concat(fill,
+      map_filter(props, (k, v) => v.isNotNull || !map_contains_key(fill, k)))
+  }
   /** A created row's props: a null pattern value sets no key. */
   private def present(m: Column): Column =
     map_filter(coalesce(m, emptyMap), (_, v) => v.isNotNull)
@@ -394,7 +400,7 @@ object CypherWrite {
       * (graph_soil_layer.py:224-227):
       *   `v.k = coalesce(v.k, $p)`
       * keeps an already-present prop and writes the new value only
-      * where the key is missing — a separate SOFT delta channel
+      * where the key is missing or null — a separate SOFT delta channel
       * applied UNDER the standing props (the props win). */
     def setIfAbsentExpr(si: SetItem): Option[Expr] = si.value match {
       case Coalesce(Seq(Prop(pv, pk), e))
@@ -845,9 +851,13 @@ object CypherWrite {
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), like.schema)
     def duplicateCreate(id: String): Nothing = throw new IllegalStateException(
       s"CREATE violates uniqueness: node $id already exists (use MERGE)")
-    /** A non-empty map at `i` of a collected delta row. */
-    def nonEmptyAt(r: Row, i: Int): Boolean =
+    /** A non-empty map in column `c` of a collected delta row. */
+    def nonEmptyMap(r: Row, c: String): Boolean = {
+      val i = r.fieldIndex(c)
       !r.isNullAt(i) && r.getMap[String, String](i).nonEmpty
+    }
+    /** A non-null value in column `c` of a collected delta row. */
+    def isSet(r: Row, c: String): Boolean = !r.isNullAt(r.fieldIndex(c))
     /** Collected rows as a local relation, None when there are none. */
     def localOpt(rows: Array[Row], like: DataFrame): Option[DataFrame] =
       if (rows.isEmpty) None else Some(local(rows, like))
@@ -863,9 +873,9 @@ object CypherWrite {
           // label mutation: its id was read by a MATCH over this same
           // snapshot. A null id never matches (nor does the semi join)
           val (old, fresh) = rows.partition { r =>
-            val id = r.getString(0)
-            id != null && (r.isNullAt(1) ||
-              ix.vertexIds(r.getString(1)).contains(id))
+            val id = r.getAs[String]("id")
+            val label = r.getAs[String]("dlabel")
+            id != null && (label == null || ix.vertexIds(label).contains(id))
           }
           old.find(_.getAs[Boolean]("co"))
             .foreach(r => duplicateCreate(r.getString(0)))
@@ -875,8 +885,9 @@ object CypherWrite {
           // identities (see mapUpsert), left out of the apply — and a
           // statement that changes nothing leaves the family untouched,
           // so the store folds nothing for it
-          val changed = old.filter(r => nonEmptyAt(r, 4) || nonEmptyAt(r, 5) ||
-            nonEmptyAt(r, 6) || !r.isNullAt(7) || !r.isNullAt(8))
+          val changed = old.filter(r => nonEmptyMap(r, "onmatch") ||
+            nonEmptyMap(r, "always") || nonEmptyMap(r, "soft") ||
+            isSet(r, "slabel") || isSet(r, "unlabel"))
           (localOpt(changed, grouped), localOpt(fresh, grouped),
             localOpt(changed ++ fresh, grouped).map(_.select(col("id"))),
             fresh.length.toLong, old.length.toLong)
@@ -929,7 +940,7 @@ object CypherWrite {
               .as("label"),
             when(col("__d").isNotNull,
                 // soft (set-if-absent) entries apply UNDER the result:
-                // keys already present in the standing/updated props win
+                // non-null keys of the standing/updated props win
                 softUnder(col("soft"),
                   mapUpsert(mapUpsert(col("props"), col("onmatch")),
                     col("always"))))
@@ -975,7 +986,8 @@ object CypherWrite {
           // a non-empty update map
           val changed =
             if (!edgeUpdates) Array.empty[Row]
-            else old.filter(r => nonEmptyAt(r, 5) || nonEmptyAt(r, 6))
+            else old.filter(r =>
+              nonEmptyMap(r, "eonmatch") || nonEmptyMap(r, "ealways"))
           (localOpt(changed, grouped), localOpt(fresh, grouped),
             localOpt(changed ++ fresh, grouped)
               .map(_.select(keyCols.map(col): _*)),

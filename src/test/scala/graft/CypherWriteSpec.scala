@@ -1517,6 +1517,19 @@ class CypherWriteSpec extends AnyFunSuite {
     s.execute("MATCH (p:P) WHERE p.k = '2' SET p.c = coalesce(p.c, 'x')")
     s.execute("MATCH (p:P) WHERE p.k = '2' SET p.d = coalesce(p.d, 'dv')")
     assert(propsOf(s, "P:2") == Map("k" -> "2", "c" -> "fresh", "d" -> "dv"))
+    // set-if-absent over a standing null-valued prop (GraphAssembly's
+    // map props hold one for a null column): coalesce(null, $p) is $p,
+    // on the MERGE and the MATCH path alike; an untouched null entry stays
+    val seeded = new GraphStore(PropertyGraph(
+      Seq(("P:3", "P", Map("k" -> "3", "c" -> (null: String),
+        "d" -> (null: String)))).toDF("id", "label", "props"),
+      emptyGraph().edges), Map("P" -> Seq("k")))
+    seeded.execute("MERGE (p:P {k: 3}) SET p.c = coalesce(p.c, $c)",
+      Map("c" -> "x"))
+    assert(propsOf(seeded, "P:3") ==
+      Map("k" -> "3", "c" -> "x", "d" -> (null: String)))
+    seeded.execute("MATCH (p:P) WHERE p.k = '3' SET p.d = coalesce(p.d, 'y')")
+    assert(propsOf(seeded, "P:3") == Map("k" -> "3", "c" -> "x", "d" -> "y"))
   }
 
   test("CREATE … SET folds into the pattern (keyed items, single node)") {
